@@ -16,23 +16,17 @@ table:
 - E4 **encode**     (≙ optimize.py): per-format writer options; snapshot
   commit; skip-if-exists resume via anti-join.
 
-Architecture is Spark-first: DataFrame/Column expressions wherever the
-semantics allow (selection, geometry, labeling, merge, pivot all HAVE pure
-Column/Window forms, SQL-cross-validated), Arrow-batched ``mapInPandas``
-where Python wins. Because no extraction step crosses document boundaries,
-the production default (``ExtractConfig.extract_impl="doc"``,
-operators/doc_kernel.py) fuses the whole per-document pipeline into ONE
-Arrow stage — zero wide shuffles, measured scaling efficiency 0.822
-local[4]→local[16]. To be precise about where Python sits: that stage
-applies per-document Python inside the Arrow batches — the measured
-per-stage split (BENCH/BASELINE.md round-3 section) shows ~60% of it is the
-irreducible HTML/PDF parse, and the impl-comparison table there records why
-the one-stage form beats the staged Column forms at equal cores (the staged
-plans pay a corpus-wide text shuffle to reach the JVM operators). The
-staged Column/Window forms remain the SQL-verifiable decomposition and are
-selectable (``extract_impl="fused"|"columns"``). A pure-Python single-node
-oracle (``py_image_toolkit_spark.oracle``) defines byte-identical truth;
-pytest asserts engine == oracle per url.
+Because no extraction step crosses document boundaries, the whole
+per-document pipeline runs as ONE Arrow-batched ``mapInPandas`` stage
+(operators/doc_kernel.py, the only extraction path) — zero wide shuffles,
+measured scaling efficiency 0.822 local[4]→local[16]. That stage applies
+per-document Python inside the Arrow batches; the measured per-stage split
+(BENCH/BASELINE.md round-3 section) shows ~60% of it is the irreducible
+HTML/PDF parse. The E2 geometry and E3 labeling also have pure Column/Window
+forms (operators/select.py, operators/extract_fields.py), which the
+contract queries q12-q17 cross-validate against DuckDB SQL. A
+pure-Python single-node oracle (``py_image_toolkit_spark.oracle``) defines
+byte-identical truth; pytest asserts engine == oracle per url.
 """
 
 __version__ = "0.1.0"

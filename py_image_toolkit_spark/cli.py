@@ -45,8 +45,6 @@ def _add_config_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--padding-percent", type=float, default=0.0)
     p.add_argument("--min-score", type=float, default=0.6)
     p.add_argument("--wrap-width", type=int, default=80)
-    p.add_argument("--impl", default="doc", choices=["doc", "fused", "columns"],
-                   help="pipeline implementation (doc = zero-shuffle production)")
     p.add_argument("--num-partitions", type=int, default=None,
                    help="parse-stage parallelism (extract/resume default: "
                         "defaultParallelism; bench default: 2x; 0 keeps the "
@@ -64,7 +62,6 @@ def _config_from(args: argparse.Namespace):
         rules=tuple(args.rules),
         ratio=args.ratio,
         padding_percent=args.padding_percent,
-        extract_impl=args.impl,
     )
 
 

@@ -42,21 +42,3 @@ class ExtractConfig:
     ratio: str | None = None
     # padding percent (≙ crop.py:328-353)
     padding_percent: float = 0.0
-    # pipeline implementation:
-    # - "doc" (production default): the whole per-document extraction in ONE
-    #   Arrow-batched stage — zero wide shuffles; the scale-correct plan for
-    #   a pipeline where no step crosses document boundaries
-    #   (operators/doc_kernel.py).
-    # - "fused": staged form — mapInPandas parse → staging → Column E2
-    #   geometry → fused crop+label Arrow kernel. The SQL-verifiable
-    #   decomposition (each stage checked against DuckDB, contract q11-q17).
-    # - "columns": fully relational H16 (sequence/transform/substring
-    #   Columns) + e3_impl below — the correctness showcase; interpreted
-    #   higher-order Column lambdas lose ~10× and scale poorly across cores.
-    extract_impl: str = "doc"
-    # E3 implementation: "kernel" (Arrow-batched pure-Python labeling —
-    # production default, ~150× faster than interpreted Column lambdas),
-    # "arrays" (zero-shuffle higher-order Columns), "relational"
-    # (window/groupBy form — SQL-verified by contract q15-q17).
-    # All three are byte-identical (tests/test_engine_parity.py).
-    e3_impl: str = "kernel"

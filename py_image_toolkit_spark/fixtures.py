@@ -75,9 +75,9 @@ def _record_tokens(rng: random.Random) -> str:
                  rng.choice(_REGION_PREFIX), issuer]
     elif variant == 5:  # no rrn → no name inference
         parts = [title, rng.choice(_NAMES_CLEAN), addr, *date, issuer]
-    else:  # non-ASCII-digit token: '１２호' must stay 'O' in EVERY impl —
-        # pins the deliberate ASCII-digit dialect (Java rlike \d vs Python
-        # re) so kernel/relational/arrays can't silently diverge on it
+    else:  # non-ASCII-digit token: '１２호' must stay 'O' — pins the
+        # deliberate ASCII-digit dialect (Java rlike \d vs Python re) that
+        # the Python labeling and the Column labeling (q15-q17) share
         parts = [title, rng.choice(_NAMES_CLEAN), rrn, addr, "１２호", *date, issuer]
     return " ".join(parts)
 

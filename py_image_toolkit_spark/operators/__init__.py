@@ -1,4 +1,5 @@
-"""Engine operators: E1/E2 parse stage (Arrow UDF), E2 selection + window
-geometry (pure Columns), E3 labeling/merge/pivot (pure Columns/Windows),
-plus the training-data-pipeline operator family (dedup, similarity, text
-stats) over the driver's documents/embeddings tables."""
+"""Engine operators: the doc kernel (the whole E1→E3 extraction as one Arrow
+stage), E2 window geometry (pure Columns) and E3 labeling/merge/pivot (pure
+Columns/Windows) for the contract queries q12-q17, plus the
+training-data-pipeline operator family (dedup, similarity, text stats) over
+the documents/embeddings tables."""

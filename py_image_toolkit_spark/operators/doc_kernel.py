@@ -1,4 +1,4 @@
-"""Fully-fused per-document extraction kernel — the production default.
+"""Fully-fused per-document extraction kernel — the extraction engine.
 
 The whole extraction (E1 decode → E2 segment/layout/select/window → H16 crop
 → E3 labeling) is per-document: no step needs data from any other url. The
@@ -8,12 +8,12 @@ ZERO wide shuffles of document text. (Reference call graph: the batch driver
 runs resize→crop→ocr per file, resizes.py:135-171; this is the same shape,
 vectorized per partition.)
 
-The staged relational pipeline (plans/pipeline.py with extract_impl
-"fused"/"columns") remains the SQL-verifiable decomposition: every E2/E3
-stage is independently checked against DuckDB oracles (contract q11-q17) and
-against the pure-Python oracle byte-for-byte. This kernel applies those same
-per-document functions per partition, so byte parity holds by construction
-AND is still asserted end-to-end by tests/test_engine_parity.py.
+This is the only extraction implementation. It applies the pure-Python
+oracle's per-document functions per partition, so byte parity holds by
+construction AND is still asserted end-to-end by tests/test_engine_parity.py.
+The SQL-verifiable decomposition of E2/E3 lives in the contract queries:
+q12/q13 check the Column window geometry (operators/select.py) and q15-q17
+the Column/Window labeling (operators/extract_fields.py) against DuckDB.
 
 Error containment (J6): extract_document returns typed failure records for
 undecodable/empty/degenerate inputs; a poisoned row can never fail the task.
@@ -110,11 +110,19 @@ def doc_extract_df(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, lang, …) → complete extraction records
-    (success AND typed failure rows), one Arrow stage, zero text shuffles.
+    (success AND typed failure rows) in ``DOC_SCHEMA`` column order, one
+    Arrow stage, zero text shuffles. Missing ``warc_ts``/``lang`` columns
+    come out null.
 
-    ``num_partitions`` balances the input before the CPU-bound parse
-    (html compresses ~10×, so byte-sized input splits under-parallelize a
-    compute-bound stage; ``0`` keeps the input partitioning)."""
+    Partitioning before the CPU-bound parse (html compresses ~10×, so
+    byte-sized input splits can under-parallelize a compute-bound stage):
+    - ``None`` (default): when the scan already yields at least
+      ``defaultParallelism`` (and ≥ 2) splits, they are coalesced to one
+      wave of ``defaultParallelism`` tasks without moving any bytes;
+      otherwise the input is repartitioned by url into
+      ``2 × defaultParallelism`` partitions.
+    - ``n > 0``: always repartition by url into ``n`` partitions.
+    - ``0``: keep the input partitioning as is."""
     from pyspark.sql import functions as F
 
     cfg = cfg or ExtractConfig()

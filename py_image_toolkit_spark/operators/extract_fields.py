@@ -16,9 +16,11 @@ Mapping (SURVEY.md §2):
 All windows partition by the same keys → a single hash partitioning is
 reused across every pass (one shuffle for the whole stage).
 
-Generic over ``keys`` so the same operators run both in the pages pipeline
-(keys = url, rule) and in the driver-contract queries over synthesized token
-tables (keys = doc_id) with a DuckDB SQL oracle.
+Generic over ``keys``; the contract queries (q15-q17) run these
+operators over synthesized token tables (keys = doc_id) against a DuckDB SQL
+oracle. The production extraction labels inside the doc kernel with the
+oracle's pure function (oracle/labeling.py), which
+:func:`extract_fields_from_tokens_kernel` also applies for q17.
 """
 
 from __future__ import annotations
@@ -56,21 +58,9 @@ def _anchored(pattern: str) -> str:
     return f"^(?:{pattern})$"
 
 
-def tokenize_df(
-    df: DataFrame, keys: Sequence[str] = ("url", "rule"), text_col: str = "extracted_text"
-) -> DataFrame:
-    """text → ordered (seq, token) rows; explicit seq, never partition order
-    (SURVEY.md §2 E1-window: determinism without implicit ordering)."""
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-    return df.select(
-        *keys, F.posexplode(toks).alias("seq", "token")
-    ).withColumn("seq", F.col("seq").cast("long"))
-
-
 def classify_token(t: Column, prev: Column, road_guard: Column | None = None) -> Column:
     """H9-H14 classifier for one token given the previous token (C4 road
-    guard) — shared by the window implementation (prev = lag) and the
-    zero-shuffle array implementation (prev = element_at(toks, i)).
+    guard) — the window implementation passes prev = lag(token).
 
     ``road_guard`` overrides the C4 guard predicate so the dictionary
     encoding in :func:`label_pass1` can evaluate both guard outcomes on the
@@ -134,7 +124,7 @@ def label_pass1(
     token, so the dictionary carries both guard outcomes (`_lbl_base`,
     `_lbl_guard`) plus the two per-token guard inputs; the window pass then
     only evaluates a lag() and a boolean pick — byte-identical to the direct
-    form (asserted by the q15-q17 SQL oracles and the engine parity suite).
+    form (asserted by the q15-q17 SQL oracles).
     Broadcast-size bound (round-3 ADVICE): the dictionary keeps ONLY tokens
     whose classification is non-trivial (any label ≠ 'O', or a road/guard
     flag) — every other token misses the left join and lands on the existing
@@ -346,243 +336,6 @@ def pivot_fields_df(merged: DataFrame, keys: Sequence[str] = ("url", "rule")) ->
     return merged.groupBy(*keys).agg(*aggs)
 
 
-def extract_fields_df(
-    df: DataFrame, keys: Sequence[str] = ("url", "rule"), text_col: str = "extracted_text"
-) -> DataFrame:
-    """text column → 6-field record per key group (the whole E3 stage)."""
-    tokens = tokenize_df(df, keys, text_col)
-    labeled = label_tokens_df(tokens, keys)
-    # pivot reads only the six output-field labels; 'O' segments never
-    # reach the merge/pivot shuffles
-    merged = merge_runs_df(labeled, keys, drop_label="O")
-    return pivot_fields_df(merged, keys)
-
-
-# ---------------------------------------------------------------------------
-# Zero-shuffle array implementation (the production path)
-# ---------------------------------------------------------------------------
-# The window implementation above is the relational showcase (SQL-verified
-# by contract q15-q17), but per-token windows over millions of ~100-token
-# groups pay shuffle+sort constants per pass. Documents are small; the whole
-# E3 stage fits in the row as higher-order array functions — one projection,
-# no exchange, embarrassingly parallel at any corpus size. Byte-parity with
-# the oracle (and hence with the window form) is enforced by
-# tests/test_engine_parity.py.
-#
-# Every intermediate is staged as a real column so lambda bodies reference
-# per-row attributes, never re-evaluate upstream expression trees per
-# element.
-
-
-def fields_from_text(df: DataFrame, text_col: str = "extracted_text") -> DataFrame:
-    """Add the 6 field columns computed entirely within the row."""
-    out = df.withColumn(
-        "_toks", F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
-    )
-    toks = F.col("_toks")
-
-    # pass 1: classify (prev token via element_at; i is 0-based)
-    out = out.withColumn(
-        "_lab1",
-        F.transform(
-            toks,
-            lambda t, i: classify_token(
-                t, F.when(i >= 1, F.element_at(toks, i))
-            ),
-        ),
-    )
-    lab1 = F.col("_lab1")
-
-    # C2 anchors (1-based positions; 0/null = absent)
-    out = out.withColumn("_title_pos", F.array_position(lab1, "document_title"))
-    tp = F.col("_title_pos")
-    out = out.withColumn(
-        "_rrn_pos",
-        F.get(
-            F.filter(
-                F.transform(
-                    lab1, lambda l, i: F.when((l == "rrn") & (i + 1 > tp), i + 1)
-                ),
-                lambda x: x.isNotNull(),
-            ),
-            0,
-        ),
-    )
-    rp = F.col("_rrn_pos")
-
-    name_pat = lambda c: c.rlike(V.NAME_RE)  # noqa: E731
-    veto = lambda c: _contains_any(c, V.NAME_VETO_KEYWORDS)  # noqa: E731
-
-    fast_k = tp + 1
-    fast_tok = F.element_at(toks, fast_k.cast("int"))
-    fast_lab = F.element_at(lab1, fast_k.cast("int"))
-    fast_elig = (
-        name_pat(fast_tok)
-        & ~veto(fast_tok)
-        & ~fast_lab.isin("document_title", "rrn", "issuer")
-    )
-    scan_pos = F.get(
-        F.filter(
-            F.transform(
-                lab1,
-                lambda l, i: F.when(
-                    (i + 1 > tp)
-                    & (i + 1 < rp)
-                    & l.isin("O", "address", "issue_date")
-                    & name_pat(F.element_at(toks, (i + 1).cast("int")))
-                    & ~veto(F.element_at(toks, (i + 1).cast("int")))
-                    & ~((l == "address") & (F.length(F.element_at(toks, (i + 1).cast("int"))) > 5)),
-                    i + 1,
-                ),
-            ),
-            lambda x: x.isNotNull(),
-        ),
-        0,
-    )
-    out = out.withColumn(
-        "_name_pos",
-        F.when(
-            (tp > 0) & rp.isNotNull(),
-            F.when(rp == tp + 2, F.when(fast_elig, fast_k)).otherwise(scan_pos),
-        ),
-    )
-    np_ = F.col("_name_pos")
-    out = out.withColumn(
-        "_lab2",
-        F.transform(lab1, lambda l, i: F.when(i + 1 == np_, "name").otherwise(l)),
-    )
-    lab2 = F.col("_lab2")
-
-    # C3 neighbor relabel: next label via get (0-based i+1 = next element)
-    out = out.withColumn(
-        "_lab3",
-        F.transform(
-            lab2,
-            lambda l, i: F.when(
-                l.isin("address", "O")
-                & (F.get(lab2, (i + 1).cast("int")) == "issuer")
-                & _contains_any(F.element_at(toks, (i + 1).cast("int")), V.REGION_KEYWORDS)
-                & (F.length(F.element_at(toks, (i + 1).cast("int"))) < 10),
-                "issuer",
-            ).otherwise(l),
-        ),
-    )
-    lab = F.col("_lab3")
-
-    def first_pos(label: str) -> Column:
-        return F.array_position(lab, label)
-
-    def run_field(label: str, col_name: str) -> Column:
-        start = first_pos(label)
-        end = F.coalesce(
-            F.get(
-                F.filter(
-                    F.transform(
-                        lab, lambda l, i: F.when((i + 1 > start) & (l != label), i + 1)
-                    ),
-                    lambda x: x.isNotNull(),
-                ),
-                0,
-            ),
-            F.size(lab) + 1,
-        )
-        return F.when(
-            start > 0,
-            F.array_join(F.slice(toks, start.cast("int"), (end - start).cast("int")), " "),
-        ).alias(col_name)
-
-    def simple_field(label: str) -> Column:
-        p = first_pos(label)
-        return F.when(p > 0, F.element_at(toks, p.cast("int"))).alias(label)
-
-    # D6 date chunks: per issue_date run, 3-at-a-time; first valid triple wins
-    out = out.withColumn(
-        "_date_starts",
-        F.filter(
-            F.transform(
-                lab,
-                lambda l, i: F.when(
-                    (l == "issue_date")
-                    & (F.coalesce(F.get(lab, (i - 1).cast("int")), F.lit("")) != "issue_date"),
-                    i + 1,
-                ),
-            ),
-            lambda x: x.isNotNull(),
-        ),
-    )
-    starts = F.col("_date_starts")
-    out = out.withColumn(
-        "_date_runs",
-        F.transform(
-            starts,
-            lambda s: F.struct(
-                s.alias("s"),
-                (
-                    F.coalesce(
-                        F.get(
-                            F.filter(
-                                F.transform(
-                                    lab,
-                                    lambda l, i: F.when(
-                                        (i + 1 > s) & (l != "issue_date"), i + 1
-                                    ),
-                                ),
-                                lambda x: x.isNotNull(),
-                            ),
-                            0,
-                        ),
-                        F.size(lab) + 1,
-                    )
-                    - s
-                ).alias("len"),
-            ),
-        ),
-    )
-    runs = F.col("_date_runs")
-    out = out.withColumn(
-        "_date_chunks",
-        F.flatten(
-            F.transform(
-                runs,
-                lambda r: F.when(
-                    r["len"] >= 3,
-                    F.transform(
-                        F.sequence(F.lit(0), (F.floor(r["len"] / 3) - 1).cast("long")),
-                        lambda k: (r["s"] + 3 * k).cast("long"),
-                    ),
-                ).otherwise(F.array().cast("array<bigint>")),
-            )
-        ),
-    )
-    chunks = F.col("_date_chunks")
-
-    def tok_at(p: Column) -> Column:
-        return F.element_at(toks, p.cast("int"))
-
-    valid_chunks = F.filter(
-        chunks,
-        lambda p: tok_at(p).rlike(_anchored(V.YEAR_RE))
-        & tok_at(p + 1).rlike(_anchored(V.MONTH_RE))
-        & tok_at(p + 2).rlike(_anchored(V.DAY_RE)),
-    )
-    out = out.withColumn("_date_pos", F.get(valid_chunks, 0))
-    dp = F.col("_date_pos")
-    issue_date = F.when(
-        dp.isNotNull(), F.concat_ws(".", tok_at(dp), tok_at(dp + 1), tok_at(dp + 2))
-    ).alias("issue_date")
-
-    out = out.select(
-        *df.columns,
-        simple_field("document_title"),
-        simple_field("name"),
-        run_field("address", "address"),
-        simple_field("rrn"),
-        issue_date,
-        run_field("issuer", "issuer"),
-    )
-    return out
-
-
 def extract_fields_from_tokens_kernel(
     tokens: DataFrame,
     keys: Sequence[str] = ("doc_id",),
@@ -632,50 +385,3 @@ def extract_fields_from_tokens_kernel(
             yield pd.DataFrame(out)
 
     return grouped.mapInPandas(run, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# Arrow-kernel implementation (production default)
-# ---------------------------------------------------------------------------
-# Measured on this host (32 cores, 10k docs ≈ 2.1M tokens):
-#   relational window form : ~215 s   (shuffle+sort per pass; correctness
-#                                      showcase, SQL-verified by q15-q17)
-#   in-row array lambdas   : ~110 s   (zero shuffle, but Catalyst evaluates
-#                                      higher-order-function lambdas
-#                                      interpreted — ~1 µs/node tree walks)
-#   Arrow batch kernel     : ~0.4 s   (CPython regex engine is C; the same
-#                                      pure function as the oracle spec)
-# The kernel is the pragmatic Arrow-batched stage the parse already is
-# (SURVEY.md §2 J2/J3 posture): per-partition amortized, no per-row Python
-# *interpretation of relational logic* — the relational expression of E3
-# exists above and is cross-validated against DuckDB by the driver contract.
-
-
-def fields_from_text_kernel(df: DataFrame, text_col: str = "extracted_text") -> DataFrame:
-    """Add the 6 field columns via an Arrow-batched kernel applying the
-    oracle's pure labeling function (byte-identical by construction)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from py_image_toolkit_spark.oracle.labeling import extract_fields
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(f, StringType(), True) for f in V.OUTPUT_FIELDS]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [
-                extract_fields(t.split()) if isinstance(t, str) else
-                {f: None for f in V.OUTPUT_FIELDS}
-                for t in pdf[text_col]
-            ]
-            for f in V.OUTPUT_FIELDS:
-                pdf[f] = [r[f] for r in recs]
-            yield pdf
-
-    return df.mapInPandas(run, out_schema)

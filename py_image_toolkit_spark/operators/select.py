@@ -1,34 +1,25 @@
-"""E2 main-content selection + composition-window geometry — pure Columns.
+"""E2 composition-window geometry — pure Columns.
 
-Every step of the reference's detect→filter→select→window pipeline
-(crop.py:116-353) is expressed as whole-stage-codegen-able Column/Window
-code — zero per-row Python:
+The reference's rule-point → window → padding math (crop.py:232-353) as
+whole-stage-codegen-able Column code, zero per-row Python:
 
-- layout arithmetic (virtual text canvas)        — withColumn + window sums
-- B1/B2 candidate filters (min size, min score)  — filter()
-- D1/D2 argmax/argmin main-block selection       — row_number() top-1
 - H3/H4/H5 rule points + F1 closest-point        — literal fold of 4 exprs
 - H6 optimal window + H7 padding                 — bround/least/greatest
   (bround = HALF_EVEN ≙ Python round(); int-squared distances avoid float
   tie divergence vs the oracle)
-- H16 span extraction                            — sequence/transform/
-  substring/flatten/array_join (per-line slicing without Python)
 
-Scale notes: all windows/joins key on ``url`` — one hash partitioning reused
-across layout, selection and extraction; rule fan-out (×k rows ≙
-crop.py:526-533) happens *after* the per-url reduction, so the heavy block
-table is never duplicated per rule until the final slice join.
+The production extraction runs the oracle's Python geometry inside the doc
+kernel (operators/doc_kernel.py); these Columns are the SQL-verified form of
+the same math (contract q12/q13 vs DuckDB) and are cross-checked against the
+oracle row-for-row by tests/test_oracle_geometry.py.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from py_image_toolkit_spark.config import ExtractConfig
-from py_image_toolkit_spark.oracle.geometry import parse_ratio
 
 _PHI_INV = (math.sqrt(5) - 1) / 2
 
@@ -36,63 +27,6 @@ _PHI_INV = (math.sqrt(5) - 1) / 2
 def _iround(c: Column) -> Column:
     """int(round(x)) with Python banker's-rounding parity (HALF_EVEN)."""
     return F.bround(c).cast("long")
-
-
-def layout_blocks_df(blocks: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    """Score/center columns over laid block rows. Layout geometry itself is
-    emitted by the segmenter (detector-emitted bboxes, ≙ crop.py:163-171) —
-    everything here is per-row arithmetic, no windows, no shuffle."""
-    return (
-        blocks.filter(F.col("dec_success") & (F.col("block_id") >= 0))
-        .withColumn("score", F.lit(1.0) - F.col("n_link_chars") / F.col("n_chars"))
-        .withColumn("bcx", _iround(F.col("max_w") / 2))
-        .withColumn("bcy", _iround(F.col("start_line") + F.col("n_lines") / 2))
-    )
-
-
-def select_main_df(laid: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    """B1/B2 filter + D1/D2 top-1-per-url selection → one row per url.
-
-    Implemented as a single max_by/min_by aggregation (map-side partial agg,
-    no window sort) — the argmax ≙ crop.py:193-199 with first-wins
-    tie-breaks made explicit via the unique block_id."""
-    cand = laid.filter(
-        (F.col("max_w") >= cfg.min_block_w)
-        & (F.col("n_lines") >= cfg.min_block_h)
-        & (F.col("score") >= cfg.min_score)
-    )
-    if cfg.ref_point == "top":
-        cx, cy = F.col("bcx"), F.col("start_line")
-    else:
-        cx, cy = F.col("bcx"), F.col("bcy")
-
-    packed = F.struct(
-        F.col("block_id").cast("long").alias("main_block_id"),
-        cx.alias("cx"),
-        cy.alias("cy"),
-        F.col("canvas_w"),
-        F.col("canvas_h"),
-        F.col("n_blocks"),
-        F.col("encoding"),
-        F.col("dec_message"),
-        F.col("warc_ts"),  # H17 passthrough rides the doc-level agg
-        F.col("lang"),
-    )
-    if cfg.method == "center":
-        # squared distance to the canvas center — exact arithmetic gives the
-        # same order (incl. ties) as the oracle's float math at these sizes
-        d2 = (
-            F.pow(F.col("bcx") - F.col("canvas_w") / 2.0, 2)
-            + F.pow(F.col("bcy") - F.col("canvas_h") / 2.0, 2)
-        )
-        best = F.min_by(packed, F.struct(d2.alias("d"), F.col("block_id").alias("b")))
-    else:  # 'largest' + unknown-method fallback (≙ crop.py:200-202)
-        area = F.col("max_w") * F.col("n_lines")
-        best = F.max_by(
-            packed, F.struct(area.alias("a"), (-F.col("block_id")).alias("b"))
-        )
-
-    return cand.groupBy("url").agg(best.alias("_b")).select("url", "_b.*")
 
 
 def _rule_point_exprs(rule: Column, w: Column, h: Column) -> list[tuple[Column, Column]]:
@@ -124,8 +58,7 @@ def window_geometry(
     rule points → closest point → optimal aspect-fitted window → clamp →
     optional padding. Adds nullable crop_x1/crop_y1/crop_x2/crop_y2 (null =
     degenerate window). ``aspect=None`` → original canvas ratio (reference
-    crop.py:279-281). Reused by the pages pipeline and the driver-contract
-    geometry queries."""
+    crop.py:279-281). Used by the contract geometry query (q13)."""
     w = F.col("canvas_w").cast("double")
     h = F.col("canvas_h").cast("double")
     rule = F.col("rule")
@@ -236,91 +169,3 @@ def window_geometry(
         .withColumnRenamed("_x2", "crop_x2")
         .withColumnRenamed("_y2", "crop_y2")
     )
-
-
-def compute_windows_df(main: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    """Rule fan-out (1 url → k rules, ≙ crop.py:526-533) + window geometry →
-    per (url, rule) crop rect (nullable on degenerate windows)."""
-    ratio = parse_ratio(cfg.ratio)
-    fanned = main.withColumn("rule", F.explode(F.array(*[F.lit(r) for r in cfg.rules])))
-    out = window_geometry(
-        fanned,
-        F.lit(float(ratio)) if ratio is not None else None,
-        cfg.padding_percent,
-    )
-    return out.select(
-        "url", "rule", "main_block_id", "canvas_w", "canvas_h", "n_blocks",
-        "encoding", "dec_message", "warc_ts", "lang",
-        "crop_x1", "crop_y1", "crop_x2", "crop_y2",
-    )
-
-
-def extract_window_text_df(laid: DataFrame, windows: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    """H16: slice the per-block wrapped lines by the crop rect and reassemble
-    the extracted text + its char span into the rendered document — all
-    Column code (sequence/transform/substring/flatten)."""
-    # B8: in "none" mode each block is one unwrapped line, so the effective
-    # per-block stride is the block's own length (n_lines=1 makes the slice
-    # arithmetic degenerate correctly); aspect/fixed share the global wrap
-    if cfg.norm_mode == "none":
-        wrap = F.greatest(F.col("n_chars"), F.lit(1)).cast("long")
-    else:
-        wrap = F.lit(cfg.wrap_width).cast("long")
-
-    ok_windows = windows.filter(F.col("crop_x1").isNotNull())
-    j = ok_windows.select(
-        "url", "rule", "crop_x1", "crop_y1", "crop_x2", "crop_y2"
-    ).join(
-        laid.select("url", "block_id", "btext", "n_chars", "n_lines", "start_line", "cum_chars"),
-        "url",
-    )
-
-    x1, y1 = F.col("crop_x1"), F.col("crop_y1")
-    x2, y2 = F.col("crop_x2"), F.col("crop_y2")
-    sl, nl, nc = F.col("start_line"), F.col("n_lines"), F.col("n_chars")
-
-    lo = F.greatest(y1 - sl, F.lit(0))
-    hi = F.least(y2 - sl, nl)
-    span_w = (x2 - x1).cast("int")
-    line_arr = F.when(
-        hi > lo,
-        F.transform(
-            F.sequence(lo, hi - 1),
-            lambda i: F.substring(F.col("btext"), (i * wrap + x1 + 1).cast("int"), span_w),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    sep_line = sl + nl
-    sep_in = (y1 <= sep_line) & (sep_line < y2)
-    contributed = F.when(sep_in, F.concat(line_arr, F.array(F.lit("")))).otherwise(line_arr)
-
-    # char-span candidates: only the block containing line y1 / y2-1 (or
-    # whose trailing separator is that line) produces a non-null value
-    def _offset_at(y: Column, xlim: Column) -> Column:
-        in_block = (sl <= y) & (y < sep_line)
-        line_len = F.least(nc - (y - sl) * wrap, wrap)
-        return (
-            F.when(in_block, F.col("cum_chars") + (y - sl) * wrap + y + F.least(xlim, line_len))
-            .when(y == sep_line, F.col("cum_chars") + nc + y)
-        )
-
-    j = (
-        j.withColumn("contributed", contributed)
-        .withColumn("start_val", _offset_at(y1, x1))
-        .withColumn("end_val", _offset_at(y2 - 1, x2))
-        .filter((F.size(F.col("contributed")) > 0) | F.col("start_val").isNotNull() | F.col("end_val").isNotNull())
-    )
-
-    assembled = j.groupBy("url", "rule").agg(
-        F.array_join(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("block_id", "contributed"))),
-                    lambda p: p["contributed"],
-                )
-            ),
-            "\n",
-        ).alias("extracted_text"),
-        F.min("start_val").alias("main_start"),
-        F.min("end_val").alias("main_end"),
-    )
-    return assembled

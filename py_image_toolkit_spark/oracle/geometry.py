@@ -1,7 +1,7 @@
 """Oracle geometry: sequential-Python port of the reference's verified
-selection / composition math (NOT used by the engine — the engine implements
-the same math as Column expressions in operators/select.py; parity is
-asserted by tests).
+selection / composition math. The doc kernel runs it per document;
+operators/select.py implements the same math as Column expressions (q13 vs
+DuckDB), and tests/test_oracle_geometry.py asserts the two agree row for row.
 
 Semantics preserved exactly, with the reference's quirks:
 - ``int(round(x))`` everywhere — Python banker's rounding (engine: bround)

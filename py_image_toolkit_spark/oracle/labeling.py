@@ -13,8 +13,9 @@ preserving its verified quirks:
 - date runs chunked 3-at-a-time; only valid Y/M/D triples merge to "Y.M.D"
 - first-wins pivot; issue_date accepted only as a dotted triple
 
-The engine implements the identical semantics as Column/Window expressions
-in operators/extract_fields.py — zero per-row Python.
+The doc kernel (operators/doc_kernel.py) calls this module per document;
+operators/extract_fields.py implements the identical semantics as
+Column/Window expressions, SQL-verified by contract q15-q17.
 """
 
 from __future__ import annotations
@@ -26,9 +27,10 @@ from py_image_toolkit_spark.functions import vocab as V
 
 # re.ASCII: the vocabulary regexes are deliberately ASCII-digit-only in BOTH
 # dialects — Java rlike's \d is ASCII, Python's is Unicode; without the flag
-# a full-width/Arabic-Indic digit token would label differently between
-# e3_impl=kernel (this module) and e3_impl=relational/arrays (rlike). The
-# parity fixture carries a non-ASCII-digit token to pin this down.
+# a full-width/Arabic-Indic digit token would label differently between this
+# module (the doc kernel and q17's Arrow kernel) and the Column labeling's
+# rlike (label_pass1, contract q15-q17). The parity fixture carries a
+# non-ASCII-digit token to pin this down.
 _RRN_DASHED = re.compile(V.RRN_DASHED_RE, re.ASCII)
 _RRN_PLAIN = re.compile(V.RRN_PLAIN_RE, re.ASCII)
 _YEAR = re.compile(V.YEAR_RE, re.ASCII)

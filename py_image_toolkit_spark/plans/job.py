@@ -2,7 +2,8 @@
 (SURVEY.md §3.1 step mapping).
 
     scan → content filter → RESUME anti-join → repartition(url-hash, salted)
-    → extract() stages → observe counters → snapshot commit → lineage rows
+    → extract() (one Arrow stage) → observe counters → snapshot commit
+    → lineage rows
 
 - resume: left-anti join of the input against the committed output snapshot
   (≙ skip-if-exists, reference resize.py:158-162 — but gated *before* any
@@ -100,8 +101,7 @@ def run_extraction_job(
     if num_partitions != 0:  # 0 = keep the input partitioning (CLI contract)
         todo = repartition_by_url(todo, num_partitions)
 
-    cache_handles: list = []
-    result = extract(todo, cfg, num_partitions=0, handles=cache_handles)
+    result = extract(todo, cfg, num_partitions=0)
 
     # per-partition lineage (J7): counters AND a MEASURED per-partition
     # elapsed. The counting pass runs as a mapInPandas over the persisted-
@@ -180,9 +180,5 @@ def run_extraction_job(
     else:
         summary["snapshot_id"] = None
     result.unpersist()
-    for h in cache_handles:
-        # release the staged block/window caches — one leak per micro-batch
-        # otherwise (AvailableNow drains call this once per batch)
-        h.unpersist()
     summary["wall_s"] = time.time() - t0
     return summary

@@ -1,267 +1,19 @@
 """The full extraction pipeline: pages → per-(url, rule) extraction records.
 
 Equivalent of the reference's batch-driver call graph (SURVEY.md §3.2 Spark
-recast): scan → [repartition by url-hash] → mapInPandas(parse) → Column-only
-layout/selection/geometry → span slice → token labeling → record assembly,
-with per-row error containment (J6) — a failed document yields a status row,
-never a task failure.
+recast). No extraction step crosses document boundaries, so the whole E1→E3
+pipeline runs as ONE Arrow-batched stage over the page table — scan →
+[balance partitions] → mapInPandas → sink — with per-row error containment
+(J6): a failed document yields typed status rows, never a task failure
+(operators/doc_kernel.py).
 
 Row contract: exactly ``len(cfg.rules)`` output rows per input url
-(success or typed failure), matching the oracle byte-for-byte.
+(success or typed failure), in ``DOC_SCHEMA`` column order, matching the
+oracle byte-for-byte.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from py_image_toolkit_spark.operators.doc_kernel import doc_extract_df as extract
 
-from py_image_toolkit_spark.config import ExtractConfig
-from py_image_toolkit_spark.functions import vocab as V
-from py_image_toolkit_spark.operators.extract_fields import (
-    extract_fields_df,
-    fields_from_text,
-    fields_from_text_kernel,
-)
-from py_image_toolkit_spark.operators.extract_kernel import fused_extract_df
-from py_image_toolkit_spark.operators.segment import segment_pages
-from py_image_toolkit_spark.operators.select import (
-    compute_windows_df,
-    extract_window_text_df,
-    layout_blocks_df,
-    select_main_df,
-)
-
-SPAN_TYPE = "array<struct<field:string,start:bigint,end:bigint>>"
-
-_META_COLS = [
-    "n_blocks", "canvas_w", "canvas_h", "main_block_id",
-    "crop_x1", "crop_y1", "crop_x2", "crop_y2",
-]
-_FIELD_COLS = list(V.OUTPUT_FIELDS)
-
-
-def _fan_rules(df: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    return df.withColumn("rule", F.explode(F.array(*[F.lit(r) for r in cfg.rules])))
-
-
-def _as_failure(
-    df: DataFrame,
-    message_col,
-    cfg: ExtractConfig,
-    keep_meta: bool,
-    fan: bool = True,
-) -> DataFrame:
-    """Fill failure-row columns; ``fan=True`` explodes per-url rows into one
-    row per rule. The degenerate-window branch is ALREADY per-(url, rule)
-    (windows carries a ``rule`` column) and must pass ``fan=False`` — fanning
-    it again emits len(cfg.rules)² rows per url and breaks the row contract."""
-    out = (_fan_rules(df, cfg) if fan else df).withColumn(
-        "success", F.lit(False)
-    ).withColumn("message", message_col)
-    if not keep_meta:
-        out = (
-            out.withColumn("n_blocks", F.lit(0).cast("long"))
-            .withColumn("canvas_w", F.lit(0).cast("long"))
-            .withColumn("canvas_h", F.lit(0).cast("long"))
-            .withColumn("main_block_id", F.lit(None).cast("long"))
-        )
-    for c in ["crop_x1", "crop_y1", "crop_x2", "crop_y2", "main_start", "main_end"]:
-        if c not in out.columns:
-            out = out.withColumn(c, F.lit(None).cast("long"))
-    out = out.withColumn("extracted_text", F.lit(None).cast("string"))
-    for f in _FIELD_COLS:
-        out = out.withColumn(f, F.lit(None).cast("string"))
-    return out.withColumn("spans", F.lit(None).cast(SPAN_TYPE)).withColumn(
-        "spans", F.coalesce(F.col("spans"), F.array().cast(SPAN_TYPE))
-    )
-
-
-def _span_struct(field: str, start, end):
-    return F.struct(
-        F.lit(field).alias("field"),
-        start.cast("long").alias("start"),
-        end.cast("long").alias("end"),
-    )
-
-
-def extract(
-    pages: DataFrame,
-    cfg: ExtractConfig | None = None,
-    persist: bool = True,
-    num_partitions: int | None = None,
-    staging_dir: str | None = None,
-    handles: list | None = None,
-) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → extraction records.
-
-    The default implementation (``cfg.extract_impl="doc"``) is a single
-    Arrow stage with nothing cached — ``persist``/``staging_dir`` apply only
-    to the staged forms ("fused"/"columns"), whose block/window tables have
-    several consumers (success rows + three failure branches).
-
-    ``handles``: pass a list to receive every DataFrame this call persists —
-    unpersist them after materializing the result, or the cached block table
-    outlives the job in executor storage (one leak per AvailableNow
-    micro-batch on long drains).
-
-    The input is explicitly repartitioned by url before the parse (north
-    rule): html payloads compress well, so a parquet/Iceberg scan can yield
-    far fewer input splits than cores (maxPartitionBytes is sized for bytes,
-    not parse cost) — without this the Python parse stage runs on a handful
-    of cores. Pass ``num_partitions=0`` to keep the input partitioning.
-    """
-    cfg = cfg or ExtractConfig()
-    if handles is None:
-        handles = []  # caller declined ownership; leak-on-purpose as before
-
-    out_cols = (
-        ["url", "warc_ts", "lang", "rule", "success", "message", "encoding"]
-        + _META_COLS
-        + ["main_start", "main_end", "extracted_text"]
-        + _FIELD_COLS
-        + ["spans"]
-    )
-
-    if cfg.extract_impl == "doc":
-        # production default: the whole per-document pipeline in ONE Arrow
-        # stage — zero wide shuffles (see operators/doc_kernel.py)
-        from py_image_toolkit_spark.operators.doc_kernel import doc_extract_df
-
-        return doc_extract_df(pages, cfg, num_partitions).select(*out_cols)
-
-    if num_partitions != 0:
-        n = num_partitions or 2 * pages.sparkSession.sparkContext.defaultParallelism
-        # hash-partition on the url COLUMN (not a derived hash expression):
-        # HashPartitioning(url, n) is a partitioning Catalyst can re-use, so
-        # every downstream groupBy(url)/join(url) with matching arity is
-        # exchange-free — the document text is shuffled exactly once
-        pages = pages.repartition(n, F.col("url"))
-
-    blocks = segment_pages(pages, cfg.wrap_width, cfg.norm_mode)
-    if staging_dir is not None:
-        # Materialize the parse output to parquet instead of the executor
-        # heap: the block table is consumed by four branches, and caching
-        # millions of text-heavy rows deserialized causes eviction/GC storms
-        # at high parallelism (measured: local[32] slower than local[8]).
-        # Columnar staging also lets the status branches read only the tiny
-        # metadata columns (parquet column pruning). At cluster scale this
-        # is a staging table next to the output snapshot.
-        spark = pages.sparkSession
-        blocks.write.mode("overwrite").parquet(staging_dir)
-        # re-spread: the staged file is small on disk (compressed text) and
-        # would otherwise be read back as a handful of byte-sized splits,
-        # starving every downstream stage of parallelism
-        n_read = num_partitions or 2 * spark.sparkContext.defaultParallelism
-        blocks = spark.read.parquet(staging_dir).repartition(
-            n_read, F.col("url")
-        )
-    elif persist:
-        blocks = blocks.persist()
-        handles.append(blocks)
-    laid = layout_blocks_df(blocks, cfg)
-    main = select_main_df(laid, cfg)
-    windows = compute_windows_df(main, cfg)
-    if persist:
-        windows = windows.persist()
-        handles.append(windows)
-    if cfg.extract_impl == "fused":
-        # staged form: crop slicing + labeling in one Arrow kernel that
-        # emits COMPLETE success rows (meta rides through the kernel) — the
-        # text-bearing output is never joined back to the window table, so
-        # the only wide shuffle in the whole stage is the url repartition
-        # (operators/extract_kernel.py — see rationale there)
-        # the url-clustered precondition holds only when THIS call introduced
-        # a url repartition (num_partitions != 0) or staged+re-read by url —
-        # with num_partitions=0 and no staging the input partitioning is kept
-        # and duplicate-url inputs would make the streaming kernel truncate
-        # text (round-3 ADVICE: assert-or-repartition, never assume); passing
-        # False lets fused_extract_df repartition for itself
-        url_clustered = num_partitions != 0 or staging_dir is not None
-        ok = (
-            fused_extract_df(laid, windows, cfg, assume_url_clustered=url_clustered)
-            .withColumn("success", F.lit(True))
-            .withColumn("message", F.coalesce(F.col("dec_message"), F.lit("")))
-        )
-        with_fields = None
-    else:
-        assembled = extract_window_text_df(laid, windows, cfg)
-        # partition the E3 input by COMPUTE, not bytes: the labeling stage is
-        # CPU-bound — AQE's byte-based coalescing would run it on a handful
-        # of cores
-        n_e3 = num_partitions or 2 * pages.sparkSession.sparkContext.defaultParallelism
-        assembled = assembled.repartition(n_e3)
-        # E3: three byte-identical implementations (ExtractConfig.e3_impl);
-        # the relational window form is SQL-verified by contract q15-q17.
-        if cfg.e3_impl == "arrays":
-            with_fields = fields_from_text(assembled, "extracted_text")
-        elif cfg.e3_impl == "relational":
-            fields = extract_fields_df(assembled, keys=("url", "rule"))
-            with_fields = assembled.join(fields, ["url", "rule"], "left")
-        else:
-            with_fields = fields_from_text_kernel(assembled, "extracted_text")
-
-    if with_fields is not None:  # Column impls: attach meta via join-back
-        ok = (
-            windows.filter(F.col("crop_x1").isNotNull())
-            .join(with_fields, ["url", "rule"])
-            .withColumn("success", F.lit(True))
-            .withColumn("message", F.coalesce(F.col("dec_message"), F.lit("")))
-        )
-
-    # spans: the main-content window span + first-occurrence field spans
-    span_cols = [_span_struct("main", F.col("main_start"), F.col("main_end"))]
-    for f in _FIELD_COLS:
-        first_tok = F.split(F.col(f), " ", -1)[0]
-        pos = F.instr(F.col("extracted_text"), first_tok)
-        span_cols.append(
-            F.when(
-                F.col(f).isNotNull() & (pos > 0),
-                _span_struct(f, pos - 1, pos - 1 + F.length(F.col(f))),
-            )
-        )
-    ok = ok.withColumn(
-        "spans", F.filter(F.array(*span_cols), lambda x: x.isNotNull())
-    )
-
-    # failure branches (typed, per-url → fanned per rule; J6 taxonomy)
-    degenerate = _as_failure(
-        windows.filter(F.col("crop_x1").isNull()).drop(
-            "crop_x1", "crop_y1", "crop_x2", "crop_y2"
-        ),
-        F.lit("degenerate window"),
-        cfg,
-        keep_meta=True,
-        fan=False,
-    )
-
-    dec_fail = _as_failure(
-        blocks.filter((F.col("block_id") == -1) & ~F.col("dec_success"))
-        .select("url", "warc_ts", "lang", "encoding", F.col("dec_message")),
-        F.col("dec_message"),
-        cfg,
-        keep_meta=False,
-    )
-
-    doc_enc = (
-        blocks.filter(F.col("dec_success"))
-        .groupBy("url")
-        .agg(
-            F.min_by("encoding", "block_id").alias("encoding"),
-            F.min_by("warc_ts", "block_id").alias("warc_ts"),
-            F.min_by("lang", "block_id").alias("lang"),
-        )
-    )
-    no_cand = _as_failure(
-        doc_enc.join(main.select("url"), "url", "left_anti"),
-        F.lit("no blocks detected"),
-        cfg,
-        keep_meta=False,
-    )
-
-    result = (
-        ok.select(*out_cols)
-        .unionByName(degenerate.select(*out_cols))
-        .unionByName(dec_fail.select(*out_cols))
-        .unionByName(no_cand.select(*out_cols))
-    )
-    return result
+__all__ = ["extract"]

@@ -1,12 +1,7 @@
 """Single extraction-throughput measurement in a fresh JVM (used by
 bench_scaling.py). Prints one JSON line.
 
-usage: bench_one.py CPUS N_DOCS [TRIALS] [IMPL]
-
-IMPL = doc | fused | columns (ExtractConfig.extract_impl). The staged forms
-(fused/columns) run with a parquet staging_dir for the multi-consumer block
-table — the round-2 fix for the executor-cache eviction storm — so their
-scaling numbers measure the staged plan, not cache pressure.
+usage: bench_one.py CPUS N_DOCS [TRIALS]
 """
 
 from __future__ import annotations
@@ -26,36 +21,27 @@ from py_image_toolkit_spark.plans.pipeline import extract  # noqa: E402
 from py_image_toolkit_spark.session import build_session  # noqa: E402
 
 
-def main(cpus: int, n_docs: int, trials: int = 2, impl: str = "doc") -> None:
+def main(cpus: int, n_docs: int, trials: int = 2) -> None:
     spark = build_session(
         f"scale-{cpus}", master=f"local[{cpus}]", shuffle_partitions=cpus,
         extra_conf={"spark.driver.memory": "24g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix=f"scale_{cpus}_")
-    cfg = ExtractConfig(extract_impl=impl)
+    cfg = ExtractConfig()
     try:
         pages_path = os.path.join(work, "pages")
         pages_df(spark, n_docs, partitions=64).write.mode("overwrite").parquet(pages_path)
         pages = spark.read.parquet(pages_path)
         best = None
-        for trial in range(trials):
-            staging = (
-                os.path.join(work, f"staging_{trial}") if impl != "doc" else None
-            )
-            handles: list = []
+        for _ in range(trials):
             t0 = time.time()
-            extract(
-                pages, cfg, num_partitions=cpus * 2,
-                staging_dir=staging, handles=handles,
-            ).write.mode("overwrite").parquet(os.path.join(work, "out"))
+            extract(pages, cfg, num_partitions=cpus * 2).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(work, "out"))
             dt = time.time() - t0
-            for h in handles:
-                h.unpersist()
-            if staging:
-                shutil.rmtree(staging, ignore_errors=True)
             best = dt if best is None else min(best, dt)
-        print(json.dumps({"cpus": cpus, "n_docs": n_docs, "impl": impl,
+        print(json.dumps({"cpus": cpus, "n_docs": n_docs,
                           "wall_s": round(best, 2),
                           "docs_per_sec": round(n_docs / best, 1)}))
     finally:
@@ -68,5 +54,4 @@ if __name__ == "__main__":
         int(sys.argv[1]),
         int(sys.argv[2]),
         int(sys.argv[3]) if len(sys.argv) > 3 else 2,
-        sys.argv[4] if len(sys.argv) > 4 else "doc",
     )

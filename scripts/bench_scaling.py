@@ -45,10 +45,10 @@ def calibrate(workers: int) -> float:
     return total / 3 / 1e6  # Mops/s aggregate
 
 
-def run_one(cpus: int, n_docs: int, trials: int = 1, impl: str = "doc") -> dict:
+def run_one(cpus: int, n_docs: int, trials: int = 1) -> dict:
     out = subprocess.run(
         [sys.executable, os.path.join(ROOT, "scripts", "bench_one.py"),
-         str(cpus), str(n_docs), str(trials), impl],
+         str(cpus), str(n_docs), str(trials)],
         capture_output=True, text=True, timeout=3600, cwd=ROOT,
     )
     lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
@@ -57,24 +57,20 @@ def run_one(cpus: int, n_docs: int, trials: int = 1, impl: str = "doc") -> dict:
     return json.loads(lines[-1])
 
 
-def main(
-    n_docs: int = 200000, lo: int = 4, hi: int = 16, rounds: int = 2,
-    impl: str = "doc",
-) -> None:
+def main(n_docs: int = 200000, lo: int = 4, hi: int = 16, rounds: int = 2) -> None:
     cal = {w: round(calibrate(w), 0) for w in (1, lo, hi)}
     cpu_ceiling = cal[hi] / cal[lo] / (hi / lo)
 
     lo_runs, hi_runs = [], []
     for _ in range(rounds):
-        lo_runs.append(run_one(lo, n_docs, impl=impl))
-        hi_runs.append(run_one(hi, n_docs, impl=impl))
+        lo_runs.append(run_one(lo, n_docs))
+        hi_runs.append(run_one(hi, n_docs))
     best_lo = min(r["wall_s"] for r in lo_runs)
     best_hi = min(r["wall_s"] for r in hi_runs)
     speedup = best_lo / best_hi
     efficiency = speedup / (hi / lo)
     report = {
         "n_docs": n_docs,
-        "impl": impl,
         "configs": {f"local[{lo}]": lo_runs, f"local[{hi}]": hi_runs},
         "best_wall": {f"local[{lo}]": best_lo, f"local[{hi}]": best_hi},
         "speedup": round(speedup, 3),
@@ -90,7 +86,7 @@ def main(
     stamp = time.strftime("%Y-%m-%d %H:%M:%S")
     with open(md, "a") as fh:
         fh.write(
-            f"\n## Scaling run {stamp} — local[{lo}] vs local[{hi}], {n_docs} docs, impl={impl}\n\n"
+            f"\n## Scaling run {stamp} — local[{lo}] vs local[{hi}], {n_docs} docs\n\n"
             f"CPU calibration (busy-loop aggregate Mops/s): "
             f"{', '.join(f'{w}w={v:.0f}' for w, v in cal.items())} — raw CPU "
             f"scaling ceiling {lo}→{hi} workers: {cpu_ceiling:.3f}\n\n"
@@ -108,5 +104,4 @@ if __name__ == "__main__":
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 200000
     lo = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     hi = int(sys.argv[3]) if len(sys.argv) > 3 else 16
-    impl = sys.argv[4] if len(sys.argv) > 4 else "doc"
-    main(n, lo, hi, impl=impl)
+    main(n, lo, hi)

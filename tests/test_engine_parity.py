@@ -18,33 +18,12 @@ def test_parity_default_config(spark):
     assert_parity(spark, 200)
 
 
-@pytest.mark.parametrize("impl", ["kernel", "arrays", "relational"])
-def test_parity_columns_h16_and_e3_impls(spark, impl):
-    """The Column H16 path with all three E3 implementations (Arrow kernel /
-    zero-shuffle arrays / relational windows) is byte-identical to the
-    oracle — same for the doc-fused production kernel (default config above)."""
-    assert_parity(spark, 60, ExtractConfig(extract_impl="columns", e3_impl=impl))
-
-
-def test_parity_staged_fused(spark):
-    """The staged pipeline (parse → Column E2 geometry → fused crop+label
-    kernel) is byte-identical to the oracle — the SQL-verifiable
-    decomposition, kept alongside the zero-shuffle doc kernel."""
-    assert_parity(spark, 60, ExtractConfig(extract_impl="fused"))
-
-
-def test_parity_staged_fused_degenerate(spark):
-    assert_parity(spark, 24, ExtractConfig(extract_impl="fused", ratio="100:1"))
-
-
-@pytest.mark.parametrize("impl", ["doc", "fused", "columns"])
-def test_parity_padding_on_degenerate_windows(spark, impl):
-    """Regression (found by the hypothesis config sweep): Spark greatest/
-    least SKIP nulls, so the padding stage used to resurrect degenerate
-    (null-coord) windows as full-canvas crops — a spurious success row per
-    degenerate (url, rule)."""
-    cfg = ExtractConfig(rules=("thirds",), ratio="100:1",
-                        padding_percent=5.5, extract_impl=impl)
+def test_parity_padding_on_degenerate_windows(spark):
+    """Regression (found by the hypothesis config sweep): padding must not
+    resurrect degenerate (null-coord) windows as full-canvas crops — a
+    spurious success row per degenerate (url, rule). The Column form of the
+    same guard is cross-checked in tests/test_oracle_geometry.py."""
+    cfg = ExtractConfig(rules=("thirds",), ratio="100:1", padding_percent=5.5)
     assert_parity(spark, 14, cfg)
 
 
@@ -102,27 +81,12 @@ def test_known_golden_values(spark):
     assert ok["extracted_text"].str.len().min() > 0
 
 
-def test_differential_doc_vs_fused(spark):
-    """Round-3 verdict task #4 — make the doc-vs-fused differential
-    EXPLICIT: the default doc kernel loops the in-repo oracle per document,
-    so its oracle-parity test is self-referential; the fused staged plan is
-    an independent code path (Column E2 geometry + Arrow crop/label
-    kernel). Comparing the two engines row-for-row on the same pages — no
-    oracle in the loop — closes the triangle visibly instead of via the
-    property sweep's sampling."""
-    a = engine_frame(spark, 120, ExtractConfig(extract_impl="doc"))
-    b = engine_frame(spark, 120, ExtractConfig(extract_impl="fused"))
-    problems = diff_frames(a, b)
-    assert not problems, "doc/fused divergence:\n" + "\n".join(problems)
-
-
 @pytest.mark.parametrize("mode", ["fixed", "none"])
-@pytest.mark.parametrize("impl", ["doc", "fused", "columns"])
-def test_parity_norm_modes(spark, mode, impl):
+def test_parity_norm_modes(spark, mode):
     """B8 normalization dispatch (≙ reference resize.py:106-120
-    aspect_ratio|fixed|none): every pipeline implementation matches the
-    oracle byte-for-byte under each mode."""
-    assert_parity(spark, 40, ExtractConfig(extract_impl=impl, norm_mode=mode))
+    aspect_ratio|fixed|none): the engine matches the oracle byte-for-byte
+    under each mode."""
+    assert_parity(spark, 40, ExtractConfig(norm_mode=mode))
 
 
 def test_parity_driver_pages_with_pdf_route(spark):

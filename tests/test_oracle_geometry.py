@@ -1,5 +1,8 @@
 """Oracle geometry vs values verified by executing the reference's pure
-functions (SURVEY.md §2 H1-H7 'verified' notes)."""
+functions (SURVEY.md §2 H1-H7 'verified' notes), and the Column form of the
+same math (operators/select.py) vs the oracle row for row."""
+
+import random
 
 from py_image_toolkit_spark.oracle import geometry as G
 
@@ -68,3 +71,77 @@ def test_parse_ratio():
     assert G.parse_ratio("0:3") is None
     assert G.parse_ratio("-2") is None
     assert G.parse_ratio("abc") is None
+
+
+_RULES = ("thirds", "golden", "mystery")
+_RATIOS = (None, "16:9", "1:1", "100:1", "1:100", "0.2")
+_PADDINGS = (0.0, 5.5, 45.0)
+
+
+def _geometry_rows(n_random: int = 1000, seed: int = 7) -> list[tuple]:
+    """(canvas_w, canvas_h, cx, cy, rule, ratio) rows: an edge grid of tiny
+    canvases with the subject on every canvas corner, plus random canvases
+    (subject often pinned to an edge)."""
+    rows = [
+        (w, h, cx, cy, rule, ratio)
+        for w, h in ((1, 1), (1, 2), (2, 1), (2, 2), (3, 7), (80, 1))
+        for cx in (0, w)
+        for cy in (0, h)
+        for rule in _RULES
+        for ratio in _RATIOS
+    ]
+    rng = random.Random(seed)
+    for _ in range(n_random):
+        w = rng.choice((rng.randint(1, 12), rng.randint(1, 200)))
+        h = rng.choice((rng.randint(1, 12), rng.randint(1, 3000)))
+        cx = rng.choice((0, w, rng.randint(0, w)))
+        cy = rng.choice((0, h, rng.randint(0, h)))
+        rows.append((w, h, cx, cy, rng.choice(_RULES), rng.choice(_RATIOS)))
+    return rows
+
+
+def test_column_window_geometry_matches_oracle(spark):
+    """The Column ``window_geometry`` (pinned to DuckDB by q13) equals the
+    oracle's rule_points → optimal_crop → apply_padding, which the doc
+    kernel runs: same crop rect, or null coords exactly where the oracle
+    finds a degenerate window. The ratio rides as a per-row aspect column
+    (null → canvas ratio), one geometry call per padding, one collect."""
+    from pyspark.sql import functions as F
+
+    from py_image_toolkit_spark.operators.select import window_geometry
+
+    rows = _geometry_rows()
+    df = spark.createDataFrame(
+        [(i, w, h, cx, cy, rule, G.parse_ratio(ratio))
+         for i, (w, h, cx, cy, rule, ratio) in enumerate(rows)],
+        "id long, canvas_w long, canvas_h long, cx long, cy long, "
+        "rule string, ratio double",
+    )
+    aspect = F.coalesce(
+        F.col("ratio"),
+        F.col("canvas_w").cast("double") / F.col("canvas_h").cast("double"),
+    )
+    crop = ["crop_x1", "crop_y1", "crop_x2", "crop_y2"]
+    out = None
+    for pad in _PADDINGS:
+        g = window_geometry(df, aspect, pad).select(
+            "id", F.lit(pad).alias("pad"), *crop
+        )
+        out = g if out is None else out.unionByName(g)
+    got = {(r["id"], r["pad"]): tuple(r[c] for c in crop) for r in out.collect()}
+    assert len(got) == len(rows) * len(_PADDINGS)
+
+    mismatches, degenerate, padded = [], 0, 0
+    for i, (w, h, cx, cy, rule, ratio) in enumerate(rows):
+        rect = G.optimal_crop(
+            w, h, (cx, cy), G.rule_points(w, h, rule), G.parse_ratio(ratio)
+        )
+        for pad in _PADDINGS:
+            want = (None,) * 4 if rect is None else G.apply_padding(rect, w, h, pad)
+            degenerate += rect is None
+            padded += rect is not None and want != rect
+            if got[(i, pad)] != want:
+                mismatches.append((w, h, cx, cy, rule, ratio, pad, got[(i, pad)], want))
+    assert not mismatches, f"{len(mismatches)} mismatches, e.g. {mismatches[:5]}"
+    # both the degenerate and the padding branches were exercised
+    assert degenerate and padded

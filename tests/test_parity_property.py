@@ -37,7 +37,6 @@ configs = st.builds(
                            ("mystery",), ("golden", "thirds", "mystery")]),
     ratio=st.sampled_from([None, "16:9", "1:1", "3.5", "100:1", "1:100", "0.2"]),
     padding_percent=st.sampled_from([0.0, 2.5, 5.5, 12.0, 45.0]),
-    extract_impl=st.sampled_from(["doc", "fused"]),
 )
 
 

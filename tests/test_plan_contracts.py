@@ -82,6 +82,7 @@ def test_jaccard_verify_semi_join_reduces(spark):
 
 def test_doc_pipeline_single_exchange_single_python_stage(spark, tmp_path):
     from py_image_toolkit_spark.fixtures import pages_df
+    from py_image_toolkit_spark.operators.doc_kernel import DOC_SCHEMA
     from py_image_toolkit_spark.plans.pipeline import extract
 
     # materialize the fixture so the pipeline input is a parquet SCAN (the
@@ -89,7 +90,11 @@ def test_doc_pipeline_single_exchange_single_python_stage(spark, tmp_path):
     # would double-count the Python stages
     src = str(tmp_path / "pages")
     pages_df(spark, 8).write.parquet(src)
-    plan = plan_of(extract(spark.read.parquet(src)))
+    out = extract(spark.read.parquet(src))
+    # output columns in kernel-schema order (q27's golden is written in
+    # this order)
+    assert out.columns == [f.name for f in DOC_SCHEMA.fields]
+    plan = plan_of(out)
     # the production plan: scan → ONE url repartition → ONE Arrow stage →
     # (no wide shuffle of document text anywhere)
     assert plan.count("Exchange") <= 1 + plan.count("AQEShuffleRead")
