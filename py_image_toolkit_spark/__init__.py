@@ -17,7 +17,7 @@ table:
   commit; skip-if-exists resume via anti-join.
 
 Because no extraction step crosses document boundaries, the whole
-per-document pipeline runs as ONE Arrow-batched ``mapInPandas`` stage
+per-document pipeline runs as ONE Arrow-batched ``mapInArrow`` stage
 (operators/doc_kernel.py, the only extraction path) — zero wide shuffles,
 measured scaling efficiency 0.822 local[4]→local[16]. That stage applies
 per-document Python inside the Arrow batches; the measured per-stage split

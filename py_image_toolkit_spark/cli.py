@@ -46,9 +46,11 @@ def _add_config_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--min-score", type=float, default=0.6)
     p.add_argument("--wrap-width", type=int, default=80)
     p.add_argument("--num-partitions", type=int, default=None,
-                   help="parse-stage parallelism (extract/resume default: "
-                        "defaultParallelism; bench default: 2x; 0 keeps the "
-                        "input partitioning)")
+                   help="parse-stage parallelism: n > 0 repartitions the "
+                        "input by url into n partitions (extract/resume "
+                        "default: keep the input partitioning; bench "
+                        "default: 2x defaultParallelism; 0 keeps the input "
+                        "partitioning)")
 
 
 def _config_from(args: argparse.Namespace):

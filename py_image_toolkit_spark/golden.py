@@ -19,6 +19,9 @@ import hashlib
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+
 GOLDEN_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".golden")
 
 _HTML_PRE = (
@@ -69,9 +72,6 @@ def _spans_json(spans: list[dict]) -> str:
 
 
 def build_q27_golden(sf_dir: str, out_path: str) -> None:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from py_image_toolkit_spark.oracle.extractor import extract_pages
 
     tbl = pq.read_table(
@@ -161,12 +161,10 @@ def ensure_q27_golden(sf_dir: str) -> str:
             if m.get("documents_md5") == fp and m.get("extractor_md5") == ver:
                 # sanity-check the artifact itself (a valid sidecar must
                 # not shield a truncated/corrupted parquet from rebuild)
-                import pyarrow.parquet as pq
-
                 pq.ParquetFile(path)
                 return path
-        except Exception:  # unreadable sidecar or corrupt parquet → rebuild
-            pass
+        except (OSError, ValueError, json.JSONDecodeError, pa.ArrowInvalid):
+            pass  # unreadable sidecar or corrupt parquet → rebuild
     build_q27_golden(sf_dir, path)
     with open(meta + ".tmp", "w") as f:
         json.dump({"documents_md5": fp, "extractor_md5": ver, "sf_dir": sf_dir}, f)

@@ -3,10 +3,17 @@
 The whole extraction (E1 decode → E2 segment/layout/select/window → H16 crop
 → E3 labeling) is per-document: no step needs data from any other url. The
 scale-correct Spark plan for such a pipeline is therefore a SINGLE Arrow
--batched stage — scan → [balance partitions] → mapInPandas → sink — with
+-batched stage — scan → [balance partitions] → mapInArrow → sink — with
 ZERO wide shuffles of document text. (Reference call graph: the batch driver
 runs resize→crop→ocr per file, resizes.py:135-171; this is the same shape,
-vectorized per partition.)
+vectorized per partition.) The kernel reads and writes Arrow record batches
+directly: ``url``/``html`` leave Arrow once per batch as Python lists,
+``warc_ts``/``lang`` are copied from the input batch with ``take``, and the
+output columns are built against the Arrow form of ``DOC_SCHEMA``.
+
+Lineage (J7): given an accumulator, every task reports its row, url and
+success counts plus its measured wall time, so a job gets per-partition
+lineage from the same pass that writes the records.
 
 This is the only extraction implementation. It applies the pure-Python
 oracle's per-document functions per partition, so byte parity holds by
@@ -21,11 +28,14 @@ undecodable/empty/degenerate inputs; a poisoned row can never fail the task.
 
 from __future__ import annotations
 
+import time
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
+from pyspark import Accumulator, AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, BooleanType, LongType, StringType, StructField, StructType,
     TimestampType,
@@ -69,20 +79,43 @@ DOC_SCHEMA = StructType(
 )
 
 _COLS = [f.name for f in DOC_SCHEMA.fields]
+_ARROW_SCHEMA = to_arrow_schema(DOC_SCHEMA)
+# copied from the input batch row for row; every other column is built
+# from the extraction records
+_COPIED = ("warc_ts", "lang")
 
 
-def _make_doc_kernel(cfg: ExtractConfig):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in _COLS}
-            for url, warc_ts, lang, html in zip(
-                pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["html"]
+class _LineageParam(AccumulatorParam):
+    """Per-partition lineage ``{partition id: (rows, distinct urls, ok,
+    wall_us)}`` merged by ``dict.update``: entries are keyed by partition,
+    so a retried task overwrites its own entry and is never counted twice."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, a: dict, b: dict) -> dict:
+        a.update(b)
+        return a
+
+
+def lineage_accumulator(sc) -> Accumulator:
+    """An empty accumulator for ``doc_extract_df(..., lineage=...)``."""
+    return sc.accumulator({}, _LineageParam())
+
+
+def _make_doc_kernel(cfg: ExtractConfig, lineage: Accumulator | None = None):
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        t_start = time.monotonic()
+        rows = ok = 0
+        urls: set = set()
+        for batch in batches:
+            out: dict[str, list] = {c: [] for c in _COLS if c not in _COPIED}
+            row_index: list[int] = []
+            for i, (url, html) in enumerate(
+                zip(batch.column("url").to_pylist(), batch.column("html").to_pylist())
             ):
-                ts = None if pd.isna(warc_ts) else warc_ts
-                lg = None if pd.isna(lang) else lang
-                html_b = bytes(html) if html is not None else None
                 try:
-                    recs = extract_document(url, html_b, cfg)
+                    recs = extract_document(url, html, cfg)
                 except Exception as e:  # noqa: BLE001 — J6 containment
                     recs = [
                         {
@@ -95,11 +128,28 @@ def _make_doc_kernel(cfg: ExtractConfig):
                         for r in cfg.rules
                     ]
                 for rec in recs:
-                    rec["warc_ts"] = ts
-                    rec["lang"] = lg
-                    for c in _COLS:
-                        out[c].append(rec[c])
-            yield pd.DataFrame(out)
+                    row_index.append(i)
+                    for c, vals in out.items():
+                        vals.append(rec[c])
+            take = pa.array(row_index, pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(f.name).take(take).cast(f.type)
+                    if f.name in _COPIED
+                    else pa.array(out[f.name], f.type)
+                    for f in _ARROW_SCHEMA
+                ],
+                schema=_ARROW_SCHEMA,
+            )
+            if lineage is not None:
+                rows += len(row_index)
+                ok += sum(out["success"])
+                urls.update(out["url"])
+        if rows:
+            wall_us = int((time.monotonic() - t_start) * 1_000_000)
+            lineage.add(
+                {TaskContext.get().partitionId(): (rows, len(urls), ok, wall_us)}
+            )
 
     return run
 
@@ -108,6 +158,7 @@ def doc_extract_df(
     pages: DataFrame,
     cfg: ExtractConfig | None = None,
     num_partitions: int | None = None,
+    lineage: Accumulator | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, lang, …) → complete extraction records
     (success AND typed failure rows) in ``DOC_SCHEMA`` column order, one
@@ -122,7 +173,12 @@ def doc_extract_df(
       otherwise the input is repartitioned by url into
       ``2 × defaultParallelism`` partitions.
     - ``n > 0``: always repartition by url into ``n`` partitions.
-    - ``0``: keep the input partitioning as is."""
+    - ``0``: keep the input partitioning as is.
+
+    ``lineage`` (from ``lineage_accumulator``): each task that produced rows
+    adds ``{partition id: (rows, distinct urls, ok, wall_us)}`` to it, where
+    ``wall_us`` is the task's measured kernel time. The entries appear once
+    an action over the result has run."""
     from pyspark.sql import functions as F
 
     cfg = cfg or ExtractConfig()
@@ -157,6 +213,6 @@ def doc_extract_df(
             # coalesce merges scan splits without moving any bytes
             if scan_parts > dp:
                 src = src.coalesce(dp)
-            return src.mapInPandas(_make_doc_kernel(cfg), DOC_SCHEMA)
+            return src.mapInArrow(_make_doc_kernel(cfg, lineage), DOC_SCHEMA)
         src = src.repartition(n, F.col("url"))
-    return src.mapInPandas(_make_doc_kernel(cfg), DOC_SCHEMA)
+    return src.mapInArrow(_make_doc_kernel(cfg, lineage), DOC_SCHEMA)

@@ -1,17 +1,21 @@
 """Job orchestration: the Spark recast of the reference's batch drivers
 (SURVEY.md §3.1 step mapping).
 
-    scan → content filter → RESUME anti-join → repartition(url-hash, salted)
-    → extract() (one Arrow stage) → observe counters → snapshot commit
-    → lineage rows
+    scan → RESUME anti-join → extract() (one Arrow stage, lineage
+    accumulator) → write commit dir → publish snapshot → lineage rows
+
+One Spark job runs the kernel: the output write. Everything else the run
+reports comes from what that job's tasks put in the lineage accumulator.
 
 - resume: left-anti join of the input against the committed output snapshot
   (≙ skip-if-exists, reference resize.py:158-162 — but gated *before* any
   work, fixing crop.py's detect-before-gate inefficiency, SURVEY.md §4.2.4)
-- repartition by xxhash64(url): explicit hot-path partitioning (north rule);
-  a crashed run leaves no visible rows (manifest commit is atomic)
+- the kernel reads straight off the scan (or the anti-join); an explicit
+  ``num_partitions`` repartitions by url first. A crashed run leaves no
+  visible rows (the manifest publish is atomic), and a run with nothing to
+  do discards its empty commit dir and publishes no snapshot
 - lineage: one row per task partition in the runs table (docs in/ok/failed,
-  wall time), ≙ the reference's per-run counters (D7/J7)
+  measured wall time), ≙ the reference's per-run counters (D7/J7)
 - salting: two-stage aggregation helper for skewed keys (hot hosts)
 """
 
@@ -19,19 +23,30 @@ from __future__ import annotations
 
 import time
 
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from py_image_toolkit_spark.config import ExtractConfig
+from py_image_toolkit_spark.operators.doc_kernel import lineage_accumulator
 from py_image_toolkit_spark.plans.pipeline import extract
 from py_image_toolkit_spark.sources.tables import SnapshotTable
 
-
-def repartition_by_url(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Explicit hot-path partitioning on the url column — uniform regardless
-    of host skew because the key is the full url, not the host; plain
-    HashPartitioning(url) so downstream url-keyed aggs/joins reuse it."""
-    return df.repartition(num_partitions, F.col("url"))
+# runs-table rows: one per task partition of a run
+_RUNS_SCHEMA = pa.schema(
+    [
+        ("partition_id", pa.int32()),
+        ("rows_out", pa.int64()),
+        ("docs_in", pa.int64()),
+        ("rows_ok", pa.int64()),
+        ("rows_failed", pa.int64()),
+        ("wall_us", pa.int64()),
+        ("run_id", pa.string()),
+        ("snapshot_id", pa.int32()),
+        ("job_wall_ms", pa.int32()),
+    ]
+)
 
 
 def salted_two_stage_agg(
@@ -86,11 +101,13 @@ def run_extraction_job(
     run_id: str | None = None,
     num_partitions: int | None = None,
 ) -> dict:
-    """One resumable job run. Returns the run summary (counters ≙ D7)."""
+    """One resumable job run. Returns the run summary (counters ≙ D7).
+
+    ``num_partitions``: ``None`` or ``0`` keeps the partitioning of the scan
+    (or of the resume anti-join); ``n > 0`` repartitions by url into ``n``
+    partitions first."""
     cfg = cfg or ExtractConfig()
     run_id = run_id or f"run-{int(time.time() * 1000)}"
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
 
     t0 = time.time()
     done = out_table.read(spark)
@@ -98,87 +115,50 @@ def run_extraction_job(
     if done is not None:
         # resume: anything already committed is skipped before ANY work
         todo = pages.join(done.select("url").distinct(), "url", "left_anti")
-    if num_partitions != 0:  # 0 = keep the input partitioning (CLI contract)
-        todo = repartition_by_url(todo, num_partitions)
 
-    result = extract(todo, cfg, num_partitions=0)
+    # the output write is the only action over the kernel; the same tasks
+    # report their per-partition lineage (J7) through the accumulator, with
+    # wall_us the measured kernel time of that partition
+    lineage = lineage_accumulator(spark.sparkContext)
+    result = extract(todo, cfg, num_partitions=num_partitions or 0, lineage=lineage)
+    commit = out_table.write(result)
 
-    # per-partition lineage (J7): counters AND a MEASURED per-partition
-    # elapsed. The counting pass runs as a mapInPandas over the persisted-
-    # but-not-yet-materialized result, so the first (collecting) action
-    # computes each partition's extraction inside the very task that times
-    # it — wall_us is the real compute-and-cache time of that partition,
-    # not a job-level constant stamped on every row (round-3 verdict #7).
-    # Only metadata columns (url, success) cross into Python; one output
-    # row per non-empty partition.
-    result = result.persist()
-    lin_schema = (
-        "partition_id int, rows_out long, docs_in long, rows_ok long, "
-        "rows_failed long, wall_us long"
-    )
-
-    def _lineage_gen(batches):
-        import pandas as pd  # noqa: PLC0415 — worker-side import
-
-        t_start = time.monotonic()
-        pid, rows, ok = -1, 0, 0
-        urls: set = set()
-        for pdf in batches:
-            if len(pdf):
-                pid = int(pdf["_pid"].iloc[0])
-                rows += len(pdf)
-                ok += int(pdf["success"].sum())
-                urls.update(pdf["url"])
-        if rows:
-            yield pd.DataFrame(
-                [
-                    {
-                        "partition_id": pid,
-                        "rows_out": rows,
-                        "docs_in": len(urls),
-                        "rows_ok": ok,
-                        "rows_failed": rows - ok,
-                        "wall_us": int((time.monotonic() - t_start) * 1_000_000),
-                    }
-                ]
-            )
-
-    lineage_rows = (
-        result.select("url", "success", F.spark_partition_id().alias("_pid"))
-        .mapInPandas(_lineage_gen, lin_schema)
-        .collect()
-    )
-    # re-materialize from the COLLECTED rows: running the lazy lineage plan
-    # a second time (for the runs-table append) would re-measure a warm
-    # cache scan and overwrite the real timings
-    lineage = spark.createDataFrame(lineage_rows, lin_schema).withColumn(
-        "run_id", F.lit(run_id)
-    )
-
-    n_rows = sum(r["rows_out"] for r in lineage_rows)
+    lineage_rows = [
+        {
+            "partition_id": pid, "rows_out": rows, "docs_in": docs,
+            "rows_ok": ok, "rows_failed": rows - ok, "wall_us": wall_us,
+        }
+        for pid, (rows, docs, ok, wall_us) in sorted(lineage.value.items())
+    ]
     summary = {
         "run_id": run_id,
-        "rows_out": int(n_rows),
-        "docs_in": int(sum(r["docs_in"] for r in lineage_rows)),
-        "rows_ok": int(sum(r["rows_ok"] for r in lineage_rows)),
-        "rows_failed": int(sum(r["rows_failed"] for r in lineage_rows)),
+        **{
+            k: sum(r[k] for r in lineage_rows)
+            for k in ("rows_out", "docs_in", "rows_ok", "rows_failed")
+        },
         "wall_s": None,  # filled after commit
     }
 
-    if n_rows > 0:
-        snapshot_id = out_table.append(result, run_id=run_id, meta=summary)
-        runs_table.append(
-            lineage.withColumn("snapshot_id", F.lit(snapshot_id)).withColumn(
-                # job-level wall clock (one value per run, distinct from the
-                # measured per-partition wall_us)
-                "job_wall_ms",
-                F.lit(int((time.time() - t0) * 1000)),
-            ),
-            run_id=run_id,
+    if summary["rows_out"] > 0:
+        snapshot_id = out_table.publish(
+            commit, result.schema, run_id=run_id, meta=summary
         )
+        # job-level wall clock (one value per run, distinct from the
+        # measured per-partition wall_us)
+        job_wall_ms = int((time.time() - t0) * 1000)
+        runs = pa.Table.from_pylist(
+            [
+                {**r, "run_id": run_id, "snapshot_id": snapshot_id,
+                 "job_wall_ms": job_wall_ms}
+                for r in lineage_rows
+            ],
+            schema=_RUNS_SCHEMA,
+        )
+        # a handful of rows per run: one file per commit, not one per core
+        runs_table.append(spark.createDataFrame(runs).coalesce(1), run_id=run_id)
         summary["snapshot_id"] = snapshot_id
     else:
+        out_table.discard(commit)
         summary["snapshot_id"] = None
-    result.unpersist()
     summary["wall_s"] = time.time() - t0
     return summary

@@ -3,7 +3,7 @@
 Equivalent of the reference's batch-driver call graph (SURVEY.md §3.2 Spark
 recast). No extraction step crosses document boundaries, so the whole E1→E3
 pipeline runs as ONE Arrow-batched stage over the page table — scan →
-[balance partitions] → mapInPandas → sink — with per-row error containment
+[balance partitions] → mapInArrow → sink — with per-row error containment
 (J6): a failed document yields typed status rows, never a task failure
 (operators/doc_kernel.py).
 

@@ -78,7 +78,8 @@ def build_session(
         "spark.sql.autoBroadcastJoinThreshold": os.environ.get(
             "SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"
         ),
-        # Arrow for pandas UDF / mapInPandas stages (the E1/E2 parse kernels).
+        # Arrow for pandas conversions; the Python stages (the mapInArrow doc
+        # kernel, pandas UDFs) exchange Arrow batches of maxRecordsPerBatch.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": str(DEFAULT_ARROW_BATCH),
         # Parquet writes: zstd ≙ the reference's per-format quality knobs

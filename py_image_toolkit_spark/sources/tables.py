@@ -10,7 +10,9 @@ jar, so the same API is provided over a manifest-committed parquet layout:
 Readers resolve the highest manifest and read exactly the data directories
 it lists — a crashed job's orphan directory is invisible (≙ the reference's
 partial-output cleanup, resize.py:134-140, but free by construction: A9).
-Appends are atomic: data lands first, the manifest rename publishes it.
+Appends are atomic: data lands first (``write``), the manifest rename
+publishes it (``publish``); ``append`` does both, and a writer that decides
+after landing its data not to publish it calls ``discard``.
 
 On a real cluster with iceberg-spark-runtime on the classpath, swap
 ``SnapshotTable`` for ``df.writeTo(table).append()`` — the pipeline code
@@ -22,11 +24,13 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from datetime import timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _MANIFEST_RE = re.compile(r"manifest-(\d+)\.json$")
 
@@ -153,6 +157,49 @@ class SnapshotTable:
     ) -> int:
         """Write df to a fresh commit directory, then publish it with an
         optimistic-concurrency manifest commit. Returns the new snapshot id.
+        ``write`` + ``publish`` in one call; see them for the arguments."""
+        return self.publish(
+            self.write(df, encode),
+            df.schema,
+            run_id=run_id,
+            meta=meta,
+            stats_cols=stats_cols,
+            replace=replace,
+            require_base_snapshot=require_base_snapshot,
+        )
+
+    def write(self, df: DataFrame, encode: "EncodeOptions | None" = None) -> str:
+        """Land df's data in a fresh commit directory, invisible to readers
+        until ``publish``. Returns the commit (the directory's name under
+        ``data/``); pass it to ``publish`` or ``discard``.
+
+        ``encode`` routes through the E4 per-format options dispatch
+        (operators/encode.py ≙ reference optimize.py:39-53)."""
+        from py_image_toolkit_spark.operators.encode import encoded_writer
+
+        commit = f"commit-{uuid.uuid4().hex[:12]}"
+        encoded_writer(df, "parquet", encode).mode("errorifexists").save(
+            os.path.join(self.data_dir, commit)
+        )
+        return commit
+
+    def discard(self, commit: str) -> None:
+        """Delete an unpublished commit directory."""
+        shutil.rmtree(os.path.join(self.data_dir, commit))
+
+    def publish(
+        self,
+        commit: str,
+        schema: StructType,
+        run_id: str | None = None,
+        meta: dict | None = None,
+        stats_cols: tuple[str, ...] = (),
+        replace: bool = False,
+        require_base_snapshot: int | None = None,
+    ) -> int:
+        """Publish a commit from ``write`` (whose data has ``schema``) with
+        an optimistic-concurrency manifest commit. Returns the new snapshot
+        id.
 
         Concurrency (Iceberg-style optimistic commit): the manifest file is
         created with O_EXCL — if another writer committed the same snapshot
@@ -160,9 +207,6 @@ class SnapshotTable:
         commit retries with the next id. Without this, two concurrent appends
         could both read the same latest manifest and the second rename would
         silently drop the first commit's data directory from the lineage.
-
-        ``encode`` routes through the E4 per-format options dispatch
-        (operators/encode.py ≙ reference optimize.py:39-53).
 
         ``stats_cols``: record per-commit min/max for these columns in the
         manifest (Iceberg-style data-file stats). ``read(where=...)`` uses
@@ -174,15 +218,9 @@ class SnapshotTable:
         keeps its commits conservatively. Parquet may store truncated bounds
         for long binary values — still valid (loose) bounds, so pruning
         stays conservative."""
-        from py_image_toolkit_spark.operators.encode import encoded_writer
-
-        token = uuid.uuid4().hex[:12]
-        commit_dir = os.path.join(self.data_dir, f"commit-{token}")
-        encoded_writer(df, "parquet", encode).mode("errorifexists").save(commit_dir)
-
         stats: dict[str, list] = {}
         if stats_cols:
-            stats = _footer_stats(commit_dir, stats_cols)
+            stats = _footer_stats(os.path.join(self.data_dir, commit), stats_cols)
 
         while True:
             prev = self.latest_snapshot()
@@ -200,24 +238,24 @@ class SnapshotTable:
             if replace:
                 # replacing commit (compaction): the new lineage is exactly
                 # this commit; prior directories stay on disk for time travel
-                dirs = [f"commit-{token}"]
+                dirs = [commit]
                 commit_stats = {}
                 commit_schemas = {}
             else:
-                dirs = (prev["data_dirs"] if prev else []) + [f"commit-{token}"]
+                dirs = (prev["data_dirs"] if prev else []) + [commit]
                 commit_stats = dict(prev.get("commit_stats", {})) if prev else {}
                 commit_schemas = dict(prev.get("commit_schemas", {})) if prev else {}
             if stats:
-                commit_stats[f"commit-{token}"] = stats
+                commit_stats[commit] = stats
             # per-commit column sets (manifest-only): lets read() detect a
             # heterogeneous lineage without touching any file footer
-            commit_schemas[f"commit-{token}"] = list(df.schema.names)
+            commit_schemas[commit] = list(schema.names)
             manifest = {
                 "snapshot_id": snapshot_id,
                 "data_dirs": dirs,
                 "run_id": run_id,
                 "committed_at": time.time(),
-                "schema": df.schema.jsonValue(),
+                "schema": schema.jsonValue(),
                 "meta": meta or {},
                 "commit_stats": commit_stats,
                 "commit_schemas": commit_schemas,
@@ -227,7 +265,7 @@ class SnapshotTable:
             # (no partially-written manifest is ever visible) AND fails with
             # EEXIST if a concurrent writer already claimed this id
             tmp = os.path.join(
-                self.snap_dir, f".manifest-{snapshot_id}.json.{token}.tmp"
+                self.snap_dir, f".manifest-{snapshot_id}.json.{commit}.tmp"
             )
             with open(tmp, "w") as fh:
                 json.dump(manifest, fh)

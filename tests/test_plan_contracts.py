@@ -98,8 +98,47 @@ def test_doc_pipeline_single_exchange_single_python_stage(spark, tmp_path):
     # the production plan: scan → ONE url repartition → ONE Arrow stage →
     # (no wide shuffle of document text anywhere)
     assert plan.count("Exchange") <= 1 + plan.count("AQEShuffleRead")
-    assert plan.count("MapInPandas") + plan.count("ArrowEvalPython") == 1
+    assert (
+        plan.count("MapInPandas") + plan.count("MapInArrow")
+        + plan.count("ArrowEvalPython")
+    ) == 1
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+
+
+def test_extraction_job_one_kernel_pass(spark, tmp_path):
+    """A fresh-table run_extraction_job call runs the kernel once: the
+    output write is its only action over the kernel, and the lineage comes
+    from that same pass, so the call is at most 2 Spark jobs (the output
+    write and the runs-table commit). A persist/collect pass over the
+    kernel output, or a second look at it, would add jobs."""
+    from py_image_toolkit_spark.fixtures import pages_df
+    from py_image_toolkit_spark.plans.job import run_extraction_job
+    from py_image_toolkit_spark.plans.pipeline import extract
+    from py_image_toolkit_spark.sources.tables import SnapshotTable
+
+    src = str(tmp_path / "pages")
+    pages_df(spark, 40).write.parquet(src)
+    # read (and resolve the schema) before the job group is set
+    pages = spark.read.parquet(src)
+
+    # the extraction as the job plans it: straight off the scan
+    plan = plan_of(extract(pages, num_partitions=0))
+    assert "Exchange" not in plan
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+
+    sc = spark.sparkContext
+    group = f"one-kernel-pass-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        s = run_extraction_job(
+            spark, pages,
+            SnapshotTable(str(tmp_path / "out")), SnapshotTable(str(tmp_path / "runs")),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert s["docs_in"] == 40 and s["snapshot_id"] == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
 def test_canonical_dedup_single_aggregation_shuffle(spark):

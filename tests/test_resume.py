@@ -52,6 +52,8 @@ def test_kill_and_resume_converges(spark, tmp_path):
     s3 = run_extraction_job(spark, pages, part_out, part_runs, CFG, run_id="r3")
     assert s3["rows_out"] == 0 and s3["snapshot_id"] is None
     assert part_out.snapshot_ids() == [1, 2]
+    # ... and its empty commit dir was discarded
+    assert len(os.listdir(part_out.data_dir)) == 2
 
 
 def test_orphan_commit_dir_is_invisible(spark, tmp_path):
@@ -76,15 +78,38 @@ def test_lineage_rows_cover_all_docs(spark, tmp_path):
         F.sum("rows_failed").alias("failed"),
     ).collect()[0]
     assert agg["rows"] == 60 and agg["ok"] + agg["failed"] == 60
-    assert {"partition_id", "run_id", "snapshot_id", "wall_us", "job_wall_ms"} <= set(
-        lin.columns
-    )
+    # the column types runs tables have always had, so tables written before
+    # and after a change of how the rows are built stay readable together
+    assert lin.dtypes == [
+        ("partition_id", "int"),
+        ("rows_out", "bigint"),
+        ("docs_in", "bigint"),
+        ("rows_ok", "bigint"),
+        ("rows_failed", "bigint"),
+        ("wall_us", "bigint"),
+        ("run_id", "string"),
+        ("snapshot_id", "int"),
+        ("job_wall_ms", "int"),
+    ]
     # per-partition elapsed is MEASURED (round-3 verdict #7), not a job-level
     # literal: every value positive, and values differ across partitions
     # (µs resolution makes collisions vanishingly unlikely)
     walls = [r["wall_us"] for r in lin.select("wall_us").collect()]
     assert min(walls) > 0
     assert len(walls) == 1 or len(set(walls)) >= 2
+
+
+def test_lineage_accumulator_overwrites_a_readded_partition():
+    """Lineage entries are keyed by partition id: a retried task re-adds
+    its partition and must replace, not add to, the first attempt's entry."""
+    from py_image_toolkit_spark.operators.doc_kernel import _LineageParam
+
+    param = _LineageParam()
+    acc = param.zero({})
+    acc = param.addInPlace(acc, {0: (4, 2, 4, 10)})
+    acc = param.addInPlace(acc, {1: (2, 1, 1, 7)})
+    acc = param.addInPlace(acc, {0: (4, 2, 3, 12)})  # task 0 retried
+    assert acc == {0: (4, 2, 3, 12), 1: (2, 1, 1, 7)}
 
 
 def test_snapshot_diff_incremental_read(spark, tmp_path):
