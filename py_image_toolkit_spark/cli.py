@@ -47,10 +47,11 @@ def _add_config_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--wrap-width", type=int, default=80)
     p.add_argument("--num-partitions", type=int, default=None,
                    help="parse-stage parallelism: n > 0 repartitions the "
-                        "input by url into n partitions (extract/resume "
-                        "default: keep the input partitioning; bench "
-                        "default: 2x defaultParallelism; 0 keeps the input "
-                        "partitioning)")
+                        "input by url into n partitions; 0 keeps the input "
+                        "partitioning (default: keep the input's splits "
+                        "when there are at least defaultParallelism of "
+                        "them, else repartition by url into 2x "
+                        "defaultParallelism)")
 
 
 def _config_from(args: argparse.Namespace):

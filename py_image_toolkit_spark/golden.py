@@ -163,8 +163,10 @@ def ensure_q27_golden(sf_dir: str) -> str:
                 # not shield a truncated/corrupted parquet from rebuild)
                 pq.ParquetFile(path)
                 return path
-        except (OSError, ValueError, json.JSONDecodeError, pa.ArrowInvalid):
-            pass  # unreadable sidecar or corrupt parquet → rebuild
+        except (OSError, ValueError, AttributeError):
+            # unreadable or non-object sidecar, corrupt parquet → rebuild
+            # (json.JSONDecodeError and pa.ArrowInvalid are ValueErrors)
+            pass
     build_q27_golden(sf_dir, path)
     with open(meta + ".tmp", "w") as f:
         json.dump({"documents_md5": fp, "extractor_md5": ver, "sf_dir": sf_dir}, f)

@@ -11,9 +11,9 @@ directly: ``url``/``html`` leave Arrow once per batch as Python lists,
 ``warc_ts``/``lang`` are copied from the input batch with ``take``, and the
 output columns are built against the Arrow form of ``DOC_SCHEMA``.
 
-Lineage (J7): given an accumulator, every task reports its row, url and
-success counts plus its measured wall time, so a job gets per-partition
-lineage from the same pass that writes the records.
+Lineage (J7): given an accumulator, every task reports its output row,
+input document and success counts plus its measured wall time, so a job
+gets per-partition lineage from the same pass that writes the records.
 
 This is the only extraction implementation. It applies the pure-Python
 oracle's per-document functions per partition, so byte parity holds by
@@ -86,9 +86,9 @@ _COPIED = ("warc_ts", "lang")
 
 
 class _LineageParam(AccumulatorParam):
-    """Per-partition lineage ``{partition id: (rows, distinct urls, ok,
-    wall_us)}`` merged by ``dict.update``: entries are keyed by partition,
-    so a retried task overwrites its own entry and is never counted twice."""
+    """Per-partition lineage ``{partition id: (rows, docs, ok, wall_us)}``
+    merged by ``dict.update``: entries are keyed by partition, so a retried
+    task overwrites its own entry and is never counted twice."""
 
     def zero(self, value: dict) -> dict:
         return {}
@@ -106,8 +106,7 @@ def lineage_accumulator(sc) -> Accumulator:
 def _make_doc_kernel(cfg: ExtractConfig, lineage: Accumulator | None = None):
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t_start = time.monotonic()
-        rows = ok = 0
-        urls: set = set()
+        rows = docs = ok = 0
         for batch in batches:
             out: dict[str, list] = {c: [] for c in _COLS if c not in _COPIED}
             row_index: list[int] = []
@@ -143,12 +142,12 @@ def _make_doc_kernel(cfg: ExtractConfig, lineage: Accumulator | None = None):
             )
             if lineage is not None:
                 rows += len(row_index)
+                docs += batch.num_rows
                 ok += sum(out["success"])
-                urls.update(out["url"])
         if rows:
             wall_us = int((time.monotonic() - t_start) * 1_000_000)
             lineage.add(
-                {TaskContext.get().partitionId(): (rows, len(urls), ok, wall_us)}
+                {TaskContext.get().partitionId(): (rows, docs, ok, wall_us)}
             )
 
     return run
@@ -176,8 +175,10 @@ def doc_extract_df(
     - ``0``: keep the input partitioning as is.
 
     ``lineage`` (from ``lineage_accumulator``): each task that produced rows
-    adds ``{partition id: (rows, distinct urls, ok, wall_us)}`` to it, where
-    ``wall_us`` is the task's measured kernel time. The entries appear once
+    adds ``{partition id: (rows, docs, ok, wall_us)}`` to it, where ``docs``
+    counts the input documents (rows) the task read, independent of how the
+    input is partitioned, and ``wall_us`` is the task's measured kernel
+    time. The entries appear once
     an action over the result has run."""
     from pyspark.sql import functions as F
 

@@ -10,10 +10,14 @@ reports comes from what that job's tasks put in the lineage accumulator.
 - resume: left-anti join of the input against the committed output snapshot
   (≙ skip-if-exists, reference resize.py:158-162 — but gated *before* any
   work, fixing crop.py's detect-before-gate inefficiency, SURVEY.md §4.2.4)
-- the kernel reads straight off the scan (or the anti-join); an explicit
-  ``num_partitions`` repartitions by url first. A crashed run leaves no
-  visible rows (the manifest publish is atomic), and a run with nothing to
-  do discards its empty commit dir and publishes no snapshot
+- the kernel reads straight off the scan (or the anti-join) when that
+  already has at least ``defaultParallelism`` splits; fewer splits, or an
+  explicit ``num_partitions``, are repartitioned by url first (``extract``'s
+  rule), so the CPU-bound parse never runs on fewer tasks than cores
+- a resume with nothing left to do stops after a url-only anti-join: no
+  html is read, no commit dir is made, no snapshot is published. A run
+  whose kernel output is empty anyway discards its commit dir. A crashed
+  run leaves no visible rows (the manifest publish is atomic)
 - lineage: one row per task partition in the runs table (docs in/ok/failed,
   measured wall time), ≙ the reference's per-run counters (D7/J7)
 - salting: two-stage aggregation helper for skewed keys (hot hosts)
@@ -103,9 +107,10 @@ def run_extraction_job(
 ) -> dict:
     """One resumable job run. Returns the run summary (counters ≙ D7).
 
-    ``num_partitions``: ``None`` or ``0`` keeps the partitioning of the scan
-    (or of the resume anti-join); ``n > 0`` repartitions by url into ``n``
-    partitions first."""
+    ``num_partitions`` is ``extract``'s: ``None`` keeps the input's
+    partitioning when it already has at least ``defaultParallelism`` splits
+    and repartitions by url otherwise; ``n > 0`` always repartitions by url
+    into ``n`` partitions; ``0`` keeps the input partitioning as is."""
     cfg = cfg or ExtractConfig()
     run_id = run_id or f"run-{int(time.time() * 1000)}"
 
@@ -113,15 +118,20 @@ def run_extraction_job(
     done = out_table.read(spark)
     todo = pages
     if done is not None:
-        # resume: anything already committed is skipped before ANY work
-        todo = pages.join(done.select("url").distinct(), "url", "left_anti")
+        # resume: anything already committed is skipped before ANY work (an
+        # anti-join needs no distinct build side)
+        todo = pages.join(done.select("url"), "url", "left_anti")
 
     # the output write is the only action over the kernel; the same tasks
     # report their per-partition lineage (J7) through the accumulator, with
     # wall_us the measured kernel time of that partition
     lineage = lineage_accumulator(spark.sparkContext)
-    result = extract(todo, cfg, num_partitions=num_partitions or 0, lineage=lineage)
-    commit = out_table.write(result)
+    commit = None
+    # a resume with nothing left to do finds out from the url column alone,
+    # before any html is read or any commit dir is made
+    if done is None or not todo.select("url").isEmpty():
+        result = extract(todo, cfg, num_partitions=num_partitions, lineage=lineage)
+        commit = out_table.write(result)
 
     lineage_rows = [
         {
@@ -158,7 +168,8 @@ def run_extraction_job(
         runs_table.append(spark.createDataFrame(runs).coalesce(1), run_id=run_id)
         summary["snapshot_id"] = snapshot_id
     else:
-        out_table.discard(commit)
+        if commit is not None:
+            out_table.discard(commit)
         summary["snapshot_id"] = None
     summary["wall_s"] = time.time() - t0
     return summary

@@ -121,8 +121,9 @@ def test_extraction_job_one_kernel_pass(spark, tmp_path):
     # read (and resolve the schema) before the job group is set
     pages = spark.read.parquet(src)
 
-    # the extraction as the job plans it: straight off the scan
-    plan = plan_of(extract(pages, num_partitions=0))
+    # the extraction as the job plans it: one split per core, so straight
+    # off the scan
+    plan = plan_of(extract(pages))
     assert "Exchange" not in plan
     assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
 
@@ -139,6 +140,24 @@ def test_extraction_job_one_kernel_pass(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert s["docs_in"] == 40 and s["snapshot_id"] == 1
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_extraction_job_balances_a_single_split_input(spark, tmp_path):
+    """An input with fewer splits than cores is repartitioned by url before
+    the CPU-bound parse, so more than one task runs the kernel: the runs
+    table gets one lineage row per task that wrote rows."""
+    from py_image_toolkit_spark.fixtures import pages_df
+    from py_image_toolkit_spark.plans.job import run_extraction_job
+    from py_image_toolkit_spark.sources.tables import SnapshotTable
+
+    src = str(tmp_path / "pages")
+    pages_df(spark, 40, partitions=1).write.parquet(src)
+    pages = spark.read.parquet(src)
+    assert pages.rdd.getNumPartitions() == 1
+    runs = SnapshotTable(str(tmp_path / "runs"))
+    s = run_extraction_job(spark, pages, SnapshotTable(str(tmp_path / "out")), runs)
+    assert s["docs_in"] == 40
+    assert runs.read(spark).count() > 1
 
 
 def test_canonical_dedup_single_aggregation_shuffle(spark):

@@ -52,8 +52,17 @@ def test_kill_and_resume_converges(spark, tmp_path):
     s3 = run_extraction_job(spark, pages, part_out, part_runs, CFG, run_id="r3")
     assert s3["rows_out"] == 0 and s3["snapshot_id"] is None
     assert part_out.snapshot_ids() == [1, 2]
-    # ... and its empty commit dir was discarded
+    # ... and it left no commit dir behind
     assert len(os.listdir(part_out.data_dir)) == 2
+
+
+def test_empty_run_discards_its_commit(spark, tmp_path):
+    """A run whose kernel output is empty (here: an empty input into a
+    fresh table) discards its commit dir and publishes no snapshot."""
+    out, runs = _tables(tmp_path, "empty")
+    s = run_extraction_job(spark, pages_df(spark, 4).limit(0), out, runs, CFG)
+    assert s["rows_out"] == 0 and s["snapshot_id"] is None
+    assert out.snapshot_ids() == [] and os.listdir(out.data_dir) == []
 
 
 def test_orphan_commit_dir_is_invisible(spark, tmp_path):
