@@ -7,7 +7,8 @@ so numbers are comparable, but adds:
 
   - plan capture:    python bench_extra.py plans [out_dir] [names...]
   - per-query bench: python bench_extra.py time [trials] [names...]
-  - extract bench:   python bench_extra.py extract [trials]
+
+The extraction pipeline is timed by bench.py's ``extract_pipeline`` leaf.
 
 Env: $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), $SPARK_GRAFT_CPUS.
 """
@@ -16,30 +17,14 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import BENCH_QUERIES  # noqa: E402
 from py_image_toolkit_spark import contract  # noqa: E402
-from py_image_toolkit_spark.config import ExtractConfig  # noqa: E402
-from py_image_toolkit_spark.fixtures import pages_df  # noqa: E402
-from py_image_toolkit_spark.plans.pipeline import extract  # noqa: E402
 from py_image_toolkit_spark.session import build_session  # noqa: E402
-
-BENCH_QUERIES = [
-    "q01_pricing_summary",
-    "q02_revenue_by_nation",
-    "q06_sessionize_rle",
-    "q09_topk_per_brand",
-    "q17_merge_pivot",
-    "q19_ngram_jaccard",
-    "q20_minhash_lsh",
-    "q22_ann_cosine_topk",
-    "q25_quality_score",
-]
 
 
 def _session():
@@ -111,47 +96,16 @@ def cmd_time(trials: int, names: list[str]) -> None:
     spark.stop()
 
 
-def cmd_extract(trials: int) -> None:
-    spark = _session()
-    sf = 0.1
-    base = os.path.basename(_sf_dir().rstrip("/"))
-    try:
-        sf = float(base.replace("sf", ""))
-    except ValueError:
-        pass
-    n_docs = max(200, int(sf * 200_000))
-    sink = tempfile.mkdtemp(prefix="bench_extra_sink_")
-    samples = []
-    try:
-        pages_path = os.path.join(sink, "pages")
-        pages_df(spark, n_docs, partitions=64).write.mode("overwrite").parquet(
-            pages_path
-        )
-        pages = spark.read.parquet(pages_path)
-        for _ in range(trials):
-            spark.sparkContext.setJobDescription("extract_pipeline")
-            t0 = time.time()
-            extract(pages, ExtractConfig()).write.mode("overwrite").parquet(
-                os.path.join(sink, "extractions")
-            )
-            samples.append(round(time.time() - t0, 3))
-    finally:
-        shutil.rmtree(sink, ignore_errors=True)
-    print(json.dumps({"extract_pipeline": {"min": min(samples), "samples": samples},
-                      "n_docs": n_docs}))
-    spark.stop()
-
-
 def main() -> None:
     cmd = sys.argv[1] if len(sys.argv) > 1 else "time"
     if cmd == "plans":
         out_dir = sys.argv[2] if len(sys.argv) > 2 else "plans/r06"
         cmd_plans(out_dir, sys.argv[3:])
-    elif cmd == "extract":
-        cmd_extract(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
-    else:
+    elif cmd == "time":
         trials = int(sys.argv[2]) if len(sys.argv) > 2 else 3
         cmd_time(trials, sys.argv[3:])
+    else:
+        sys.exit(f"unknown command {cmd!r} (plans | time)")
 
 
 if __name__ == "__main__":

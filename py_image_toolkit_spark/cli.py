@@ -6,7 +6,7 @@ summary + per-item error report. Deployment shape per the north rule:
 
     spark-submit --py-files pyimgtk_spark.zip job.py extract \\
         --input /data/pages --output /data/extractions \\
-        --runs /data/runs --rules thirds golden --num-partitions 2048
+        --runs /data/runs --rules thirds golden
 
 Subcommands:
     extract   one resumable extraction run over a pages table
@@ -45,13 +45,6 @@ def _add_config_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--padding-percent", type=float, default=0.0)
     p.add_argument("--min-score", type=float, default=0.6)
     p.add_argument("--wrap-width", type=int, default=80)
-    p.add_argument("--num-partitions", type=int, default=None,
-                   help="parse-stage parallelism: n > 0 repartitions the "
-                        "input by url into n partitions; 0 keeps the input "
-                        "partitioning (default: keep the input's splits "
-                        "when there are at least defaultParallelism of "
-                        "them, else repartition by url into 2x "
-                        "defaultParallelism)")
 
 
 def _config_from(args: argparse.Namespace):
@@ -116,7 +109,6 @@ def cmd_extract(args: argparse.Namespace) -> int:
     summary = run_extraction_job(
         spark, pages, out_table, runs_table,
         cfg=_config_from(args), run_id=args.run_id,
-        num_partitions=args.num_partitions,
     )
     # counter summary + error count ≙ the reference driver's end-of-run
     # report (resizes.py:108-131)
@@ -137,8 +129,9 @@ def cmd_bench(args: argparse.Namespace) -> int:
     try:
         pages = pages_df(spark, args.n_docs, partitions=64)
         t0 = time.time()
-        extract(pages, _config_from(args), num_partitions=args.num_partitions) \
-            .write.mode("overwrite").parquet(f"{work}/out")
+        extract(pages, _config_from(args)).write.mode("overwrite").parquet(
+            f"{work}/out"
+        )
         dt = time.time() - t0
         print(json.dumps({"n_docs": args.n_docs, "wall_s": round(dt, 2),
                           "docs_per_sec": round(args.n_docs / dt, 1)}))

@@ -156,23 +156,26 @@ def _make_doc_kernel(cfg: ExtractConfig, lineage: Accumulator | None = None):
 def doc_extract_df(
     pages: DataFrame,
     cfg: ExtractConfig | None = None,
-    num_partitions: int | None = None,
     lineage: Accumulator | None = None,
+    skip: DataFrame | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, lang, …) → complete extraction records
     (success AND typed failure rows) in ``DOC_SCHEMA`` column order, one
     Arrow stage, zero text shuffles. Missing ``warc_ts``/``lang`` columns
     come out null.
 
-    Partitioning before the CPU-bound parse (html compresses ~10×, so
-    byte-sized input splits can under-parallelize a compute-bound stage):
-    - ``None`` (default): when the scan already yields at least
-      ``defaultParallelism`` (and ≥ 2) splits, they are coalesced to one
-      wave of ``defaultParallelism`` tasks without moving any bytes;
-      otherwise the input is repartitioned by url into
-      ``2 × defaultParallelism`` partitions.
-    - ``n > 0``: always repartition by url into ``n`` partitions.
-    - ``0``: keep the input partitioning as is.
+    Partitioning before the CPU-bound parse is decided once, on the scan
+    (html compresses ~10×, so byte-sized input splits can under-parallelize
+    a compute-bound stage): when the scan already yields at least
+    ``defaultParallelism`` (and ≥ 2) splits, they are coalesced to one wave
+    of ``defaultParallelism`` tasks without moving any bytes; otherwise the
+    input is repartitioned by url into ``2 × defaultParallelism``
+    partitions.
+
+    ``skip`` (a one-column ``url`` DataFrame, e.g. the urls already
+    committed by a resumed job): its urls are dropped by a left-anti join
+    applied after that balancing, so deciding the partitioning never
+    executes the join.
 
     ``lineage`` (from ``lineage_accumulator``): each task that produced rows
     adds ``{partition id: (rows, docs, ok, wall_us)}`` to it, where ``docs``
@@ -194,26 +197,21 @@ def doc_extract_df(
     )
     cols.append(F.col("html"))
     src = pages.select(*cols)
-    if num_partitions != 0:
-        n = num_partitions or 2 * pages.sparkSession.sparkContext.defaultParallelism
-        # r6 (guide §2.4 / §8): the repartition exists only to balance a
-        # CPU-bound per-document stage — when the scan already yields
-        # enough splits (openCostInBytes keeps small files one-per-task),
-        # shuffling the html payload buys nothing; skip it and let the
-        # kernel read straight off the scan. Payload bytes then move
-        # exactly zero times before the parse.
-        try:
-            scan_parts = src.rdd.getNumPartitions()
-        except Exception:  # non-file sources: keep the balancing shuffle
-            scan_parts = 0
-        dp = pages.sparkSession.sparkContext.defaultParallelism
-        if num_partitions is None and scan_parts >= max(2, dp):
-            # one wave of core-count tasks: per-task Python/Arrow setup is
-            # the dominant constant at this stage, so dp tasks of 2 files
-            # beat 2·dp tasks of 1 (measured 1.19 s → 0.77 s at 20k docs);
-            # coalesce merges scan splits without moving any bytes
-            if scan_parts > dp:
-                src = src.coalesce(dp)
-            return src.mapInArrow(_make_doc_kernel(cfg, lineage), DOC_SCHEMA)
-        src = src.repartition(n, F.col("url"))
+    # r6 (guide §2.4 / §8): the repartition exists only to balance a
+    # CPU-bound per-document stage — when the scan already yields enough
+    # splits (openCostInBytes keeps small files one-per-task), shuffling the
+    # html payload buys nothing, and the kernel reads straight off the scan.
+    # Planning the scan's splits runs no Spark job.
+    dp = pages.sparkSession.sparkContext.defaultParallelism
+    scan_parts = src.rdd.getNumPartitions()
+    if scan_parts < max(2, dp):
+        src = src.repartition(2 * dp, F.col("url"))
+    elif scan_parts > dp:
+        # one wave of core-count tasks: per-task Python/Arrow setup is the
+        # dominant constant at this stage, so dp tasks of 2 files beat 2·dp
+        # tasks of 1 (measured 1.19 s → 0.77 s at 20k docs); coalesce
+        # merges scan splits without moving any bytes
+        src = src.coalesce(dp)
+    if skip is not None:
+        src = src.join(skip, "url", "left_anti")
     return src.mapInArrow(_make_doc_kernel(cfg, lineage), DOC_SCHEMA)

@@ -27,15 +27,6 @@ def _count_token_hits(arr, words) -> F.Column:
     return F.size(F.filter(arr, lambda x: x.isin(*words)))
 
 
-def _count_contains(col, needles) -> F.Column:
-    total = F.lit(0)
-    for n in needles:
-        total = total + (
-            (F.length(col) - F.length(F.regexp_replace(col, n, ""))) / len(n)
-        ).cast("long")
-    return total
-
-
 def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """n-gram-free heuristic language ID: exact-token English stopword hits
     vs Korean-syllable character mass."""

@@ -1,8 +1,9 @@
 """Job orchestration: the Spark recast of the reference's batch drivers
 (SURVEY.md §3.1 step mapping).
 
-    scan → RESUME anti-join → extract() (one Arrow stage, lineage
-    accumulator) → write commit dir → publish snapshot → lineage rows
+    scan → extract() ([balance partitions] → RESUME anti-join → one Arrow
+    stage, lineage accumulator) → write commit dir → publish snapshot →
+    lineage rows
 
 One Spark job runs the kernel: the output write. Everything else the run
 reports comes from what that job's tasks put in the lineage accumulator.
@@ -10,10 +11,11 @@ reports comes from what that job's tasks put in the lineage accumulator.
 - resume: left-anti join of the input against the committed output snapshot
   (≙ skip-if-exists, reference resize.py:158-162 — but gated *before* any
   work, fixing crop.py's detect-before-gate inefficiency, SURVEY.md §4.2.4)
-- the kernel reads straight off the scan (or the anti-join) when that
-  already has at least ``defaultParallelism`` splits; fewer splits, or an
-  explicit ``num_partitions``, are repartitioned by url first (``extract``'s
-  rule), so the CPU-bound parse never runs on fewer tasks than cores
+- the parse partitioning is decided on the scan, before the resume skip
+  (``extract``'s one rule): the kernel reads straight off a scan that
+  already has at least ``defaultParallelism`` splits, fewer splits are
+  repartitioned by url first, so the CPU-bound parse never runs on fewer
+  tasks than cores
 - a resume with nothing left to do stops after a url-only anti-join: no
   html is read, no commit dir is made, no snapshot is published. A run
   whose kernel output is empty anyway discards its commit dir. A crashed
@@ -92,10 +94,6 @@ def salted_two_stage_agg(
     )
 
 
-def host_of(url_col) -> F.Column:
-    return F.regexp_extract(url_col, r"^[a-z]+://([^/]+)", 1)
-
-
 def run_extraction_job(
     spark: SparkSession,
     pages: DataFrame,
@@ -103,24 +101,16 @@ def run_extraction_job(
     runs_table: SnapshotTable,
     cfg: ExtractConfig | None = None,
     run_id: str | None = None,
-    num_partitions: int | None = None,
 ) -> dict:
-    """One resumable job run. Returns the run summary (counters ≙ D7).
-
-    ``num_partitions`` is ``extract``'s: ``None`` keeps the input's
-    partitioning when it already has at least ``defaultParallelism`` splits
-    and repartitions by url otherwise; ``n > 0`` always repartitions by url
-    into ``n`` partitions; ``0`` keeps the input partitioning as is."""
+    """One resumable job run. Returns the run summary (counters ≙ D7)."""
     cfg = cfg or ExtractConfig()
     run_id = run_id or f"run-{int(time.time() * 1000)}"
 
     t0 = time.time()
     done = out_table.read(spark)
-    todo = pages
-    if done is not None:
-        # resume: anything already committed is skipped before ANY work (an
-        # anti-join needs no distinct build side)
-        todo = pages.join(done.select("url"), "url", "left_anti")
+    # resume: anything already committed is skipped before ANY work (an
+    # anti-join needs no distinct build side)
+    skip = None if done is None else done.select("url")
 
     # the output write is the only action over the kernel; the same tasks
     # report their per-partition lineage (J7) through the accumulator, with
@@ -129,8 +119,8 @@ def run_extraction_job(
     commit = None
     # a resume with nothing left to do finds out from the url column alone,
     # before any html is read or any commit dir is made
-    if done is None or not todo.select("url").isEmpty():
-        result = extract(todo, cfg, num_partitions=num_partitions, lineage=lineage)
+    if skip is None or not pages.select("url").join(skip, "url", "left_anti").isEmpty():
+        result = extract(pages, cfg, lineage=lineage, skip=skip)
         commit = out_table.write(result)
 
     lineage_rows = [

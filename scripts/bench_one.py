@@ -36,9 +36,9 @@ def main(cpus: int, n_docs: int, trials: int = 2) -> None:
         best = None
         for _ in range(trials):
             t0 = time.time()
-            extract(pages, cfg, num_partitions=cpus * 2).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(work, "out"))
+            extract(pages, cfg).write.mode("overwrite").parquet(
+                os.path.join(work, "out")
+            )
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         print(json.dumps({"cpus": cpus, "n_docs": n_docs,

@@ -42,8 +42,7 @@ def test_job_extract_and_resume(pages_parquet, tmp_path):
                PYTHONPATH=_pyfiles_zip(tmp_path))
     out_root = str(tmp_path / "extractions")
     cmd = [sys.executable, os.path.join(ROOT, "job.py"), "extract",
-           "--input", pages_parquet, "--output", out_root,
-           "--num-partitions", "4"]
+           "--input", pages_parquet, "--output", out_root]
     r1 = subprocess.run(cmd, capture_output=True, text=True, timeout=600,
                         env=env, cwd=str(tmp_path))
     assert r1.returncode == 0, r1.stderr[-2000:]
@@ -62,7 +61,7 @@ def test_job_bench_subcommand(tmp_path):
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     r = subprocess.run(
         [sys.executable, os.path.join(ROOT, "job.py"), "bench",
-         "--n-docs", "200", "--num-partitions", "4"],
+         "--n-docs", "200"],
         capture_output=True, text=True, timeout=600, env=env, cwd=ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
     out = json.loads([l for l in r.stdout.splitlines() if l.startswith("{")][-1])
@@ -83,12 +82,12 @@ def test_job_compact_subcommand(spark, pages_parquet, tmp_path):
     base = [sys.executable, os.path.join(ROOT, "job.py")]
     r1 = subprocess.run(
         base + ["extract", "--input", pages_parquet, "--output", out_root,
-                "--num-partitions", "4", "--rules", "thirds"],
+                "--rules", "thirds"],
         capture_output=True, text=True, timeout=600, env=env, cwd=str(tmp_path))
     assert r1.returncode == 0, r1.stderr[-2000:]
     r2 = subprocess.run(
         base + ["extract", "--input", bigger, "--output", out_root,
-                "--num-partitions", "4", "--rules", "thirds"],
+                "--rules", "thirds"],
         capture_output=True, text=True, timeout=600, env=env, cwd=str(tmp_path))
     assert r2.returncode == 0, r2.stderr[-2000:]
 

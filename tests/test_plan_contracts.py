@@ -142,10 +142,45 @@ def test_extraction_job_one_kernel_pass(spark, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
+def test_extraction_job_resume_probes_only_the_scan(spark, tmp_path):
+    """A resume call with new docs runs the committed-url anti-join only
+    where it must: the url-only emptiness check and the output write. The
+    parse partitioning is decided on the scan, which plans its splits
+    without a Spark job; probing the anti-join's partitions instead runs its
+    broadcast of the committed urls once more (one job more per call)."""
+    from py_image_toolkit_spark.fixtures import pages_df
+    from py_image_toolkit_spark.plans.job import run_extraction_job
+    from py_image_toolkit_spark.sources.tables import SnapshotTable
+
+    src = str(tmp_path / "pages")
+    pages_df(spark, 40).write.parquet(src)
+    pages = spark.read.parquet(src)
+    out = SnapshotTable(str(tmp_path / "out"))
+    runs = SnapshotTable(str(tmp_path / "runs"))
+    s1 = run_extraction_job(
+        spark, pages.filter(F.xxhash64("url") % 2 == 0), out, runs, run_id="r1"
+    )
+
+    sc = spark.sparkContext
+    group = f"resume-probe-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        s2 = run_extraction_job(spark, pages, out, runs, run_id="r2")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < s1["docs_in"] < 40 and s1["docs_in"] + s2["docs_in"] == 40
+    assert s2["snapshot_id"] == 2
+    # measured under the test session (local[8]); probing the anti-join's
+    # partitions instead of the scan's made it 7
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+
+
 def test_extraction_job_balances_a_single_split_input(spark, tmp_path):
     """An input with fewer splits than cores is repartitioned by url before
     the CPU-bound parse, so more than one task runs the kernel: the runs
-    table gets one lineage row per task that wrote rows."""
+    table gets one lineage row per task that wrote rows. A resume call
+    balances the same way (the committed urls are skipped after it)."""
     from py_image_toolkit_spark.fixtures import pages_df
     from py_image_toolkit_spark.plans.job import run_extraction_job
     from py_image_toolkit_spark.sources.tables import SnapshotTable
@@ -154,10 +189,20 @@ def test_extraction_job_balances_a_single_split_input(spark, tmp_path):
     pages_df(spark, 40, partitions=1).write.parquet(src)
     pages = spark.read.parquet(src)
     assert pages.rdd.getNumPartitions() == 1
+    out = SnapshotTable(str(tmp_path / "out"))
     runs = SnapshotTable(str(tmp_path / "runs"))
-    s = run_extraction_job(spark, pages, SnapshotTable(str(tmp_path / "out")), runs)
+    s = run_extraction_job(spark, pages, out, runs, run_id="r1")
     assert s["docs_in"] == 40
     assert runs.read(spark).count() > 1
+
+    # a larger 1-split input (the same 40 pages plus 80 new ones)
+    bigger = str(tmp_path / "pages120")
+    pages_df(spark, 120, partitions=1).write.parquet(bigger)
+    pages = spark.read.parquet(bigger)
+    assert pages.rdd.getNumPartitions() == 1
+    s = run_extraction_job(spark, pages, out, runs, run_id="r2")
+    assert s["docs_in"] == 80
+    assert runs.read(spark).filter(F.col("run_id") == "r2").count() > 1
 
 
 def test_canonical_dedup_single_aggregation_shuffle(spark):

@@ -5,7 +5,8 @@ local[16]) lives in scripts/bench_salted.py → BENCH/BASELINE.md."""
 
 from pyspark.sql import functions as F
 
-from py_image_toolkit_spark.plans.job import host_of, salted_two_stage_agg
+from py_image_toolkit_spark.operators.web import host_of
+from py_image_toolkit_spark.plans.job import salted_two_stage_agg
 
 
 def _skewed_views(spark, n=5000, hot_share=0.3):
