@@ -173,9 +173,14 @@ def doc_extract_df(
     partitions.
 
     ``skip`` (a one-column ``url`` DataFrame, e.g. the urls already
-    committed by a resumed job): its urls are dropped by a left-anti join
-    applied after that balancing, so deciding the partitioning never
-    executes the join.
+    committed by a resumed job): its urls are dropped after that balancing,
+    so deciding the partitioning never executes a join. The input's urls
+    are anti-joined against ``skip`` (url-only: ``skip`` is broadcast once,
+    or shuffled by url above the broadcast threshold, never the html), and
+    the balanced input is semi-joined against the broadcast of what is left:
+    the urls of this call's new docs, bounded by the input. When none is
+    left, adaptive execution replaces the html scan and the join with an
+    empty relation, so the kernel runs on no task.
 
     ``lineage`` (from ``lineage_accumulator``): each task that produced rows
     adds ``{partition id: (rows, docs, ok, wall_us)}`` to it, where ``docs``
@@ -213,5 +218,6 @@ def doc_extract_df(
         # merges scan splits without moving any bytes
         src = src.coalesce(dp)
     if skip is not None:
-        src = src.join(skip, "url", "left_anti")
+        new = pages.select("url").join(skip, "url", "left_anti")
+        src = src.join(F.broadcast(new), "url", "left_semi")
     return src.mapInArrow(_make_doc_kernel(cfg, lineage), DOC_SCHEMA)

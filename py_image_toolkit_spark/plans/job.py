@@ -1,12 +1,16 @@
 """Job orchestration: the Spark recast of the reference's batch drivers
 (SURVEY.md §3.1 step mapping).
 
-    scan → extract() ([balance partitions] → RESUME anti-join → one Arrow
-    stage, lineage accumulator) → write commit dir → publish snapshot →
-    lineage rows
+    read committed snapshot (schema from its manifest) → extract()
+    ([balance partitions] → RESUME semi-join against the input's new urls →
+    one Arrow stage, lineage accumulator) → write commit dir → publish
+    snapshot → lineage rows (written by the driver)
 
 One Spark job runs the kernel: the output write. Everything else the run
-reports comes from what that job's tasks put in the lineage accumulator.
+reports comes from what that job's tasks put in the lineage accumulator. A
+resume call adds only the two url broadcasts of the skip (3 jobs, while the
+committed urls fit the broadcast threshold); reading the committed table
+and writing the runs table run none.
 
 - resume: left-anti join of the input against the committed output snapshot
   (≙ skip-if-exists, reference resize.py:158-162 — but gated *before* any
@@ -16,10 +20,12 @@ reports comes from what that job's tasks put in the lineage accumulator.
   already has at least ``defaultParallelism`` splits, fewer splits are
   repartitioned by url first, so the CPU-bound parse never runs on fewer
   tasks than cores
-- a resume with nothing left to do stops after a url-only anti-join: no
-  html is read, no commit dir is made, no snapshot is published. A run
-  whose kernel output is empty anyway discards its commit dir. A crashed
-  run leaves no visible rows (the manifest publish is atomic)
+- a resume with nothing left to do reads no html and runs no kernel task:
+  its input's new urls come out empty, so adaptive execution prunes the
+  html scan, and the write lands an empty commit dir. Like any run whose
+  kernel output is empty, it discards that commit and publishes no
+  snapshot. A crashed run leaves no visible rows (the manifest publish is
+  atomic)
 - lineage: one row per task partition in the runs table (docs in/ok/failed,
   measured wall time), ≙ the reference's per-run counters (D7/J7)
 - salting: two-stage aggregation helper for skewed keys (hot hosts)
@@ -33,6 +39,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from py_image_toolkit_spark.config import ExtractConfig
 from py_image_toolkit_spark.operators.doc_kernel import lineage_accumulator
@@ -114,14 +121,12 @@ def run_extraction_job(
 
     # the output write is the only action over the kernel; the same tasks
     # report their per-partition lineage (J7) through the accumulator, with
-    # wall_us the measured kernel time of that partition
+    # wall_us the measured kernel time of that partition. A resume with
+    # nothing left to do reads no html and runs no kernel task: the skip
+    # prunes the scan, and the empty commit is discarded below
     lineage = lineage_accumulator(spark.sparkContext)
-    commit = None
-    # a resume with nothing left to do finds out from the url column alone,
-    # before any html is read or any commit dir is made
-    if skip is None or not pages.select("url").join(skip, "url", "left_anti").isEmpty():
-        result = extract(pages, cfg, lineage=lineage, skip=skip)
-        commit = out_table.write(result)
+    result = extract(pages, cfg, lineage=lineage, skip=skip)
+    commit = out_table.write(result)
 
     lineage_rows = [
         {
@@ -154,12 +159,14 @@ def run_extraction_job(
             ],
             schema=_RUNS_SCHEMA,
         )
-        # a handful of rows per run: one file per commit, not one per core
-        runs_table.append(spark.createDataFrame(runs).coalesce(1), run_id=run_id)
+        # a handful of rows per run, already on the driver: one file written
+        # without a Spark job
+        runs_table.publish(
+            runs_table.write(runs), from_arrow_schema(runs.schema), run_id=run_id
+        )
         summary["snapshot_id"] = snapshot_id
     else:
-        if commit is not None:
-            out_table.discard(commit)
+        out_table.discard(commit)
         summary["snapshot_id"] = None
     summary["wall_s"] = time.time() - t0
     return summary

@@ -10,9 +10,14 @@ jar, so the same API is provided over a manifest-committed parquet layout:
 Readers resolve the highest manifest and read exactly the data directories
 it lists — a crashed job's orphan directory is invisible (≙ the reference's
 partial-output cleanup, resize.py:134-140, but free by construction: A9).
-Appends are atomic: data lands first (``write``), the manifest rename
+Appends are atomic: data lands first (``write``, from a Spark DataFrame or,
+for a handful of driver-side rows, a ``pyarrow.Table``), the manifest rename
 publishes it (``publish``); ``append`` does both, and a writer that decides
 after landing its data not to publish it calls ``discard``.
+
+The manifest is the table's metadata: it records the schema and each
+commit's column set, so a read whose commits all share the schema's columns
+plans its scan without opening a file footer (no Spark job).
 
 On a real cluster with iceberg-spark-runtime on the classpath, swap
 ``SnapshotTable`` for ``df.writeTo(table).append()`` — the pipeline code
@@ -29,10 +34,29 @@ import time
 import uuid
 from datetime import timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _MANIFEST_RE = re.compile(r"manifest-(\d+)\.json$")
+
+
+def _load_json(path: str) -> dict:
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def _manifest_schema(snap: dict, dirs: list[str]) -> StructType | None:
+    """The manifest's schema when it describes every commit in ``dirs``:
+    each has a ``commit_schemas`` entry naming exactly the schema's columns.
+    ``None`` for a lineage recorded before ``commit_schemas`` existed or
+    whose commits disagree; the reader then infers the schema from a file
+    footer, one Spark job."""
+    cs = snap.get("commit_schemas", {})
+    schema = StructType.fromJson(snap["schema"])
+    if all(cs.get(d) == schema.names for d in dirs):
+        return schema
+    return None
 
 
 def write_bucketed(
@@ -135,10 +159,7 @@ class SnapshotTable:
 
     def latest_snapshot(self) -> dict | None:
         ms = self._manifests()
-        if not ms:
-            return None
-        with open(ms[-1][1]) as fh:
-            return json.load(fh)
+        return _load_json(ms[-1][1]) if ms else None
 
     def snapshot_ids(self) -> list[int]:
         return [n for n, _ in self._manifests()]
@@ -168,19 +189,33 @@ class SnapshotTable:
             require_base_snapshot=require_base_snapshot,
         )
 
-    def write(self, df: DataFrame, encode: "EncodeOptions | None" = None) -> str:
+    def write(
+        self, df: DataFrame | pa.Table, encode: "EncodeOptions | None" = None
+    ) -> str:
         """Land df's data in a fresh commit directory, invisible to readers
         until ``publish``. Returns the commit (the directory's name under
         ``data/``); pass it to ``publish`` or ``discard``.
 
-        ``encode`` routes through the E4 per-format options dispatch
-        (operators/encode.py ≙ reference optimize.py:39-53)."""
-        from py_image_toolkit_spark.operators.encode import encoded_writer
-
+        A Spark DataFrame is written by a Spark job; ``encode`` routes it
+        through the E4 per-format options dispatch (operators/encode.py ≙
+        reference optimize.py:39-53). A ``pyarrow.Table`` (rows the driver
+        already holds) is written by the driver as one zstd parquet file,
+        without a Spark job and without the Arrow schema in its footer: the
+        schema lives in the manifest. ``encode`` does not apply to it."""
         commit = f"commit-{uuid.uuid4().hex[:12]}"
-        encoded_writer(df, "parquet", encode).mode("errorifexists").save(
-            os.path.join(self.data_dir, commit)
-        )
+        path = os.path.join(self.data_dir, commit)
+        if isinstance(df, pa.Table):
+            import pyarrow.parquet as pq
+
+            os.mkdir(path)
+            pq.write_table(
+                df, os.path.join(path, "part-00000.parquet"),
+                compression="zstd", store_schema=False,
+            )
+        else:
+            from py_image_toolkit_spark.operators.encode import encoded_writer
+
+            encoded_writer(df, "parquet", encode).mode("errorifexists").save(path)
         return commit
 
     def discard(self, commit: str) -> None:
@@ -289,6 +324,11 @@ class SnapshotTable:
         """DataFrame over exactly the committed files (None if no snapshot
         exists yet). ``snapshot_id`` time-travels to an older snapshot.
 
+        The scan takes the manifest's schema when every commit read records
+        exactly its columns, so planning it opens no file and runs no Spark
+        job; otherwise (a table written before ``commit_schemas`` existed)
+        Spark infers the schema from a file footer.
+
         ``merge_schema=True`` unions the schemas of all live commits
         (Iceberg-style additive evolution: a commit may add columns; older
         rows read NULL for them). Off by default — schema merging reads
@@ -305,7 +345,7 @@ class SnapshotTable:
             snap = self.latest_snapshot()
         else:
             path = os.path.join(self.snap_dir, f"manifest-{snapshot_id}.json")
-            snap = json.load(open(path)) if os.path.exists(path) else None
+            snap = _load_json(path) if os.path.exists(path) else None
         if snap is None or not snap["data_dirs"]:
             return None
         dirs = snap["data_dirs"]
@@ -345,11 +385,20 @@ class SnapshotTable:
                     f"{sorted(col_sets)}; pass merge_schema=True, or "
                     "compact() the table to consolidate the union schema"
                 )
-        paths = [os.path.join(self.data_dir, d) for d in dirs]
+        return self._scan(spark, snap, dirs, merge_schema)
+
+    def _scan(
+        self, spark: SparkSession, snap: dict, dirs: list[str], merge_schema: bool = False
+    ) -> DataFrame:
+        """A parquet scan over ``dirs`` of snapshot ``snap``: schema merged
+        across files, or taken from the manifest when it describes them all,
+        or inferred from one file's footer."""
         reader = spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+        elif (schema := _manifest_schema(snap, dirs)) is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*[os.path.join(self.data_dir, d) for d in dirs])
 
     def compact(
         self,
@@ -400,12 +449,10 @@ class SnapshotTable:
         keep, drop = ms[-keep_latest:], ms[:-keep_latest]
         live: set[str] = set()
         for _, path in keep:
-            with open(path) as fh:
-                live.update(json.load(fh)["data_dirs"])
+            live.update(_load_json(path)["data_dirs"])
         doomed: set[str] = set()
         for _, path in drop:
-            with open(path) as fh:
-                doomed.update(json.load(fh)["data_dirs"])
+            doomed.update(_load_json(path)["data_dirs"])
             os.unlink(path)
         deleted = []
         for d in sorted(doomed - live):
@@ -418,10 +465,11 @@ class SnapshotTable:
         return deleted
 
     def diff(self, spark: SparkSession, from_snapshot: int, to_snapshot: int) -> DataFrame | None:
-        """Rows appended between two snapshots (incremental-read primitive)."""
-        a = json.load(open(os.path.join(self.snap_dir, f"manifest-{from_snapshot}.json")))
-        b = json.load(open(os.path.join(self.snap_dir, f"manifest-{to_snapshot}.json")))
+        """Rows appended between two snapshots (incremental-read primitive),
+        under ``to_snapshot``'s schema by the same rule as ``read``."""
+        a = _load_json(os.path.join(self.snap_dir, f"manifest-{from_snapshot}.json"))
+        b = _load_json(os.path.join(self.snap_dir, f"manifest-{to_snapshot}.json"))
         new_dirs = [d for d in b["data_dirs"] if d not in set(a["data_dirs"])]
         if not new_dirs:
             return None
-        return spark.read.parquet(*[os.path.join(self.data_dir, d) for d in new_dirs])
+        return self._scan(spark, b, new_dirs)

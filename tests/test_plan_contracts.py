@@ -105,12 +105,12 @@ def test_doc_pipeline_single_exchange_single_python_stage(spark, tmp_path):
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
 
 
-def test_extraction_job_one_kernel_pass(spark, tmp_path):
-    """A fresh-table run_extraction_job call runs the kernel once: the
-    output write is its only action over the kernel, and the lineage comes
-    from that same pass, so the call is at most 2 Spark jobs (the output
-    write and the runs-table commit). A persist/collect pass over the
-    kernel output, or a second look at it, would add jobs."""
+def test_extraction_job_one_kernel_pass(spark, spark_jobs, tmp_path):
+    """A fresh-table run_extraction_job call on an input of one split per
+    core is one Spark job: the output write, the only action over the
+    kernel. The lineage comes from that same pass, and the driver writes
+    the runs table itself. A persist/collect pass over the kernel output, a
+    second look at it, or a Spark write of the runs rows would add jobs."""
     from py_image_toolkit_spark.fixtures import pages_df
     from py_image_toolkit_spark.plans.job import run_extraction_job
     from py_image_toolkit_spark.plans.pipeline import extract
@@ -127,27 +127,19 @@ def test_extraction_job_one_kernel_pass(spark, tmp_path):
     assert "Exchange" not in plan
     assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
 
-    sc = spark.sparkContext
-    group = f"one-kernel-pass-{tmp_path.name}"
-    sc.setJobGroup(group, group)
-    try:
-        s = run_extraction_job(
+    s, jobs = spark_jobs(
+        lambda: run_extraction_job(
             spark, pages,
             SnapshotTable(str(tmp_path / "out")), SnapshotTable(str(tmp_path / "runs")),
         )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    )
     assert s["docs_in"] == 40 and s["snapshot_id"] == 1
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert jobs == 1
 
 
-def test_extraction_job_resume_probes_only_the_scan(spark, tmp_path):
-    """A resume call with new docs runs the committed-url anti-join only
-    where it must: the url-only emptiness check and the output write. The
-    parse partitioning is decided on the scan, which plans its splits
-    without a Spark job; probing the anti-join's partitions instead runs its
-    broadcast of the committed urls once more (one job more per call)."""
+def _half_committed(spark, tmp_path):
+    """(pages, out table, runs table, first run's summary): 40 pages, about
+    half of them committed to ``out`` by a first run."""
     from py_image_toolkit_spark.fixtures import pages_df
     from py_image_toolkit_spark.plans.job import run_extraction_job
     from py_image_toolkit_spark.sources.tables import SnapshotTable
@@ -160,20 +152,63 @@ def test_extraction_job_resume_probes_only_the_scan(spark, tmp_path):
     s1 = run_extraction_job(
         spark, pages.filter(F.xxhash64("url") % 2 == 0), out, runs, run_id="r1"
     )
+    assert 0 < s1["docs_in"] < 40
+    return pages, out, runs, s1
 
-    sc = spark.sparkContext
-    group = f"resume-probe-{tmp_path.name}"
-    sc.setJobGroup(group, group)
-    try:
-        s2 = run_extraction_job(spark, pages, out, runs, run_id="r2")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert 0 < s1["docs_in"] < 40 and s1["docs_in"] + s2["docs_in"] == 40
+
+def test_extraction_job_resume_probes_only_the_scan(spark, spark_jobs, tmp_path):
+    """A resume call with new docs is three Spark jobs: the broadcast of
+    the committed urls (for the url-only anti-join that finds the input's
+    new urls), the broadcast of those new urls (for the semi-join in front
+    of the kernel), and the output write. Reading the committed table takes
+    its schema from the manifest and the driver writes the runs table, so
+    neither runs a job; the parse partitioning is decided on the scan,
+    which plans its splits without one."""
+    from py_image_toolkit_spark.plans.job import run_extraction_job
+
+    pages, out, runs, s1 = _half_committed(spark, tmp_path)
+    s2, jobs = spark_jobs(lambda: run_extraction_job(spark, pages, out, runs, run_id="r2"))
+    assert s1["docs_in"] + s2["docs_in"] == 40
     assert s2["snapshot_id"] == 2
-    # measured under the test session (local[8]); probing the anti-join's
-    # partitions instead of the scan's made it 7
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+    # measured under the test session (local[8])
+    assert jobs == 3
+
+
+def test_extraction_job_noop_resume_reads_no_html(spark, spark_jobs, tmp_path):
+    """A call over an input that is all committed runs the two url
+    broadcasts and an empty write (3 Spark jobs), publishes no snapshot
+    and leaves no commit dir behind."""
+    import os
+
+    from py_image_toolkit_spark.plans.job import run_extraction_job
+
+    pages, out, runs, _ = _half_committed(spark, tmp_path)
+    run_extraction_job(spark, pages, out, runs, run_id="r2")
+    dirs = sorted(os.listdir(out.data_dir))
+    s3, jobs = spark_jobs(lambda: run_extraction_job(spark, pages, out, runs, run_id="r3"))
+    assert s3["rows_out"] == 0 and s3["snapshot_id"] is None
+    assert out.snapshot_ids() == [1, 2] and runs.snapshot_ids() == [1, 2]
+    assert sorted(os.listdir(out.data_dir)) == dirs
+    assert jobs == 3
+
+
+def test_extract_with_everything_skipped_prunes_the_html_scan(spark, tmp_path):
+    """When every input url is in ``skip``, adaptive execution replaces the
+    html scan and the semi-join with an empty relation: the final plan
+    reads no file and the kernel gets no task."""
+    from py_image_toolkit_spark.fixtures import pages_df
+    from py_image_toolkit_spark.plans.pipeline import extract
+
+    src = str(tmp_path / "pages")
+    pages_df(spark, 16).write.parquet(src)
+    pages = spark.read.parquet(src)
+    out = extract(pages, skip=pages.select("url"))
+    assert out.collect() == []
+    plan = plan_of(out)
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "MapInArrow" in final and "EmptyRelation" in final
+    assert "FileScan" not in final
 
 
 def test_extraction_job_balances_a_single_split_input(spark, tmp_path):

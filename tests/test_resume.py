@@ -132,6 +132,98 @@ def test_snapshot_diff_incremental_read(spark, tmp_path):
     assert delta.count() == out.read(spark).count() - out.read(spark, snapshot_id=1).count()
 
 
+def _inferred_schema(spark, table):
+    """The schema Spark infers from the files of ``table``'s latest
+    snapshot (a footer read)."""
+    dirs = table.latest_snapshot()["data_dirs"]
+    return spark.read.parquet(*[os.path.join(table.data_dir, d) for d in dirs]).schema
+
+
+def test_read_takes_the_schema_from_the_manifest(spark, spark_jobs, tmp_path):
+    """A table whose commits share one column set is read, and diffed, under
+    the manifest's schema: planning the scan runs no Spark job, and the
+    schema is exactly the one inference gives, nullability included. A
+    manifest without per-commit column sets still reads, by inference."""
+    import json
+
+    out, runs = _tables(tmp_path, "schema")
+    pages = pages_df(spark, 20)
+    run_extraction_job(
+        spark, pages.filter(F.xxhash64("url") % 2 == 0), out, runs, CFG, run_id="r1"
+    )
+    run_extraction_job(spark, pages, out, runs, CFG, run_id="r2")
+
+    # the manifest marks the kernel's key columns non-null; a parquet scan
+    # reads every column as nullable either way
+    manifest = {f["name"]: f["nullable"] for f in out.latest_snapshot()["schema"]["fields"]}
+    assert not any(manifest[c] for c in ("url", "rule", "success"))
+    for table in (out, runs):
+        df, jobs = spark_jobs(lambda: table.read(spark))
+        assert jobs == 0
+        assert df.schema == _inferred_schema(spark, table)
+    delta, jobs = spark_jobs(lambda: out.diff(spark, 1, 2))
+    assert jobs == 0 and delta.schema == _inferred_schema(spark, out)
+
+    n = out.read(spark).count()
+    path = os.path.join(out.snap_dir, "manifest-2.json")
+    with open(path) as fh:
+        snap = json.load(fh)
+    del snap["commit_schemas"]
+    with open(path, "w") as fh:
+        json.dump(snap, fh)
+    df, jobs = spark_jobs(lambda: out.read(spark))
+    assert jobs == 1  # the footer read of schema inference
+    assert df.schema == _inferred_schema(spark, out) and df.count() == n
+
+
+def test_runs_table_mixes_spark_and_driver_written_commits(spark, tmp_path):
+    """A runs table that holds a commit written by Spark (how runs rows
+    were once written) and one written by the driver from a pyarrow.Table
+    reads with the runs table's pinned column types. The driver's file
+    carries no Arrow schema in its footer: the manifest holds the schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from py_image_toolkit_spark.plans.job import _RUNS_SCHEMA
+
+    def rows(run_id, snapshot_id):
+        return pa.Table.from_pylist(
+            [
+                {"partition_id": p, "rows_out": 4, "docs_in": 2, "rows_ok": 3,
+                 "rows_failed": 1, "wall_us": 100 + p, "run_id": run_id,
+                 "snapshot_id": snapshot_id, "job_wall_ms": 50}
+                for p in range(3)
+            ],
+            schema=_RUNS_SCHEMA,
+        )
+
+    runs = SnapshotTable(str(tmp_path / "mixed_runs"))
+    runs.append(spark.createDataFrame(rows("r1", 1)).coalesce(1), run_id="r1")
+    commit = runs.write(rows("r2", 2))
+    runs.publish(commit, from_arrow_schema(_RUNS_SCHEMA), run_id="r2")
+
+    (fname,) = os.listdir(os.path.join(runs.data_dir, commit))
+    footer = pq.read_metadata(os.path.join(runs.data_dir, commit, fname)).metadata or {}
+    assert b"ARROW:schema" not in footer
+
+    lin = runs.read(spark)
+    assert lin.dtypes == [
+        ("partition_id", "int"),
+        ("rows_out", "bigint"),
+        ("docs_in", "bigint"),
+        ("rows_ok", "bigint"),
+        ("rows_failed", "bigint"),
+        ("wall_us", "bigint"),
+        ("run_id", "string"),
+        ("snapshot_id", "int"),
+        ("job_wall_ms", "int"),
+    ]
+    assert lin.schema == _inferred_schema(spark, runs)
+    got = sorted((r["run_id"], r["partition_id"], r["wall_us"]) for r in lin.collect())
+    assert got == sorted((r, p, 100 + p) for r in ("r1", "r2") for p in range(3))
+
+
 def test_manifest_stats_prune_commits(spark, tmp_path):
     """Iceberg-style commit pruning: read(where=...) skips whole commit
     directories whose recorded [min,max] cannot intersect the predicate."""
