@@ -14,15 +14,14 @@ Subcommands:
                atomic snapshot commit, per-partition lineage rows)
     resume    alias of extract — resume IS the default behavior; named
               separately so intent shows up in job schedulers
-    bench     timed extraction over a synthetic deterministic pages table
-              (fixtures.pages_df) — prints one JSON line
     compact   rewrite all live commits of a snapshot table into one
               (small-files maintenance; --expire additionally GCs
                pre-compaction snapshots)
 
-``--master`` is deliberately absent: in production spark-submit supplies the
-cluster master; locally the SPARK_MASTER / SPARK_GRAFT_CPUS env defaults
-apply (session.build_session).
+``--master`` is deliberately absent: spark-submit supplies the master, and
+the session keeps it; run without spark-submit, the session is local[N]
+with N = $SPARK_GRAFT_CPUS or the process's CPU count
+(session.build_session).
 """
 
 from __future__ import annotations
@@ -30,7 +29,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 
 
 def _add_config_args(p: argparse.ArgumentParser) -> None:
@@ -79,11 +77,6 @@ def build_parser() -> argparse.ArgumentParser:
         p.add_argument("--run-id", default=None)
         _add_config_args(p)
 
-    b = sub.add_parser("bench", help="timed synthetic extraction, one JSON line")
-    b.add_argument("--n-docs", type=int, default=20000)
-    b.add_argument("--output", default=None, help="sink dir (default: temp)")
-    _add_config_args(b)
-
     c = sub.add_parser(
         "compact",
         help="rewrite all live commits of a snapshot table into one "
@@ -116,31 +109,6 @@ def cmd_extract(args: argparse.Namespace) -> int:
     return 0 if summary["rows_failed"] == 0 or summary["rows_ok"] > 0 else 1
 
 
-def cmd_bench(args: argparse.Namespace) -> int:
-    import shutil
-    import tempfile
-
-    from py_image_toolkit_spark.fixtures import pages_df
-    from py_image_toolkit_spark.plans.pipeline import extract
-    from py_image_toolkit_spark.session import build_session
-
-    spark = build_session("bench-job")
-    work = args.output or tempfile.mkdtemp(prefix="cli_bench_")
-    try:
-        pages = pages_df(spark, args.n_docs, partitions=64)
-        t0 = time.time()
-        extract(pages, _config_from(args)).write.mode("overwrite").parquet(
-            f"{work}/out"
-        )
-        dt = time.time() - t0
-        print(json.dumps({"n_docs": args.n_docs, "wall_s": round(dt, 2),
-                          "docs_per_sec": round(args.n_docs / dt, 1)}))
-    finally:
-        if args.output is None:
-            shutil.rmtree(work, ignore_errors=True)
-    return 0
-
-
 def cmd_compact(args: argparse.Namespace) -> int:
     from py_image_toolkit_spark.session import build_session
     from py_image_toolkit_spark.sources.tables import SnapshotTable
@@ -166,9 +134,7 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     if args.cmd in ("extract", "resume"):
         return cmd_extract(args)
-    if args.cmd == "compact":
-        return cmd_compact(args)
-    return cmd_bench(args)
+    return cmd_compact(args)
 
 
 if __name__ == "__main__":

@@ -1096,13 +1096,16 @@ def q18(spark, sf_dir):
 )
 def q19(spark, sf_dir):
     """n-gram Jaccard verification over MinHash-LSH candidate pairs — the
-    composed scale architecture (a full shingle self-join is quadratic in
-    shared-shingle frequency: 397 s at sf0.1 vs seconds this way; LSH recall
-    vs the exhaustive join measured at 99.4%)."""
+    composed scale architecture: shingle arrays → MinHash → banded LSH
+    candidates → exact Jaccard of each candidate from the two arrays. A
+    full shingle self-join is quadratic in shared-shingle frequency (397 s
+    at sf0.1 vs seconds this way); LSH recall vs that exhaustive join was
+    measured at 99.4%. The verify broadcasts only the bare candidate ids
+    (jaccard_verify_arrays), never a shingle array."""
     # persist the per-doc shingle ARRAYS (r6: one row per doc instead of the
     # exploded+DISTINCT table — the explode → lead-window → distinct pair
-    # of shuffles is gone, guide §2.4): the arrays feed minhash, both sides
-    # of the verify join, AND the size counts. At 100 TB this is a
+    # of shuffles is gone, guide §2.4): the arrays feed minhash, the
+    # verify's probe, AND the size counts. At 100 TB this is a
     # materialized staging table, not an executor cache.
     base = _persist(D.doc_shingles(_docs_df(spark, sf_dir), k=3))
     shingles = base.select("doc_id", F.explode("shingles").alias("shingle"))
@@ -1117,7 +1120,11 @@ def q19(spark, sf_dir):
     )
 
 
-def _q20_sql(num_hashes: int = 8, rows_per_band: int = 2) -> str:
+def _minhash_banded_cte(num_hashes: int = 8, rows_per_band: int = 2) -> str:
+    """WITH-clause body ending in ``banded(doc_id, band, bucket)``: the
+    docs and shingle CTEs, then MinHash signatures per doc (``sigs``) and
+    one md5 bucket per band of ``rows_per_band`` signatures — the LSH front
+    half shared by q19, q20 and the q34/q36 pair graph."""
     sig_cols = ", ".join(
         f"MIN(md5(CONCAT('{j}|', shingle))) AS sig_{j}" for j in range(num_hashes)
     )
@@ -1126,10 +1133,14 @@ def _q20_sql(num_hashes: int = 8, rows_per_band: int = 2) -> str:
         f"SELECT doc_id, {b} AS band, md5(CONCAT(sig_{b * rows_per_band}, sig_{b * rows_per_band + 1})) AS bucket FROM sigs"
         for b in range(n_bands)
     )
-    return f"""
-    WITH {_DOCS_SQL}, {_SHINGLES_SQL},
+    return f"""{_DOCS_SQL}, {_SHINGLES_SQL},
     sigs AS (SELECT doc_id, {sig_cols} FROM sh GROUP BY doc_id),
-    banded AS ({band_selects})
+    banded AS ({band_selects})"""
+
+
+def _q20_sql(num_hashes: int = 8, rows_per_band: int = 2) -> str:
+    return f"""
+    WITH {_minhash_banded_cte(num_hashes, rows_per_band)}
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM banded a JOIN banded b
       ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
@@ -1138,18 +1149,8 @@ def _q20_sql(num_hashes: int = 8, rows_per_band: int = 2) -> str:
 
 
 def _q19_sql(num_hashes: int = 8, rows_per_band: int = 2) -> str:
-    sig_cols = ", ".join(
-        f"MIN(md5(CONCAT('{j}|', shingle))) AS sig_{j}" for j in range(num_hashes)
-    )
-    n_bands = num_hashes // rows_per_band
-    band_selects = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, md5(CONCAT(sig_{b * rows_per_band}, sig_{b * rows_per_band + 1})) AS bucket FROM sigs"
-        for b in range(n_bands)
-    )
     return f"""
-    WITH {_DOCS_SQL}, {_SHINGLES_SQL},
-    sigs AS (SELECT doc_id, {sig_cols} FROM sh GROUP BY doc_id),
-    banded AS ({band_selects}),
+    WITH {_minhash_banded_cte(num_hashes, rows_per_band)},
     cands AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b
@@ -1443,17 +1444,7 @@ def _cc_sql_prefix(num_hashes: int = 8, rows_per_band: int = 2) -> str:
     recursion terminates at the transitive closure; MIN over reachable
     labels = the component's min id — the same canonicalization the
     engine's large-star/small-star fixpoint produces)."""
-    sig_cols = ", ".join(
-        f"MIN(md5(CONCAT('{j}|', shingle))) AS sig_{j}" for j in range(num_hashes)
-    )
-    n_bands = num_hashes // rows_per_band
-    band_selects = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, md5(CONCAT(sig_{b * rows_per_band}, sig_{b * rows_per_band + 1})) AS bucket FROM sigs"
-        for b in range(n_bands)
-    )
-    return f"""{_DOCS_SQL}, {_SHINGLES_SQL},
-    sigs AS (SELECT doc_id, {sig_cols} FROM sh GROUP BY doc_id),
-    banded AS ({band_selects}),
+    return f"""{_minhash_banded_cte(num_hashes, rows_per_band)},
     mh_pairs AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b

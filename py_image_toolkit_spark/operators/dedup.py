@@ -4,16 +4,17 @@ All variants are pure Column/DataFrame code (JVM-side, no Python on the hot
 path) and are keyed so the heavy stages shuffle once on the doc key:
 
 - exact_dedup        : md5 content hash → groupBy (the hash-groupBy baseline)
-- shingle_df         : word k-gram shingles (explode via sequence/transform)
+- shingle_df         : word k-gram shingles (one regex pass per row builds
+                       the in-row k-gram array, then explode)
 - minhash_signatures : lexicographic-min of md5(seed‖shingle) per seed — a
                        valid min-wise hash family that is reproducible across
                        engines (no platform-specific hash())
 - lsh_band_pairs     : banding over the signature → candidate pairs via a
                        bucket self-join (the 100 TB-scale path: candidates
                        only, never the full O(n²) cross join)
-- jaccard_pairs      : exact k-shingle Jaccard via shingle-equijoin +
-                       group-count (verification stage for LSH candidates;
-                       standalone it is the small-scale exact method)
+- jaccard_verify_arrays : exact k-shingle Jaccard of LSH candidate pairs
+                       from the per-doc shingle arrays (size of the array
+                       intersection, computed in-row)
 - simhash_df         : 16-bit SimHash over word tokens (md5-nibble bits,
                        majority vote per bit), plus hamming-close pairs
 - embedding_neardup_pairs : cosine ≥ threshold pairs over embeddings
@@ -176,73 +177,6 @@ def lsh_band_pairs(
     )
 
 
-def jaccard_pairs(
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    min_jaccard: float = 0.5,
-    candidates: DataFrame | None = None,
-    sizes: DataFrame | None = None,
-) -> DataFrame:
-    """Exact k-shingle Jaccard for pairs sharing ≥1 shingle (optionally
-    restricted to LSH candidate pairs). Output jaccard as micro-units
-    (exact integer arithmetic → cross-engine reproducible).
-
-    ``sizes``: optional pre-computed (id, sz BIGINT) distinct-shingle
-    counts — callers holding per-doc shingle ARRAYS pass
-    ``size(shingles)`` and skip this groupBy (r6)."""
-    if sizes is None:
-        sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    if candidates is not None:
-        # scale path: count intersections only for LSH candidate pairs —
-        # the filter is pushed BEFORE the shingle join (a full shingle
-        # self-join is quadratic in shared-shingle frequency).
-        # Semi-join-reduce FIRST: most docs appear in no candidate pair, so
-        # shrinking the shingle table to candidate ids before the wide
-        # (id, shingle)-keyed shuffle cuts both join inputs by the
-        # candidate-fraction (round-1 bench: the unreduced verify join was
-        # 55% of total wall time).
-        cand_ids = candidates.select(
-            F.explode(F.array("id_a", "id_b")).alias(id_col)
-        ).distinct()
-        sh = shingles.join(cand_ids, id_col, "left_semi")
-        a = sh.withColumnRenamed(id_col, "id_a")
-        b = sh.withColumnRenamed(id_col, "id_b")
-        inter = (
-            candidates.join(a, "id_a")
-            .join(b, ["id_b", "shingle"])  # equijoin on BOTH id and shingle
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    else:
-        a = shingles.alias("a")
-        b = shingles.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    out = (
-        inter.join(sizes.withColumnsRenamed({id_col: "id_a", "sz": "sz_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({id_col: "id_b", "sz": "sz_b"}), "id_b")
-        .withColumn(
-            "jaccard_micro",
-            F.floor(
-                F.col("inter") * 1000000.0 / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-                + F.lit(0.5)
-            ).cast("long"),
-        )
-        .filter(F.col("jaccard_micro") >= int(min_jaccard * 1_000_000))
-    )
-    return out.select("id_a", "id_b", "inter", "sz_a", "sz_b", "jaccard_micro")
-
-
 def jaccard_verify_arrays(
     base: DataFrame,
     candidates: DataFrame,
@@ -250,28 +184,39 @@ def jaccard_verify_arrays(
     shingles_col: str = "shingles",
     min_jaccard: float = 0.5,
 ) -> DataFrame:
-    """Exact Jaccard verification of candidate pairs against per-doc
-    DISTINCT shingle ARRAYS (doc_shingles output) — the r6 replacement for
-    feeding exploded (id, shingle) rows through a (id, shingle)-keyed
-    equijoin + pair groupBy: attach each side's array to the pair with two
-    id-keyed joins and take size(array_intersect) in-row. Both arrays are
-    deduped, so the intersection size equals the relational match count
-    exactly; output matches jaccard_pairs column-for-column.
+    """Exact Jaccard verification of candidate pairs (id_a < id_b) against
+    per-doc DISTINCT shingle ARRAYS (doc_shingles output): attach each
+    side's array to the pair and take size(array_intersect) in-row. Both
+    arrays are deduped, so the intersection size is the number of shared
+    distinct k-grams, and sz_a/sz_b are the distinct k-gram counts.
+    Output (id_a, id_b, inter, sz_a, sz_b, jaccard_micro), jaccard in
+    exact integer micro-units (cross-engine reproducible).
 
-    Scale posture: work is O(candidate pairs × doc length) — identical to
-    the relational verify's join fan-out — but the corpus-sized shingle
-    table never shuffles at all; only candidate ids and their arrays move
-    (guide §8: decide on proxies, move payloads once). Candidates are
-    LSH-bounded, so the broadcast side is pair-table-sized, not
-    corpus-sized."""
-    a = base.select(
-        F.col(id_col).alias("id_a"), F.col(shingles_col).alias("_sh_a")
+    Scale posture: work is O(candidate pairs × doc length), and the
+    corpus-sized shingle table never shuffles. The only broadcast is the
+    candidate table, LSH-bounded and payload-free: each pair once per
+    member doc, keyed by that doc's id (a broadcast build side holds keys,
+    not payload). The shingle rows probe it map-side in one pass, and the
+    two arrays of a pair meet in an (id_a, id_b)-keyed aggregation of
+    exactly two rows per pair, so only pair-sized rows shuffle and no
+    array ever travels through a broadcast. Candidates must be distinct
+    pairs (lsh_band_pairs output); a pair missing a side drops out."""
+    by_doc = candidates.select(
+        F.explode(F.array("id_a", "id_b")).alias(id_col), "id_a", "id_b"
     )
-    b = base.select(
-        F.col(id_col).alias("id_b"), F.col(shingles_col).alias("_sh_b")
+    both = (
+        base.join(F.broadcast(by_doc), id_col)
+        .groupBy("id_a", "id_b")
+        # sorted by doc id, so id_a's array comes first
+        .agg(F.array_sort(F.collect_list(F.struct(id_col, shingles_col))).alias("_s"))
+        .filter(F.size("_s") == 2)
+        .select(
+            "id_a",
+            "id_b",
+            F.col("_s")[0][shingles_col].alias("_sh_a"),
+            F.col("_s")[1][shingles_col].alias("_sh_b"),
+        )
     )
-    step1 = a.join(F.broadcast(candidates.select("id_a", "id_b")), "id_a")
-    both = b.join(F.broadcast(step1), "id_b")
     inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("long")
     return (
         both.select(
@@ -381,23 +326,17 @@ def simhash_close_pairs(
 def ngram_pos_df(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 5
 ) -> DataFrame:
-    """(id, pos, g) rows — md5 of each word n-gram WITH its position
-    (position-keeping variant of shingle_df; same posexplode+lead plan,
-    one url-keyed window shuffle, no per-element re-tokenization)."""
-    toks = df.select(
+    """(id, pos, g) rows — md5 of each word n-gram WITH its position: the
+    position-keeping variant of shingle_df. ``pos`` is the 0-based index of
+    the gram's first token; docs with fewer than n tokens emit no row.
+    Built from the same in-row k-gram array (shingle_array, duplicates
+    kept), so it is map-side only: no shuffle, no window."""
+    return df.select(
         F.col(id_col),
-        F.posexplode(tokens_array(F.col(text_col))).alias("pos", "tok"),
-    )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, n)]
-    return (
-        toks.select(
-            F.col(id_col),
-            F.col("pos"),
-            F.when(parts[-1].isNotNull(), _md5(F.concat_ws(" ", *parts))).alias("g"),
-        )
-        .filter(F.col("g").isNotNull())
-    )
+        F.posexplode(shingle_array(F.col(text_col), n, distinct=False)).alias(
+            "pos", "gram"
+        ),
+    ).select(F.col(id_col), F.col("pos"), _md5(F.col("gram")).alias("g"))
 
 
 def shared_ngram_stats(
@@ -752,7 +691,7 @@ def substring_span_dedup(
 
     Suffix arrays don't distribute; the equivalent relational shape does:
 
-      1. (doc, pos, gram) rows via ngram_pos_df (one doc-keyed window);
+      1. (doc, pos, gram) rows via ngram_pos_df (map-side, no shuffle);
       2. grams in ≥ min_docs docs via one gram-keyed groupBy;
       3. duplicated gram STARTS back on the docs via a gram-keyed
          left_semi join (candidates only — the corpus never self-joins);
@@ -839,11 +778,12 @@ def winnow_fingerprints(
 
     Output: id, fp_pos, fp_hash rows (the fingerprint set).
 
-    Scale posture (100 TB): reuses ngram_pos_df's positioned grams (one
-    doc-keyed window shuffle); selection is one more frame-window pass
-    over the SAME partitioning (no extra exchange) + a distinct whose
-    keys are doc-local. Never doc × doc; md5 hex compares consistently
-    across engines (lexicographic on a fixed-width hex alphabet).
+    Scale posture (100 TB): reuses ngram_pos_df's positioned grams
+    (map-side); selection is one doc-keyed window shuffle carrying both
+    window passes (the frame min and the per-doc max position) + a
+    distinct whose keys are doc-local. Never doc × doc; md5 hex compares
+    consistently across engines (lexicographic on a fixed-width hex
+    alphabet).
     """
     grams = ngram_pos_df(df, id_col, text_col, n=k)
     part = Window.partitionBy(id_col)

@@ -27,12 +27,17 @@ def build_session(
 ) -> SparkSession:
     """Build a SparkSession with AQE + Arrow enabled.
 
-    ``master=None`` defers to spark-submit / the environment (cluster path);
-    tests and bench pass ``local[N]`` explicitly.
+    ``master=None`` keeps the master spark-submit was given (cluster path);
+    outside spark-submit it is ``local[N]``, N = $SPARK_GRAFT_CPUS or the
+    CPUs this process may run on. Tests and bench pass ``local[N]``
+    explicitly.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = SparkSession.builder.appName(app_name)
-    if master is None and "SPARK_MASTER" not in os.environ:
+    # spark-submit starts the JVM, with the submitted master, before this
+    # process and hands it over through PYSPARK_GATEWAY_PORT; a builder
+    # master would override the submitted one
+    if master is None and not {"SPARK_MASTER", "PYSPARK_GATEWAY_PORT"} & os.environ.keys():
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)

@@ -1,6 +1,7 @@
 """J8 deployment-surface smoke: the spark-submit entrypoint end-to-end on a
 tiny pages table (north rule: `spark-submit --py-files ... job.py`)."""
 
+import glob
 import json
 import os
 import subprocess
@@ -34,14 +35,23 @@ def _pyfiles_zip(tmp_path) -> str:
     return zpath
 
 
-def test_job_extract_and_resume(pages_parquet, tmp_path):
-    """Fresh driver process (same launch shape spark-submit uses: a python
-    driver + --py-files zip on the executor path), extract subcommand, then a
-    second run that must resume to a no-op."""
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4",
-               PYTHONPATH=_pyfiles_zip(tmp_path))
+def test_job_extract_and_resume(spark, pages_parquet, tmp_path):
+    """Fresh driver process launched by spark-submit (the north rule's
+    deployment shape: --master plus a --py-files zip on the executor path),
+    extract subcommand, then a second run that must resume to a no-op. The
+    submitted master wins over the local default: on local[2] the 8-file
+    input runs as 2 kernel tasks, so the runs table gets 2 lineage rows
+    (the local default, SPARK_GRAFT_CPUS=4, would give 4)."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    from py_image_toolkit_spark.sources.tables import SnapshotTable
+
+    assert len(glob.glob(os.path.join(pages_parquet, "*.parquet"))) == 8
+    env = dict(os.environ, SPARK_GRAFT_CPUS="4", PYSPARK_PYTHON=sys.executable)
     out_root = str(tmp_path / "extractions")
-    cmd = [sys.executable, os.path.join(ROOT, "job.py"), "extract",
+    cmd = [os.path.join(_find_spark_home(), "bin", "spark-submit"),
+           "--master", "local[2]", "--py-files", _pyfiles_zip(tmp_path),
+           os.path.join(ROOT, "job.py"), "extract",
            "--input", pages_parquet, "--output", out_root]
     r1 = subprocess.run(cmd, capture_output=True, text=True, timeout=600,
                         env=env, cwd=str(tmp_path))
@@ -49,23 +59,13 @@ def test_job_extract_and_resume(pages_parquet, tmp_path):
     s1 = json.loads([l for l in r1.stdout.splitlines() if l.startswith("{")][-1])
     assert s1["docs_in"] == 40 and s1["rows_out"] == 80  # 2 rules/url
     assert s1["snapshot_id"] == 1
+    assert SnapshotTable(out_root + "_runs").read(spark).count() == 2
 
     r2 = subprocess.run(cmd + ["--run-id", "again"], capture_output=True,
                         text=True, timeout=600, env=env, cwd=str(tmp_path))
     assert r2.returncode == 0, r2.stderr[-2000:]
     s2 = json.loads([l for l in r2.stdout.splitlines() if l.startswith("{")][-1])
     assert s2["docs_in"] == 0 and s2["snapshot_id"] is None  # resumed: no-op
-
-
-def test_job_bench_subcommand(tmp_path):
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
-    r = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "job.py"), "bench",
-         "--n-docs", "200"],
-        capture_output=True, text=True, timeout=600, env=env, cwd=ROOT)
-    assert r.returncode == 0, r.stderr[-2000:]
-    out = json.loads([l for l in r.stdout.splitlines() if l.startswith("{")][-1])
-    assert out["n_docs"] == 200 and out["docs_per_sec"] > 0
 
 
 def test_job_compact_subcommand(spark, pages_parquet, tmp_path):

@@ -22,6 +22,17 @@ def short_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _near_dup_pairs(df):
+    """The production near-dup chain (q19's): doc_shingles → minhash →
+    lsh_band_pairs → jaccard_verify_arrays."""
+    base = D.doc_shingles(df, k=3)
+    sigs = D.minhash_signatures(
+        base.select("doc_id", F.explode("shingles").alias("shingle")), num_hashes=8
+    )
+    cands = D.lsh_band_pairs(sigs, num_hashes=8, rows_per_band=2)
+    return D.jaccard_verify_arrays(base, cands, min_jaccard=0.5)
+
+
 def test_shingle_df_survives_short_docs(short_docs):
     """Docs with < k tokens must yield zero shingle rows, not abort the job
     (sequence(1, size-(k-1)) is DESCENDING when size < k and slice throws)."""
@@ -31,12 +42,9 @@ def test_shingle_df_survives_short_docs(short_docs):
 
 
 def test_full_dedup_chain_with_short_docs(short_docs):
-    """The whole minhash→LSH→jaccard chain runs on a corpus containing short
-    docs and still finds the one real near-dup pair."""
-    sh = D.shingle_df(short_docs, k=3)
-    sigs = D.minhash_signatures(sh, num_hashes=8)
-    cands = D.lsh_band_pairs(sigs, num_hashes=8, rows_per_band=2)
-    pairs = D.jaccard_pairs(sh, min_jaccard=0.5, candidates=cands).toPandas()
+    """The whole shingle→minhash→LSH→jaccard chain runs on a corpus
+    containing short docs and still finds the one real near-dup pair."""
+    pairs = _near_dup_pairs(short_docs).toPandas()
     assert [(r.id_a, r.id_b) for r in pairs.itertuples()] == [(4, 5)]
 
 
@@ -150,10 +158,7 @@ def test_dedup_chain_robust_to_arbitrary_text(spark):
         "mixed 한글 and english tokens 123 456-789",
     ]
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    sh = D.shingle_df(df, k=3)
-    sigs = D.minhash_signatures(sh, num_hashes=8)
-    cands = D.lsh_band_pairs(sigs, num_hashes=8, rows_per_band=2)
-    pairs = D.jaccard_pairs(sh, min_jaccard=0.5, candidates=cands).collect()
+    pairs = _near_dup_pairs(df).collect()
     assert all(r.id_a < r.id_b for r in pairs)
     assert {(r.id_a, r.id_b) for r in pairs} >= {(7, 8)}  # the exact dup pair
     # exact dedup agrees on the duplicate group

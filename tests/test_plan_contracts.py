@@ -60,23 +60,52 @@ def test_lsh_band_pairs_is_keyed_equijoin(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_jaccard_verify_semi_join_reduces(spark):
-    from py_image_toolkit_spark.operators.dedup import (
-        jaccard_pairs,
-        lsh_band_pairs,
-        minhash_signatures,
-        shingle_df,
-    )
+def _broadcast_inputs(df) -> list[list[tuple[str, str]]]:
+    """(name, type) of the input columns of every BroadcastExchange in the
+    final plan of ``df`` (run first, so adaptive execution has settled
+    every join), including those inside persisted relations."""
+    df.collect()
+    found, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        elif name == "ReusedExchange":
+            stack.append(node.child())
+        elif name == "InMemoryTableScan":
+            stack.append(node.relation().cachedPlan())
+        if name == "BroadcastExchange":
+            out = node.child().output()
+            found.append([
+                (out.apply(i).name(), out.apply(i).dataType().simpleString())
+                for i in range(out.size())
+            ])
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return found
 
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog variant " + str(i % 3))
-         for i in range(12)],
-        "doc_id long, text string",
-    )
-    sh = shingle_df(docs, k=3)
-    cands = lsh_band_pairs(minhash_signatures(sh))
-    plan = plan_of(jaccard_pairs(sh, candidates=cands))
-    assert "LeftSemi" in plan  # shingles shrink to candidate ids FIRST
+
+def test_q19_broadcasts_no_shingle_array(spark, sf_dir):
+    """q19's Jaccard verify broadcasts the bare candidate ids (each pair
+    keyed by a member doc id) and nothing that carries an array payload: a
+    broadcast of the per-doc shingle arrays (shingles, _sh_a, _sh_b) grows
+    with corpus text and lands whole in the driver and in every
+    executor."""
+    from py_image_toolkit_spark import contract
+
+    try:
+        df = contract.QUERIES["q19_ngram_jaccard"](spark, sf_dir)
+        inputs = _broadcast_inputs(df)
+        plan = plan_of(df)
+    finally:
+        contract.release_persists()
+    assert [("doc_id", "bigint"), ("id_a", "bigint"), ("id_b", "bigint")] in inputs
+    assert not [
+        cols for cols in inputs if any(t.startswith("array") for _, t in cols)
+    ], inputs
     assert "CartesianProduct" not in plan
 
 

@@ -5,6 +5,9 @@ directly against the pre-optimization plans)."""
 
 from __future__ import annotations
 
+import math
+import re
+
 import pytest
 
 from pyspark.sql import Window
@@ -77,19 +80,81 @@ def test_minhash_shingled_matches_grouped_pairs(docs):
     assert pairs_r == pairs_g
 
 
-def test_jaccard_verify_arrays_matches_relational(docs):
+def _set_jaccard(texts, pairs, k=3, min_micro=500_000):
+    """Pure-Python reference for the verify: distinct word k-gram sets per
+    doc (split on the engine's ``\\s+`` class) and their exact Jaccard in
+    micro-units, over the given candidate pairs."""
+    def grams(text):
+        toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", text) if t]
+        return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+    out = []
+    for a, b in pairs:
+        ga, gb = grams(texts[a]), grams(texts[b])
+        inter = len(ga & gb)
+        micro = math.floor(inter * 1_000_000 / len(ga | gb) + 0.5)
+        if micro >= min_micro:
+            out.append((a, b, inter, len(ga), len(gb), micro))
+    return sorted(out)
+
+
+def test_jaccard_verify_arrays_matches_set_jaccard(docs):
     base = D.doc_shingles(docs, k=3)
     shingles = D.shingle_df(docs, k=3)
     cands = D.lsh_band_pairs(D.minhash_signatures(shingles, num_hashes=8))
-    rel = _rows(
-        D.jaccard_pairs(shingles, min_jaccard=0.5, candidates=cands),
-        "id_a", "id_b",
-    )
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    pairs = [(r["id_a"], r["id_b"]) for r in cands.collect()]
     arr = _rows(
         D.jaccard_verify_arrays(base, cands, min_jaccard=0.5), "id_a", "id_b"
     )
-    assert arr == rel
+    assert arr == _set_jaccard(texts, pairs)
     assert len(arr) > 0  # fixture really exercises the verify path
+
+
+def _old_ngram_pos_df(df, id_col="doc_id", text_col="text", n=5):
+    """The pre-array posexplode → lead-window implementation of
+    ngram_pos_df."""
+    toks = df.select(
+        F.col(id_col),
+        F.posexplode(D.tokens_array(F.col(text_col))).alias("pos", "tok"),
+    )
+    w = Window.partitionBy(id_col).orderBy("pos")
+    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, n)]
+    return (
+        toks.select(
+            F.col(id_col),
+            F.col("pos"),
+            F.when(
+                parts[-1].isNotNull(), F.md5(F.encode(F.concat_ws(" ", *parts), "UTF-8"))
+            ).alias("g"),
+        )
+        .filter(F.col("g").isNotNull())
+    )
+
+
+def test_ngram_pos_df_matches_window_form(spark, docs):
+    """The array form of ngram_pos_df (feeding q41, q44, q70, q75, q77)
+    emits the same (id, pos, md5) rows as the window form it replaced,
+    on edge texts: non-space whitespace, full-width digits, docs shorter
+    than n, and one 5,000-char token."""
+    extra = spark.createDataFrame(
+        [
+            (101, "a\tb\x0bc\x0cd e\t\tf\x0b\x0cg h i j"),
+            (102, "\x0c lead\ttab\x0btrail \x0b"),
+            (103, "１２ ３４ ５６ ７８ ９０ １２ ３４ ５６ ７８"),
+            (104, "one two"),
+            (105, "one two three four"),
+            (106, "pre " + "x" * 5000 + " post tail end more words"),
+            (107, "x" * 5000),
+        ],
+        "doc_id long, text string",
+    )
+    df = docs.unionByName(extra)
+    for n in (3, 5, 8):
+        new = _rows(D.ngram_pos_df(df, n=n), "doc_id", "pos")
+        old = _rows(_old_ngram_pos_df(df, n=n), "doc_id", "pos")
+        assert new == old
+        assert len(new) > 0
 
 
 def test_line_dedup_empty_doc_reports_zero(spark):
