@@ -2,8 +2,7 @@
 
 Per-query isolation with the noop sink (guide §1.4), job descriptions
 (§1.5), and .explain("formatted") capture for plans/r06/. Mirrors bench.py's
-methodology (same session config, sf0.001 warm-up, interleaved best-of-N)
-so numbers are comparable, but adds:
+methodology (sf0.001 warm-up, interleaved best-of-N), but adds:
 
   - plan capture:    python bench_extra.py plans [out_dir] [names...]
   - per-query bench: python bench_extra.py time [trials] [names...]
@@ -11,6 +10,11 @@ so numbers are comparable, but adds:
 The extraction pipeline is timed by bench.py's ``extract_pipeline`` leaf.
 
 Env: $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), $SPARK_GRAFT_CPUS.
+The session is session.build_session's: local[$SPARK_GRAFT_CPUS or the CPU
+count] with an 8g heap, or under spark-submit the submitted master and
+conf, e.g.
+
+    spark-submit --master local[4] --driver-memory 6g bench_extra.py time 3 q06_sessionize_rle
 """
 
 from __future__ import annotations
@@ -28,13 +32,7 @@ from py_image_toolkit_spark.session import build_session  # noqa: E402
 
 
 def _session():
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(
-        f"bench-extra-{cpus}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-        extra_conf={"spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g")},
-    )
+    spark = build_session("bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 

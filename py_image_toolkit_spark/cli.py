@@ -18,9 +18,9 @@ Subcommands:
               (small-files maintenance; --expire additionally GCs
                pre-compaction snapshots)
 
-``--master`` is deliberately absent: spark-submit supplies the master, and
-the session keeps it; run without spark-submit, the session is local[N]
-with N = $SPARK_GRAFT_CPUS or the process's CPU count
+``--master`` is deliberately absent: spark-submit supplies the master and
+any ``--conf``, and the session keeps them; run without spark-submit, the
+session is local[N] with N = $SPARK_GRAFT_CPUS or the process's CPU count
 (session.build_session).
 """
 

@@ -13,7 +13,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def main(only: list[str]) -> int:
-    spark = build_session("qcheck", master="local[8]", shuffle_partitions=8)
+    spark = build_session("qcheck")
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connection(SF_DIR)
     bad = 0

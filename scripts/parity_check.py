@@ -11,7 +11,7 @@ from py_image_toolkit_spark.testing import diff_frames, engine_frame, oracle_fra
 
 def main(n: int) -> int:
     cfg = ExtractConfig()
-    spark = build_session("parity", master="local[8]", shuffle_partitions=8)
+    spark = build_session("parity")
     spark.sparkContext.setLogLevel("ERROR")
     problems = diff_frames(engine_frame(spark, n, cfg), oracle_frame(n, cfg))
     for p in problems:

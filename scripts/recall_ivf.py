@@ -23,7 +23,7 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 
 def main() -> None:
-    spark = build_session("recall-ivf", master="local[8]", shuffle_partitions=8)
+    spark = build_session("recall-ivf")
     spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     corpus = emb.filter(F.col("vec_id") >= 5)

@@ -8,7 +8,7 @@ from py_image_toolkit_spark.plans.pipeline import extract
 from py_image_toolkit_spark.session import build_session
 
 print("package:", pits.__name__, pits.__version__)
-spark = build_session("verify", master="local[4]", shuffle_partitions=4)
+spark = build_session("verify")
 spark.sparkContext.setLogLevel("ERROR")
 
 # happy path: 50 docs, default config

@@ -35,6 +35,65 @@ def _pyfiles_zip(tmp_path) -> str:
     return zpath
 
 
+def _spark_submit(tmp_path, *args):
+    """``spark-submit --py-files <library zip> *args`` in a fresh driver
+    process with SPARK_GRAFT_CPUS=4 (so the local default would be
+    local[4])."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    env = dict(os.environ, SPARK_GRAFT_CPUS="4", PYSPARK_PYTHON=sys.executable)
+    cmd = [os.path.join(_find_spark_home(), "bin", "spark-submit"),
+           "--py-files", _pyfiles_zip(tmp_path), *args]
+    return subprocess.run(cmd, capture_output=True, text=True, timeout=600,
+                          env=env, cwd=str(tmp_path))
+
+
+def _last_json(stdout: str) -> dict:
+    return json.loads([l for l in stdout.splitlines() if l.startswith("{")][-1])
+
+
+_PROBE = """
+import json
+from py_image_toolkit_spark.session import build_session
+
+spark = build_session()
+conf = spark.sparkContext.getConf()
+print(json.dumps({
+    "master": spark.sparkContext.master,
+    "driver_memory": conf.get("spark.driver.memory"),
+    **{k: spark.conf.get(k) for k in (
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        "spark.sql.join.preferSortMergeJoin",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.files.maxPartitionBytes",
+    )},
+}))
+spark.stop()
+"""
+
+
+def test_submitted_conf_wins_over_session_defaults(tmp_path):
+    """Under spark-submit, every value the operator submitted reaches the
+    session; the session's own value applies only to a key nobody
+    submitted (spark.sql.files.maxPartitionBytes)."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(_PROBE)
+    r = _spark_submit(
+        tmp_path, "--master", "local[2]", "--driver-memory", "2g",
+        "--conf", "spark.sql.adaptive.advisoryPartitionSizeInBytes=32m",
+        "--conf", "spark.sql.join.preferSortMergeJoin=true",
+        "--conf", "spark.sql.shuffle.partitions=7", str(probe))
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert _last_json(r.stdout) == {
+        "master": "local[2]",
+        "driver_memory": "2g",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32m",
+        "spark.sql.join.preferSortMergeJoin": "true",
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.files.maxPartitionBytes": "16m",
+    }
+
+
 def test_job_extract_and_resume(spark, pages_parquet, tmp_path):
     """Fresh driver process launched by spark-submit (the north rule's
     deployment shape: --master plus a --py-files zip on the executor path),
@@ -42,29 +101,22 @@ def test_job_extract_and_resume(spark, pages_parquet, tmp_path):
     submitted master wins over the local default: on local[2] the 8-file
     input runs as 2 kernel tasks, so the runs table gets 2 lineage rows
     (the local default, SPARK_GRAFT_CPUS=4, would give 4)."""
-    from pyspark.find_spark_home import _find_spark_home
-
     from py_image_toolkit_spark.sources.tables import SnapshotTable
 
     assert len(glob.glob(os.path.join(pages_parquet, "*.parquet"))) == 8
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4", PYSPARK_PYTHON=sys.executable)
     out_root = str(tmp_path / "extractions")
-    cmd = [os.path.join(_find_spark_home(), "bin", "spark-submit"),
-           "--master", "local[2]", "--py-files", _pyfiles_zip(tmp_path),
-           os.path.join(ROOT, "job.py"), "extract",
-           "--input", pages_parquet, "--output", out_root]
-    r1 = subprocess.run(cmd, capture_output=True, text=True, timeout=600,
-                        env=env, cwd=str(tmp_path))
+    args = ["--master", "local[2]", os.path.join(ROOT, "job.py"), "extract",
+            "--input", pages_parquet, "--output", out_root]
+    r1 = _spark_submit(tmp_path, *args)
     assert r1.returncode == 0, r1.stderr[-2000:]
-    s1 = json.loads([l for l in r1.stdout.splitlines() if l.startswith("{")][-1])
+    s1 = _last_json(r1.stdout)
     assert s1["docs_in"] == 40 and s1["rows_out"] == 80  # 2 rules/url
     assert s1["snapshot_id"] == 1
     assert SnapshotTable(out_root + "_runs").read(spark).count() == 2
 
-    r2 = subprocess.run(cmd + ["--run-id", "again"], capture_output=True,
-                        text=True, timeout=600, env=env, cwd=str(tmp_path))
+    r2 = _spark_submit(tmp_path, *args, "--run-id", "again")
     assert r2.returncode == 0, r2.stderr[-2000:]
-    s2 = json.loads([l for l in r2.stdout.splitlines() if l.startswith("{")][-1])
+    s2 = _last_json(r2.stdout)
     assert s2["docs_in"] == 0 and s2["snapshot_id"] is None  # resumed: no-op
 
 
@@ -96,7 +148,7 @@ def test_job_compact_subcommand(spark, pages_parquet, tmp_path):
                 "--expire"],
         capture_output=True, text=True, timeout=600, env=env, cwd=str(tmp_path))
     assert rc.returncode == 0, rc.stderr[-2000:]
-    s = json.loads([l for l in rc.stdout.splitlines() if l.startswith("{")][-1])
+    s = _last_json(rc.stdout)
     assert s["dirs_before"] == 2 and s["dirs_after"] == 1
     assert s["expired_dirs"] == 2
 

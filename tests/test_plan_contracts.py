@@ -318,6 +318,16 @@ def test_quantized_ivf_composition_plan(emb):
     assert plan.count("BroadcastExchange") >= 2
 
 
+def test_large_equijoin_sorts_and_merges(spark):
+    """Two sides above the broadcast threshold join by sort-merge, Spark's
+    default: a shuffled hash join keeps its whole per-partition build side
+    in memory and cannot spill, so a query that wants one asks with a
+    ``shuffle_hash`` hint (q02) instead of a session-wide flip."""
+    plan = plan_of(spark.range(10**8).join(spark.range(10**7), "id"))
+    assert "SortMergeJoin" in plan
+    assert "ShuffledHashJoin" not in plan
+
+
 def test_bucketed_join_and_agg_are_exchange_free(spark, tmp_path):
     """J5 co-location: two tables bucketed on the same key join WITHOUT any
     Exchange (the shuffle was paid once at write time), and a groupBy on
