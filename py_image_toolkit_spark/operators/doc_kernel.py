@@ -24,11 +24,18 @@ the Column/Window labeling (operators/extract_fields.py) against DuckDB.
 
 Error containment (J6): extract_document returns typed failure records for
 undecodable/empty/degenerate inputs; a poisoned row can never fail the task.
+
+Worker set-up is paid once per worker, not once per task (≙ the reference's
+init-once-per-process, crop.py:613-615): every task ends by dropping the
+worker's cached zip finders, so the next task's ``invalidate_caches`` has
+no archive to re-read (``_drop_zip_finders``).
 """
 
 from __future__ import annotations
 
+import sys
 import time
+import zipimport
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -103,6 +110,25 @@ def lineage_accumulator(sc) -> Accumulator:
     return sc.accumulator({}, _LineageParam())
 
 
+def _drop_zip_finders() -> None:
+    """Evict every cached ``zipimporter`` and its archive's directory.
+
+    Before every task, pyspark's worker calls ``importlib.invalidate_caches()``;
+    on CPython 3.11 that makes each cached zipimporter re-read its whole
+    archive directory at once. A reused worker caches one per package of
+    ``pyspark.zip`` (1,328 entries), of py4j's zip and of the spark-core jar
+    (5,359 entries): 16 finders, 126-266 ms per task with four concurrent
+    tasks on a 4-core host, more than a small task's parse. Dropped here,
+    the next task's invalidation finds nothing to re-read (0.02-0.07 ms),
+    and an import that walks an archive later builds its finder from a
+    fresh read: the same invalidation, done lazily. Loaders of
+    already-imported modules keep their own directory and are untouched."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+            zipimport._zip_directory_cache.pop(finder.archive, None)
+
+
 def _make_doc_kernel(cfg: ExtractConfig, lineage: Accumulator | None = None):
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t_start = time.monotonic()
@@ -149,6 +175,7 @@ def _make_doc_kernel(cfg: ExtractConfig, lineage: Accumulator | None = None):
             lineage.add(
                 {TaskContext.get().partitionId(): (rows, docs, ok, wall_us)}
             )
+        _drop_zip_finders()
 
     return run
 
@@ -167,10 +194,11 @@ def doc_extract_df(
     Partitioning before the CPU-bound parse is decided once, on the scan
     (html compresses ~10×, so byte-sized input splits can under-parallelize
     a compute-bound stage): when the scan already yields at least
-    ``defaultParallelism`` (and ≥ 2) splits, they are coalesced to one wave
+    ``defaultParallelism`` splits, they are coalesced to one wave
     of ``defaultParallelism`` tasks without moving any bytes; otherwise the
-    input is repartitioned by url into ``2 × defaultParallelism``
-    partitions.
+    input is repartitioned by url into ``defaultParallelism`` partitions,
+    also one wave: each task pays a fixed Python set-up, so one task per
+    core beats two waves.
 
     ``skip`` (a one-column ``url`` DataFrame, e.g. the urls already
     committed by a resumed job): its urls are dropped after that balancing,
@@ -209,13 +237,13 @@ def doc_extract_df(
     # Planning the scan's splits runs no Spark job.
     dp = pages.sparkSession.sparkContext.defaultParallelism
     scan_parts = src.rdd.getNumPartitions()
-    if scan_parts < max(2, dp):
-        src = src.repartition(2 * dp, F.col("url"))
+    # one wave of core-count tasks either way: per-task Python/Arrow setup
+    # is the dominant constant at this stage, so dp tasks of 2 files beat
+    # 2·dp tasks of 1 (measured 1.19 s → 0.77 s at 20k docs); coalesce
+    # merges scan splits without moving any bytes
+    if scan_parts < dp:
+        src = src.repartition(dp, F.col("url"))
     elif scan_parts > dp:
-        # one wave of core-count tasks: per-task Python/Arrow setup is the
-        # dominant constant at this stage, so dp tasks of 2 files beat 2·dp
-        # tasks of 1 (measured 1.19 s → 0.77 s at 20k docs); coalesce
-        # merges scan splits without moving any bytes
         src = src.coalesce(dp)
     if skip is not None:
         new = pages.select("url").join(skip, "url", "left_anti")

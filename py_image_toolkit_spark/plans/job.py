@@ -17,9 +17,13 @@ and writing the runs table run none.
   work, fixing crop.py's detect-before-gate inefficiency, SURVEY.md §4.2.4)
 - the parse partitioning is decided on the scan, before the resume skip
   (``extract``'s one rule): the kernel reads straight off a scan that
-  already has at least ``defaultParallelism`` splits, fewer splits are
-  repartitioned by url first, so the CPU-bound parse never runs on fewer
-  tasks than cores
+  already has at least ``defaultParallelism`` splits (coalesced to that
+  many), fewer splits are repartitioned by url into ``defaultParallelism``
+  partitions first, so the CPU-bound parse runs as one wave of one task
+  per core
+- each kernel task ends by dropping the Python worker's cached zip
+  finders, so a reused worker's next task does not re-read pyspark's
+  archives (``doc_kernel._drop_zip_finders``)
 - a resume with nothing left to do reads no html and runs no kernel task:
   its input's new urls come out empty, so adaptive execution prunes the
   html scan, and the write lands an empty commit dir. Like any run whose

@@ -71,19 +71,22 @@ def build_session(
     Precedence, per key: ``master``/``shuffle_partitions``/``extra_conf``,
     then the conf spark-submit was given (``--master``, ``--driver-memory``,
     ``--conf``), then this module's defaults: among them N shuffle
-    partitions and, outside spark-submit, the master ``local[N]``, with
-    N = $SPARK_GRAFT_CPUS or the CPUs this process may run on.
+    partitions and, outside spark-submit, the master ``local[N]`` and an
+    8g driver heap, with N = $SPARK_GRAFT_CPUS or the CPUs this process may
+    run on.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     conf = {**_DEFAULTS, "spark.sql.shuffle.partitions": str(cpus)}
     # spark-submit starts the JVM, with the submitted conf as its system
     # properties, before this process and hands it over through
     # PYSPARK_GATEWAY_PORT; outside spark-submit, reading a SparkConf would
-    # start a JVM without the settings below
+    # start a JVM without the settings below. That JVM's heap is already
+    # fixed, so a default driver memory would only misreport it.
     if "PYSPARK_GATEWAY_PORT" in os.environ:
         SparkContext._ensure_initialized()
         submitted = dict(SparkConf().getAll())
-        conf = {k: v for k, v in conf.items() if k not in submitted}
+        conf = {k: v for k, v in conf.items()
+                if k not in submitted and k != "spark.driver.memory"}
     elif master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is not None:

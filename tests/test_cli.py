@@ -94,6 +94,25 @@ def test_submitted_conf_wins_over_session_defaults(tmp_path):
     }
 
 
+def test_unsubmitted_driver_memory_is_not_claimed(tmp_path):
+    """spark-submit without ``--driver-memory`` starts the JVM on Spark's
+    own default heap before the session is built, so the session leaves
+    ``spark.driver.memory`` unset instead of naming a heap the JVM does
+    not have; every other default still applies."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(_PROBE)
+    r = _spark_submit(tmp_path, "--master", "local[1]", str(probe))
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert _last_json(r.stdout) == {
+        "master": "local[1]",
+        "driver_memory": None,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1m",
+        "spark.sql.join.preferSortMergeJoin": "true",
+        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.files.maxPartitionBytes": "16m",
+    }
+
+
 def test_job_extract_and_resume(spark, pages_parquet, tmp_path):
     """Fresh driver process launched by spark-submit (the north rule's
     deployment shape: --master plus a --py-files zip on the executor path),

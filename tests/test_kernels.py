@@ -1,6 +1,12 @@
 """E1 decode/strip + E2 segmentation + PDF kernels."""
 
+import importlib
+import sys
+import zipfile
+import zipimport
 import zlib
+
+import pyarrow as pa
 
 from py_image_toolkit_spark.kernels.normalize import decode_html, strip_noncontent
 from py_image_toolkit_spark.kernels.segment import (
@@ -186,3 +192,35 @@ def test_segment_fast_path_handles_entities_and_links():
     assert fast == _segment_html_stdlib(s)
     assert fast[0]["text"] == "Tom & Jerry A <tag>"
     assert fast[1]["n_link_chars"] == len("link one")
+
+
+def test_doc_kernel_task_drops_zip_finders(tmp_path):
+    """A doc-kernel task ends with no cached zip finder and no cached
+    archive directory, so the next task's ``importlib.invalidate_caches()``
+    re-reads no archive; a module in the evicted zip still imports."""
+    from py_image_toolkit_spark.config import ExtractConfig
+    from py_image_toolkit_spark.operators.doc_kernel import _make_doc_kernel
+
+    archive = str(tmp_path / "lib.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipped_one_liner.py", "VALUE = 7\n")
+    sys.path.append(archive)
+    try:
+        sys.path_importer_cache[archive] = zipimport.zipimporter(archive)
+        assert archive in zipimport._zip_directory_cache
+        batch = pa.RecordBatch.from_pydict({
+            "url": ["https://a.io/1"],
+            "warc_ts": pa.array([None], pa.timestamp("us", tz="UTC")),
+            "lang": ["en"],
+            "html": [b"<html><body><p>hello there</p></body></html>"],
+        })
+        out = list(_make_doc_kernel(ExtractConfig())(iter([batch])))
+        assert sum(b.num_rows for b in out) == len(ExtractConfig().rules)
+        assert archive not in sys.path_importer_cache
+        assert archive not in zipimport._zip_directory_cache
+        assert importlib.import_module("zipped_one_liner").VALUE == 7
+    finally:
+        sys.path.remove(archive)
+        sys.path_importer_cache.pop(archive, None)
+        zipimport._zip_directory_cache.pop(archive, None)
+        sys.modules.pop("zipped_one_liner", None)
