@@ -959,14 +959,15 @@ FROM ranked GROUP BY doc_id ORDER BY doc_id
 def q17(spark, sf_dir):
     """D5/D6 run-merge + D4 first-wins pivot → one 6-field record per doc.
 
-    r6 (guide §4.2): computed in ONE Arrow stage — doc-keyed groupBy
-    (collect_list + array_sort) then the oracle labeling function over
-    whole batches — replacing the ~7 window passes of the relational
-    chain (label_pass1 → name inference → neighbor relabel → sessionize →
+    Computed by ``extract_fields_from_tokens_kernel`` (guide §4.2): a
+    doc-keyed groupBy (collect_list + array_sort), then ONE mapInArrow
+    stage that applies the oracle labeling function to whole Arrow record
+    batches, in place of the ~7 window passes of the relational chain
+    (label_pass1 → name inference → neighbor relabel → sessionize →
     merge → pivot; measured 3.6 s → 1.3 s at sf0.1). The relational form
     stays the SQL-verified decomposition via q15/q16 and
     operators/extract_fields.py; byte-equality of the two forms over this
-    exact token table is pinned by
+    exact token table, and the single MapInArrow plan, are pinned by
     tests/test_r6_optimizations.py::test_q17_kernel_matches_relational_chain.
     The row_number seq window is skipped too: the kernel needs only the
     ORDER, so the raw (l_orderkey, l_linenumber, l_partkey, l_suppkey)
@@ -3466,8 +3467,8 @@ def q68(spark, sf_dir):
     """WARC ingestion (sources/warc.py): the Common-Crawl container format
     parsed into typed page rows — spec Content-Length framing (payloads
     may contain the record separator), HTTP status/body split, per-blob
-    error containment — via one Arrow-batched mapInPandas stage (a binary
-    container parse is a sanctioned Pandas-UDF case, like the DOM
+    error containment — via one map-side mapInArrow stage (a binary
+    container parse is a sanctioned Python stage, like the DOM
     segmenter). Blobs are synthesized in Spark from documents; the oracle
     predicts the parse output from documents directly, so a framing bug
     anywhere (octet vs char lengths, separator handling, UTF-8 bodies)

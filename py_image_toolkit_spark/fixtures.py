@@ -1,8 +1,9 @@
 """Deterministic synthetic ``pages`` table (FIXTURES.md §2, seed=42).
 
 Every row is a pure function of (seed, i) — generation is distributed via
-``mapInPandas`` over ``spark.range`` and reproducible regardless of
-partitioning. No external data (graft directive).
+``mapInArrow`` over ``spark.range`` and reproducible regardless of
+partitioning; ``warc_ts`` is a UTC instant. No external data (graft
+directive).
 
 Mix per 100 docs: 88 HTML (5 encoding variants, ~40% embedding Korean
 document-record token sequences incl. the verified reference quirks),
@@ -15,13 +16,27 @@ from __future__ import annotations
 
 import random
 import zlib
+from collections.abc import Iterator
 from datetime import datetime, timedelta
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    BinaryType, StringType, StructField, StructType, TimestampType,
+)
 
-PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
+PAGES_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), True),
+        StructField("warc_ts", TimestampType(), True),
+        StructField("html", BinaryType(), True),
+        StructField("text", StringType(), True),
+        StructField("lang", StringType(), True),
+    ]
+)
+_ARROW_SCHEMA = to_arrow_schema(PAGES_SCHEMA)
 
 _EN_VOCAB = (
     "the quick brown fox jumps over lazy dog while autumn rain settles across "
@@ -176,17 +191,16 @@ def page_row(i: int, seed: int = 42) -> dict:
     }
 
 
-def pages_pandas(n: int, seed: int = 42) -> pd.DataFrame:
-    return pd.DataFrame([page_row(i, seed) for i in range(n)])
-
-
 def pages_df(spark: SparkSession, n: int, seed: int = 42, partitions: int | None = None) -> DataFrame:
     """Distributed deterministic generation (scales to bench sizes without
     driver materialization)."""
     parts = partitions or spark.sparkContext.defaultParallelism
 
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame([page_row(int(i), seed) for i in pdf["id"]])
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield pa.RecordBatch.from_pylist(
+                [page_row(i, seed) for i in batch.column("id").to_pylist()],
+                schema=_ARROW_SCHEMA,
+            )
 
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, PAGES_SCHEMA)
+    return spark.range(0, n, numPartitions=parts).mapInArrow(gen, PAGES_SCHEMA)

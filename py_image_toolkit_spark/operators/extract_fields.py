@@ -343,22 +343,25 @@ def extract_fields_from_tokens_kernel(
     token_col: str = "token",
 ) -> DataFrame:
     """(keys, order, token) rows → 6-field record per key group via the
-    oracle labeling function in ONE Arrow stage (guide §4.2 posture: Spark
-    does the distribution/shuffle, the per-document logic runs as native
-    CPython over whole batches — the same pure function the byte-parity
-    suite pins).
+    oracle labeling function in ONE ``mapInArrow`` stage (guide §4.2
+    posture: Spark does the distribution/shuffle, the per-document logic
+    runs as native CPython over whole Arrow record batches — the same pure
+    function the byte-parity suite pins). The key columns are copied from
+    the input batch; the six field columns are built against the Arrow
+    form of the output schema.
 
     Plan shape: one keys-keyed groupBy (collect_list + array_sort — tokens
-    shuffle once, partially aggregated map-side) then a group-sized Arrow
-    stage. Replaces the ~7 window passes of the relational form
+    shuffle once, partially aggregated map-side) then a group-sized
+    MapInArrow stage. Replaces the ~7 window passes of the relational form
     (label_pass1 → name inference → neighbor relabel → sessionize → merge →
     pivot) with a single exchange; byte-identical by construction because
     oracle/labeling.py is the spec both forms implement (asserted by the
     q17 DuckDB oracle and tests/test_r6_optimizations.py)."""
     from collections.abc import Iterator
 
-    import pandas as pd
+    import pyarrow as pa
 
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StringType, StructField, StructType
 
     from py_image_toolkit_spark.oracle.labeling import extract_fields
@@ -368,6 +371,7 @@ def extract_fields_from_tokens_kernel(
         [StructField(f.name, f.dataType, f.nullable) for f in key_fields]
         + [StructField(f, StringType(), True) for f in V.OUTPUT_FIELDS]
     )
+    arrow_schema = to_arrow_schema(out_schema)
 
     ord_struct = F.struct(*[F.col(c) for c in order_cols], F.col(token_col))
     grouped = tokens.groupBy(*keys).agg(
@@ -376,12 +380,22 @@ def extract_fields_from_tokens_kernel(
         ).alias("_toks")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [extract_fields(list(toks)) for toks in pdf["_toks"]]
-            out = {k: pdf[k] for k in keys}
-            for f in V.OUTPUT_FIELDS:
-                out[f] = [r[f] for r in recs]
-            yield pd.DataFrame(out)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            # to_numpy converts the token lists in C++; to_pylist builds an
+            # Arrow scalar per token, ~10x slower on this column
+            recs = [
+                extract_fields(toks.tolist())
+                for toks in batch.column("_toks").to_numpy(zero_copy_only=False)
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(f.name).cast(f.type)
+                    if f.name in keys
+                    else pa.array([r[f.name] for r in recs], f.type)
+                    for f in arrow_schema
+                ],
+                schema=arrow_schema,
+            )
 
-    return grouped.mapInPandas(run, out_schema)
+    return grouped.mapInArrow(run, out_schema)

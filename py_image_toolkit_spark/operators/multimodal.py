@@ -8,11 +8,9 @@ Stages mirror the reference's per-format transform parameterization
 (resize.py / optimize.py):
 - ``probe_media``        : sniff container kind + synthetic dims from the
                            byte header (pure Columns — no decode)
-- ``decode_features``    : mapInPandas feature extraction; ``fake=True``
-                           yields a deterministic per-payload feature vector
-                           (byte histogram moments); ``fake=False`` raises
-                           NotImplementedError("media decode not available
-                           in this environment") per batch
+- ``decode_features``    : mapInArrow feature extraction; a deterministic
+                           stand-in per-payload feature vector (byte
+                           histogram moments) in place of a real decoder
 - ``resize_plan``        : H1/H2 fit math over metadata dims (no pixels
                            touched — at 100 TB you plan the transform from
                            metadata and decode once, in one fused stage)
@@ -24,10 +22,11 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, DoubleType, LongType, StringType, StructField, StructType,
 )
@@ -68,39 +67,44 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def decode_features(df: DataFrame, fake: bool = True, dim: int = 8) -> DataFrame:
+_FEATURES_ARROW = to_arrow_schema(FEATURES_SCHEMA)
+
+
+def decode_features(df: DataFrame, dim: int = 8) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
-    ``fake=True``: deterministic stand-in (byte-histogram moments) so the
-    distributed plumbing is fully testable. ``fake=False``: the real decoder
-    hook — STUB: raises NotImplementedError (no PIL/cv2/librosa here)."""
+    A deterministic stand-in for a media decoder (byte-histogram moments:
+    feature k is the mean of bytes k, k + dim, k + 2·dim, …, scaled to
+    [0, 1]), so the distributed plumbing is fully testable without
+    PIL/cv2/librosa. An
+    empty or null payload yields null features with status
+    ``"empty payload"``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "media decode not available in this environment "
-                    "(PIL/cv2/librosa absent) — plumbing-only stub"
-                )
-            out = {"media_id": [], "kind": [], "features": [], "status": []}
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                out["media_id"].append(int(mid))
-                out["kind"].append(kind)
-                if payload is None or len(payload) == 0:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            out = {"features": [], "status": []}
+            for payload in batch.column("payload").to_pylist():
+                if not payload:
                     out["features"].append(None)
                     out["status"].append("empty payload")
                     continue
-                b = bytes(payload)
-                n = len(b)
                 feats = []
                 for k in range(dim):
-                    sl = b[k::dim]
+                    sl = payload[k::dim]
                     feats.append(round(sum(sl) / max(len(sl), 1) / 255.0, 9))
                 out["features"].append(feats)
                 out["status"].append("ok")
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(f.name).cast(f.type)
+                    if f.name in ("media_id", "kind")
+                    else pa.array(out[f.name], f.type)
+                    for f in _FEATURES_ARROW
+                ],
+                schema=_FEATURES_ARROW,
+            )
 
-    return df.select("media_id", "kind", "payload").mapInPandas(run, FEATURES_SCHEMA)
+    return df.select("media_id", "kind", "payload").mapInArrow(run, FEATURES_SCHEMA)
 
 
 def resize_plan(

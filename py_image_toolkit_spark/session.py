@@ -41,8 +41,9 @@ _DEFAULTS = {
     # Broadcast dimension tables up to 64 MB (guide §3.1): the fact side must
     # never shuffle for a dimension join.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
-    # Arrow for pandas conversions; the Python stages (the mapInArrow doc
-    # kernel, pandas UDFs) exchange Arrow batches of maxRecordsPerBatch.
+    # Arrow for driver-side pandas conversions (toPandas). The engine's
+    # Python stages (mapInArrow everywhere, applyInPandasWithState for
+    # stateful streaming) exchange Arrow batches of maxRecordsPerBatch.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": str(DEFAULT_ARROW_BATCH),
     # Parquet writes: zstd ≙ the reference's per-format quality knobs

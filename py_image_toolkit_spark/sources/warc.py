@@ -10,12 +10,12 @@ offset from the CC index) into the (url, warc_ts, html, …) page table the
 rest of the engine consumes (BASELINE.json input_hint shape).
 
 Parsing a binary container format is genuinely imperative, so this is one
-of the few sanctioned Pandas-UDF stages (SURVEY.md §7.2 rule: built-in
+of the few sanctioned Python stages (SURVEY.md §7.2 rule: built-in
 Columns first, Arrow-batched Python only where the format demands it —
 same ruling as the DOM segmenter, kernels/segment.py). The parser is a
-``mapInPandas`` generator: one Python call per Arrow batch, never per row,
-and each blob's records stream out without materializing more than one
-blob's splits at a time.
+``mapInArrow`` generator, like the doc kernel: one Python call per Arrow
+record batch, never per row, and each input batch's records go out as one
+output batch built against the Arrow form of ``WARC_SCHEMA``.
 
 Scale posture (100 TB of WARC): blobs arrive partitioned by file (the
 natural CC layout, ~1 GB gzip members); the parse is map-side only — no
@@ -30,14 +30,30 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-
-WARC_SCHEMA = (
-    "blob_id long, record_idx int, warc_type string, url string, "
-    "warc_date string, content_type string, payload binary, "
-    "http_status int, body binary, ok boolean, error string"
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    BinaryType, BooleanType, IntegerType, LongType, StringType, StructField,
+    StructType,
 )
+
+WARC_SCHEMA = StructType(
+    [
+        StructField("blob_id", LongType(), True),
+        StructField("record_idx", IntegerType(), True),
+        StructField("warc_type", StringType(), True),
+        StructField("url", StringType(), True),
+        StructField("warc_date", StringType(), True),
+        StructField("content_type", StringType(), True),
+        StructField("payload", BinaryType(), True),
+        StructField("http_status", IntegerType(), True),
+        StructField("body", BinaryType(), True),
+        StructField("ok", BooleanType(), True),
+        StructField("error", StringType(), True),
+    ]
+)
+_ARROW_SCHEMA = to_arrow_schema(WARC_SCHEMA)
 
 _SEP = b"\r\n\r\n"
 
@@ -56,7 +72,8 @@ def _parse_headers(block: bytes) -> dict[str, str]:
 def _split_records(blob: bytes) -> Iterator[tuple[bytes, bytes]]:
     """Yield (header_block, payload) per WARC record, using each record's
     Content-Length header (the spec's framing — payloads may themselves
-    contain the separator, so splitting on it would corrupt records)."""
+    contain the separator, so splitting on it would corrupt records). A
+    missing, negative or over-long Content-Length raises ``ValueError``."""
     pos = 0
     n = len(blob)
     while pos < n:
@@ -72,6 +89,12 @@ def _split_records(blob: bytes) -> Iterator[tuple[bytes, bytes]]:
         except ValueError:
             raise ValueError("missing/invalid Content-Length") from None
         body_start = hdr_end + len(_SEP)
+        if length < 0:
+            raise ValueError(f"negative Content-Length {length}")
+        if body_start + length > n:
+            raise ValueError(
+                f"Content-Length {length} runs past the end of the blob"
+            )
         payload = blob[body_start:body_start + length]
         yield header_block, payload
         # records are terminated by two CRLFs after the payload
@@ -106,10 +129,12 @@ def warc_records(
     every other blob in it) survives.
     """
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             out: list[dict] = []
-            for blob_id, blob in zip(pdf[id_col], pdf[data_col]):
+            for blob_id, blob in zip(
+                batch.column(id_col).to_pylist(), batch.column(data_col).to_pylist()
+            ):
                 try:
                     records = list(_split_records(bytes(blob)))
                 except Exception as exc:  # malformed framing: contain per blob
@@ -149,16 +174,9 @@ def warc_records(
                             "error": None,
                         }
                     )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "blob_id", "record_idx", "warc_type", "url", "warc_date",
-                    "content_type", "payload", "http_status", "body", "ok",
-                    "error",
-                ],
-            )
+            yield pa.RecordBatch.from_pylist(out, schema=_ARROW_SCHEMA)
 
-    return blobs.mapInPandas(parse, schema=WARC_SCHEMA)
+    return blobs.mapInArrow(parse, WARC_SCHEMA)
 
 
 def build_warc(records: list[tuple[str, str, str, bytes]]) -> bytes:

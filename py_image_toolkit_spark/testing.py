@@ -9,7 +9,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from py_image_toolkit_spark.config import ExtractConfig
-from py_image_toolkit_spark.fixtures import pages_df, pages_pandas
+from py_image_toolkit_spark.fixtures import page_row, pages_df
 from py_image_toolkit_spark.oracle import extract_pages
 from py_image_toolkit_spark.plans.pipeline import extract
 
@@ -59,14 +59,10 @@ def engine_frame(spark: SparkSession, n: int, cfg: ExtractConfig) -> pd.DataFram
 
 
 def oracle_frame(n: int, cfg: ExtractConfig) -> pd.DataFrame:
-    rows = pages_pandas(n)
+    rows = (page_row(i) for i in range(n))
     ora = pd.DataFrame(
         extract_pages(
-            (
-                (r["url"], r["html"], r["warc_ts"], r["lang"])
-                for _, r in rows.iterrows()
-            ),
-            cfg,
+            ((r["url"], r["html"], r["warc_ts"], r["lang"]) for r in rows), cfg
         )
     )
     ora["spans"] = ora["spans"].map(

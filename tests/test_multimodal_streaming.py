@@ -38,17 +38,16 @@ def test_probe_media_magic_sniff(media):
 
 
 def test_decode_features_fake_deterministic(media):
-    a = {r["media_id"]: r["features"] for r in decode_features(media, fake=True).collect()}
-    b = {r["media_id"]: r["features"] for r in decode_features(media, fake=True).collect()}
+    from tests.test_plan_contracts import plan_of
+
+    a = {r["media_id"]: r["features"] for r in decode_features(media).collect()}
+    b = {r["media_id"]: r["features"] for r in decode_features(media).collect()}
     assert a == b                          # deterministic
     assert len(a[1]) == 8                  # batch shape: fixed dim
     empty = {r["media_id"]: r["status"] for r in decode_features(media).collect()}
     assert empty[6] == "empty payload"     # error containment, no task death
-
-
-def test_decode_features_real_is_stubbed(media):
-    with pytest.raises(Exception, match="NotImplementedError|media decode"):
-        decode_features(media, fake=False).collect()
+    plan = plan_of(decode_features(media))
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
 
 
 def test_resize_plan_truncation(media):

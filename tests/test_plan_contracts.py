@@ -114,9 +114,12 @@ def test_doc_pipeline_single_exchange_single_python_stage(spark, tmp_path):
     from py_image_toolkit_spark.operators.doc_kernel import DOC_SCHEMA
     from py_image_toolkit_spark.plans.pipeline import extract
 
+    # the fixture generator is itself one Arrow stage
+    pages_plan = plan_of(pages_df(spark, 8))
+    assert pages_plan.count("MapInArrow") == 1 and "MapInPandas" not in pages_plan
     # materialize the fixture so the pipeline input is a parquet SCAN (the
-    # production shape) — pages_df itself is a mapInPandas generator and
-    # would double-count the Python stages
+    # production shape) — pages_df's own Python stage would otherwise be
+    # double-counted below
     src = str(tmp_path / "pages")
     pages_df(spark, 8).write.parquet(src)
     out = extract(spark.read.parquet(src))

@@ -175,7 +175,10 @@ def test_line_dedup_empty_doc_reports_zero(spark):
 
 def test_q17_kernel_matches_relational_chain(spark, sf_dir):
     """The r6 q17 Arrow-kernel form ≡ the relational window chain it
-    replaced, over the real contract token table."""
+    replaced, over the real contract token table; the kernel is one
+    MapInArrow stage."""
+    from tests.test_plan_contracts import plan_of
+
     from py_image_toolkit_spark import contract
     from py_image_toolkit_spark.contract import _e3_tokens_spark
     from py_image_toolkit_spark.operators.extract_fields import (
@@ -190,6 +193,8 @@ def test_q17_kernel_matches_relational_chain(spark, sf_dir):
         f.name for f in relational.schema.fields
     ]
     assert _rows(kernel, "doc_id") == _rows(relational, "doc_id")
+    plan = plan_of(kernel)
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
 
 
 def test_golden_rebuilds_on_extractor_version_change(tmp_path, sf_dir, monkeypatch):

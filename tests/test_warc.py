@@ -71,14 +71,24 @@ def test_warc_malformed_blob_is_contained(spark):
           http_response(b"fine"))]
     )
     bad = b"WARC/1.0\r\nWARC-Type: response\r\n\r\nno content length"
-    out = {
-        r.blob_id: r
-        for r in warc_records(_blob_df(spark, [(1, good), (2, bad)])).collect()
-    }
+    long_record = build_warc(
+        [("response", "https://a.example/cut", "2024-01-01T00:00:00Z",
+          http_response(b"x" * 200))]
+    )
+    # the payload ends 67 bytes in, short of its Content-Length
+    cut = long_record[:long_record.index(b"\r\n\r\n") + 4 + 67]
+    # a negative length must not swallow the records after it
+    negative = (
+        b"WARC/1.0\r\nWARC-Type: response\r\nContent-Length: -5\r\n\r\n"
+        + good
+    )
+    blobs = [(1, good), (2, bad), (3, cut), (4, negative)]
+    out = {r.blob_id: r for r in warc_records(_blob_df(spark, blobs)).collect()}
     assert out[1].ok is True and out[1].url == "https://a.example/ok"
-    assert out[2].ok is False
-    assert "warc_parse_error" in out[2].error
-    assert out[2].record_idx == -1
+    for blob_id in (2, 3, 4):
+        assert out[blob_id].ok is False
+        assert "warc_parse_error" in out[blob_id].error
+        assert out[blob_id].record_idx == -1
 
 
 def test_warc_parse_is_map_side_only(spark):
@@ -90,3 +100,4 @@ def test_warc_parse_is_map_side_only(spark):
     )
     plan = plan_of(warc_records(_blob_df(spark, [(1, blob)])))
     assert "Exchange" not in plan
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
