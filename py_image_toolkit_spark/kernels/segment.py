@@ -4,10 +4,11 @@ Graft of the reference's subject detection (reference crop.py:116-176,
 ``detect_faces_dnn``): each DOM block is a "detected subject" with a bbox in
 the rendered-text coordinate space and a confidence score. The detector here
 is a dependency-free ``html.parser``-based segmenter (this sandbox has no
-lxml/selectolax/bs4); it runs once per document inside an Arrow-batched
-``mapInPandas`` stage with a per-partition parser instance (≙ the reference's
-once-per-process detector init, crop.py:613-615 — NOT its per-file engine
-construction anti-pattern, ocr.py:108).
+lxml/selectolax/bs4); it runs once per document inside the doc kernel's
+``mapInArrow`` stage (operators/doc_kernel.py), with no per-document parser
+construction (≙ the reference's once-per-process detector init,
+crop.py:613-615 — NOT its per-file engine construction anti-pattern,
+ocr.py:108).
 
 Output block record (the "face row", crop.py:163-171 analog):
     {"tag": str, "text": str (whitespace-collapsed), "n_link_chars": int}
@@ -33,12 +34,10 @@ BLOCK_TAGS = frozenset(
     }
 )
 
-_WS_RE = re.compile(r"\s+")
-
-
 def ws_collapse(s: str) -> str:
-    """Canonical whitespace: runs → single space, stripped."""
-    return _WS_RE.sub(" ", s).strip()
+    """Canonical whitespace: runs → single space, stripped. ``str.split``'s
+    whitespace is the same set of code points as the regex ``\\s``."""
+    return " ".join(s.split())
 
 
 class _BlockSegmenter(HTMLParser):
@@ -116,16 +115,19 @@ def _segment_html_stdlib(html_text: str) -> list[dict]:
 # quoted) attributes, '/>' immediately before '>'. Anything else — '<!', a
 # bare '<' in text, exotic names, quote soup, CDATA elements — leaves an
 # unconsumed '<' (or trips the pre-check) and routes the WHOLE document to
-# the stdlib parser. Measured 1.9× on the fixture corpus (stage-level 1.67×,
-# kernel docs/s/core 1,971 → 2,808 with the round-4 label work) at
-# byte-identical output — differential-tested on the corpus + fuzz inputs.
+# the stdlib parser. About 4× faster than html.parser on the fixture
+# corpus at byte-identical output — differential-tested on the corpus +
+# fuzz inputs.
 
 _FAST_TAG_RE = re.compile(
     r"<(?:"
     r"(/)\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*"  # end tag: groups 1 (slash), 2
-    r"|([a-zA-Z][-.a-zA-Z0-9:_]*)"  # start tag name: group 3
-    r"((?:\s+[^\s>=/]+(?:\s*=\s*(?:\"[^\"<]*\"|'[^'<]*'|[^\s>'\"]*))?)*)"  # attrs
-    r"\s*(/?)"  # self-close: group 5
+    # start tag name: group 3. html.parser ends a start tag's name only at
+    # ASCII space, tab, CR, LF, FF, '/' or '>' ('<p　x>' is one name
+    # there), so any other character after it falls back
+    r"|([a-zA-Z][-.a-zA-Z0-9:_]*)(?=[\t\n\r\f />])"
+    r"(?:\s+[^\s>=/]+(?:\s*=\s*(?:\"[^\"<]*\"|'[^'<]*'|[^\s>'\"]*))?)*"  # attrs
+    r"\s*(/?)"  # self-close: group 4
     r"|![a-zA-Z][^<>\[\]]*"  # simple declaration (<!DOCTYPE html>): no-op;
     # bracketed internal subsets fall back (html.parser scans them specially)
     r")>"
@@ -135,77 +137,63 @@ _CDATA_RE = re.compile(r"<(script|style)(?![a-zA-Z0-9-])", re.IGNORECASE)
 
 def _segment_html_fast(s: str) -> list[dict] | None:
     """Strict-subset scanner; returns None when the input must fall back.
-    State machine is a line-for-line transliteration of _BlockSegmenter."""
+
+    The state machine is _BlockSegmenter's. One C-level ``split`` cuts the
+    document into (tag groups, following text) rows, so the Python loop
+    does one step per tag. Whitespace collapses once per block with
+    ``str.split`` (its whitespace is exactly ``\\s``'s), and a block's link
+    chars are summed as their runs arrive: each run inside ``<a>`` counts
+    its own collapsed length, so "a " + " b" is 2 chars."""
     if _CDATA_RE.search(s):
         return None  # html.parser switches to CDATA mode inside these
     blocks: list[dict] = []
     stack: list[str] = []
-    pieces: list[tuple[str, bool]] = []
+    pieces: list[str] = []  # raw text runs of the open block
+    link_chars: list[int] = []  # collapsed length of each run inside <a>
     link_depth = 0
-    has_link = False  # any piece in the current block inside <a>
 
-    def flush() -> None:
-        nonlocal pieces, has_link
-        if not pieces:
-            return
-        raw = "".join(p for p, _ in pieces)
-        text = ws_collapse(raw)
+    def flush(tag: str) -> None:
+        text = " ".join("".join(pieces).split())
         if text:
-            n_link = (
-                sum(len(ws_collapse(p)) for p, is_link in pieces if is_link)
-                if has_link
-                else 0
-            )
-            tag = stack[-1] if stack else "body"
-            blocks.append({"tag": tag, "text": text, "n_link_chars": n_link})
-        pieces = []
-        has_link = False
+            blocks.append({"tag": tag, "text": text, "n_link_chars": sum(link_chars)})
+        pieces.clear()
+        link_chars.clear()
 
-    pos = 0
-    for m in _FAST_TAG_RE.finditer(s):
-        if m.start() > pos:
-            seg = s[pos : m.start()]
+    # a no-op row in front carries the text before the first tag
+    rows = iter([None, None, None, None, *_FAST_TAG_RE.split(s)])
+    for slash, end_name, name, self_close, seg in zip(rows, rows, rows, rows, rows):
+        if slash:  # end tag
+            tag = end_name.lower()
+            if tag == "a":
+                if link_depth:
+                    link_depth -= 1
+            elif tag in BLOCK_TAGS and tag in stack:
+                if pieces:
+                    flush(stack[-1])
+                while stack.pop() != tag:  # lenient recovery: pop through tag
+                    pass
+        elif name is not None:  # start tag (None: declaration, a no-op)
+            tag = name.lower()
+            if tag == "br":
+                pieces.append("\n")
+            elif self_close:
+                pass  # html.parser's startendtag: only <br/> does anything
+            elif tag == "a":
+                link_depth += 1
+            elif tag in BLOCK_TAGS:
+                if pieces:
+                    flush(stack[-1] if stack else "body")
+                stack.append(tag)
+        if seg:
             if "<" in seg:
                 return None  # a '<' the strict grammar could not consume
+            if "&" in seg:
+                seg = unescape(seg)
+            pieces.append(seg)
             if link_depth:
-                has_link = True
-            pieces.append((unescape(seg) if "&" in seg else seg, link_depth > 0))
-        pos = m.end()
-        if m.group(1):  # end tag
-            tag = m.group(2).lower()
-            if tag == "a":
-                link_depth = max(0, link_depth - 1)
-            elif tag in BLOCK_TAGS and tag in stack:
-                flush()
-                while stack:
-                    if stack.pop() == tag:
-                        break
-        elif m.group(3) is None:
-            continue  # simple declaration — html.parser's handle_decl no-op
-        elif m.group(5):  # self-closing: only <br/> does anything
-            if m.group(3).lower() == "br":
-                if link_depth:
-                    has_link = True
-                pieces.append(("\n", link_depth > 0))
-        else:  # start tag
-            tag = m.group(3).lower()
-            if tag == "a":
-                link_depth += 1
-            elif tag == "br":
-                if link_depth:
-                    has_link = True
-                pieces.append(("\n", link_depth > 0))
-            elif tag in BLOCK_TAGS:
-                flush()
-                stack.append(tag)
-    tail = s[pos:]
-    if "<" in tail:
-        return None
-    if tail:
-        if link_depth:
-            has_link = True
-        pieces.append((unescape(tail) if "&" in tail else tail, link_depth > 0))
-    flush()
+                link_chars.append(len(" ".join(seg.split())))
+    if pieces:
+        flush(stack[-1] if stack else "body")
     return blocks
 
 
@@ -228,30 +216,45 @@ def segment_html(html_text: str) -> list[dict]:
 
 PDF_MAGIC = b"%PDF-"
 
-_BT_ET_RE = re.compile(rb"BT(.*?)ET", re.DOTALL)
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)endstream", re.DOTALL)
-_PAREN_RE = re.compile(rb"\((?:\\.|[^\\()])*\)", re.DOTALL)
+# a (…) string operand, unrolled: runs of plain bytes between escape pairs,
+# so each byte is one charset step, with no backtracking between branches
+_PAREN_RE = re.compile(rb"\([^\\()]*(?:\\.[^\\()]*)*\)", re.DOTALL)
 
 _PDF_ESCAPES = {
     b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
     b"(": b"(", b")": b")", b"\\": b"\\",
 }
+_PDF_ESCAPE_RE = re.compile(rb"\\.", re.DOTALL)
+# every backslash pair → its replacement; an unknown escape drops the backslash
+_PDF_UNESCAPED = {
+    b"\\" + bytes([c]): _PDF_ESCAPES.get(bytes([c]), bytes([c])) for c in range(256)
+}
 
 
 def _unescape_pdf_string(raw: bytes) -> str:
-    body = raw[1:-1]
-    out = bytearray()
-    i = 0
-    while i < len(body):
-        c = body[i : i + 1]
-        if c == b"\\" and i + 1 < len(body):
-            nxt = body[i + 1 : i + 2]
-            out.extend(_PDF_ESCAPES.get(nxt, nxt))
-            i += 2
-        else:
-            out.extend(c)
-            i += 1
-    return out.decode("utf-8", errors="replace")
+    """The body of a ``(…)`` string operand, unescaped and UTF-8 decoded.
+
+    One C-level ``sub`` replaces each backslash pair through
+    ``_PDF_UNESCAPED``; a lone trailing backslash has no pair and stays."""
+    return _PDF_ESCAPE_RE.sub(
+        lambda m: _PDF_UNESCAPED[m.group()], raw[1:-1]
+    ).decode("utf-8", errors="replace")
+
+
+def _text_objects(buf: bytes) -> list[bytes]:
+    """The bodies of ``buf``'s BT…ET text objects, in order: what
+    ``re.finditer(rb"BT(.*?)ET", buf, re.DOTALL)`` captures, found with
+    ``bytes.find`` in one linear pass."""
+    bodies = []
+    i = buf.find(b"BT")
+    while i >= 0:
+        j = buf.find(b"ET", i + 2)
+        if j < 0:
+            break  # no later BT has an ET after it either
+        bodies.append(buf[i + 2 : j])
+        i = buf.find(b"BT", j + 2)
+    return bodies
 
 
 def extract_pdf_blocks(data: bytes) -> list[dict]:
@@ -266,8 +269,8 @@ def extract_pdf_blocks(data: bytes) -> list[dict]:
             continue
     blocks: list[dict] = []
     for buf in buffers:
-        for bt in _BT_ET_RE.finditer(buf):
-            runs = [_unescape_pdf_string(p.group(0)) for p in _PAREN_RE.finditer(bt.group(1))]
+        for body in _text_objects(buf):
+            runs = [_unescape_pdf_string(p) for p in _PAREN_RE.findall(body)]
             text = ws_collapse(" ".join(runs))
             if text:
                 blocks.append({"tag": "pdf", "text": text, "n_link_chars": 0})

@@ -74,7 +74,8 @@ def layout_blocks(
     line = 0
     canvas_w = 0
     for i, b in enumerate(blocks):
-        n_chars = len(b["text"])
+        text = b["text"]
+        n_chars = len(text)
         if mode == "none":
             n_lines, max_w = 1, n_chars
         else:
@@ -83,19 +84,12 @@ def layout_blocks(
                 max_w = wrap
             else:  # aspect (and unknown-mode fallback, ≙ resize.py none-guard)
                 max_w = wrap if n_lines > 1 else n_chars
+        # positional arguments: the dataclass __init__ runs faster than with keywords
         laid.append(
-            LaidBlock(
-                block_id=i,
-                tag=b["tag"],
-                text=b["text"],
-                n_chars=n_chars,
-                n_link_chars=b["n_link_chars"],
-                start_line=line,
-                n_lines=n_lines,
-                max_w=max_w,
-            )
+            LaidBlock(i, b["tag"], text, n_chars, b["n_link_chars"], line, n_lines, max_w)
         )
-        canvas_w = max(canvas_w, max_w)
+        if max_w > canvas_w:
+            canvas_w = max_w
         line += n_lines + 1  # one blank separator line after each block
     return laid, canvas_w, line
 
@@ -129,20 +123,17 @@ def select_main(
 
 def crop_text(lines: list[str], rect: tuple[int, int, int, int]) -> str:
     x1, y1, x2, y2 = rect
-    return "\n".join(ln[x1:x2] for ln in lines[y1:y2])
+    return "\n".join([ln[x1:x2] for ln in lines[y1:y2]])
 
 
 def char_span(lines: list[str], rect: tuple[int, int, int, int]) -> tuple[int, int]:
-    """(start, end) offsets of the window into "\\n".join(lines)."""
+    """(start, end) offsets of the window into "\\n".join(lines). Only the
+    lines above the window's last row are summed (each line is its length
+    plus one newline)."""
     x1, y1, x2, y2 = rect
-    offsets = []
-    off = 0
-    for ln in lines:
-        offsets.append(off)
-        off += len(ln) + 1
-    start = offsets[y1] + min(x1, len(lines[y1]))
-    end = offsets[y2 - 1] + min(x2, len(lines[y2 - 1]))
-    return start, end
+    top = sum(map(len, lines[:y1])) + y1
+    last = top + sum(map(len, lines[y1 : y2 - 1])) + (y2 - 1 - y1)
+    return top + min(x1, len(lines[y1])), last + min(x2, len(lines[y2 - 1]))
 
 
 def _failure(url: str, rule: str, encoding: str, message: str) -> dict:

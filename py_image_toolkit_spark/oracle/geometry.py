@@ -6,7 +6,7 @@ DuckDB), and tests/test_oracle_geometry.py asserts the two agree row for row.
 Semantics preserved exactly, with the reference's quirks:
 - ``int(round(x))`` everywhere — Python banker's rounding (engine: bround)
 - ε = 1e-6 tie-break in aspect fitting (reference crop.py:302)
-- rule-point list order + first-wins ``min()`` tie-breaks
+- rule-point list order + first-wins closest-point tie-breaks
 - ``int()`` truncation (not rounding) in aspect-fit resize (reference
   resize.py:51-52)
 """
@@ -14,6 +14,8 @@ Semantics preserved exactly, with the reference's quirks:
 from __future__ import annotations
 
 import math
+
+_PHI_INV = (math.sqrt(5) - 1) / 2
 
 
 def parse_ratio(ratio_str: str | None) -> float | None:
@@ -53,17 +55,15 @@ def rule_points(width: int, height: int, rule_type: str) -> list[tuple[int, int]
     if width <= 0 or height <= 0:
         return []
     if rule_type == "thirds":
-        pts = [(w, h) for w in (width / 3, 2 * width / 3) for h in (height / 3, 2 * height / 3)]
+        xs = (round(width / 3), round(2 * width / 3))
+        ys = (round(height / 3), round(2 * height / 3))
     elif rule_type == "golden":
-        phi_inv = (math.sqrt(5) - 1) / 2
-        pts = [
-            (w, h)
-            for w in (width * (1 - phi_inv), width * phi_inv)
-            for h in (height * (1 - phi_inv), height * phi_inv)
-        ]
+        xs = (round(width * (1 - _PHI_INV)), round(width * _PHI_INV))
+        ys = (round(height * (1 - _PHI_INV)), round(height * _PHI_INV))
     else:
-        pts = [(width / 2, height / 2)]
-    return [(int(round(px)), int(round(py))) for px, py in pts]
+        return [(round(width / 2), round(height / 2))]
+    # round(float) is int(round(x)): an int, banker's rounding
+    return [(x, y) for x in xs for y in ys]
 
 
 def optimal_crop(
@@ -80,8 +80,15 @@ def optimal_crop(
     aspect = target_aspect if target_aspect is not None else width / height
     if aspect <= 0:
         return None
+    # closest point, first wins ties. Squared integer distances are exact
+    # and order the points as math.dist does (sqrt is monotonic and
+    # correctly rounded); operators/select.py compares the same integers
     cx, cy = subject_center
-    target_x, target_y = min(points, key=lambda p: math.dist((cx, cy), p))
+    best = None
+    for px, py in points:
+        d = (px - cx) * (px - cx) + (py - cy) * (py - cy)
+        if best is None or d < best:
+            best, target_x, target_y = d, px, py
 
     max_w = 2 * min(target_x, width - target_x)
     max_h = 2 * min(target_y, height - target_y)

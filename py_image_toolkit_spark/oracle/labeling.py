@@ -21,7 +21,7 @@ Column/Window expressions, SQL-verified by contract q15-q17.
 from __future__ import annotations
 
 import re
-from itertools import groupby, repeat
+from itertools import groupby
 
 from py_image_toolkit_spark.functions import vocab as V
 
@@ -266,69 +266,47 @@ def label_tokens(tokens: list[str]) -> list[str]:
     return labels
 
 
-def merge_runs(tokens: list[str], labels: list[str]) -> list[tuple[str, str]]:
-    """Run-merge (D5/D6): consecutive address/issuer runs join with " ";
-    issue_date runs chunk 3-at-a-time, valid Y/M/D triples → "Y.M.D".
-    Returns ordered (text, label) pairs.
-
-    Implemented over itertools.groupby so the dominant 'O' runs move as
-    C-level slice+zip instead of one Python iteration per token (the merge
-    stage was the largest label-residual cost after the pass-1 map rewrite);
-    per-run semantics are identical to the sequential scan."""
-    out: list[tuple[str, str]] = []
-    idx = 0
-    for lab, grp in groupby(labels):
-        g = len(list(grp))
-        end = idx + g
-        if lab == "address" or lab == "issuer":
-            out.append((" ".join(tokens[idx:end]), lab))
-        elif lab == "issue_date":
-            j = idx
-            while j < end:
-                comps = tokens[j : min(j + 3, end)]
-                if (
-                    len(comps) == 3
-                    and _YEAR.fullmatch(comps[0])
-                    and _MONTH.fullmatch(comps[1])
-                    and _DAY.fullmatch(comps[2])
-                ):
-                    out.append((f"{comps[0]}.{comps[1]}.{comps[2]}", "issue_date"))
-                else:
-                    out.extend(zip(comps, repeat("issue_date")))
-                j += len(comps)
-        else:  # 'O' and the single-token labels: no merging to do
-            out.extend(zip(tokens[idx:end], repeat(lab)))
-        idx = end
-    return out
-
-
-def pivot_first_wins(merged: list[tuple[str, str]]) -> dict[str, str | None]:
-    """First-wins pivot to the 6-field record (D4); issue_date only accepted
-    as a dotted triple (reference ocr.py:424-426)."""
-    fields: dict[str, str | None] = {f: None for f in V.OUTPUT_FIELDS}
-    for text, lab in merged:
-        if lab not in fields or fields[lab] is not None:
-            continue
-        if lab == "issue_date" and not ("." in text and len(text.split(".")) == 3):
-            continue
-        fields[lab] = text
-    return fields
+def _first_date(run: list[str]) -> str | None:
+    """The first valid Y/M/D triple of an issue_date run chunked 3 at a
+    time, as "Y.M.D" (D6). A token labeled issue_date is a bare-digit date
+    component, so no single token or invalid chunk is a dotted triple, and
+    the pivot's dotted-triple test (reference ocr.py:424-426) passes
+    exactly these."""
+    for j in range(0, len(run) - 2, 3):
+        y, m, d = run[j : j + 3]
+        if _YEAR.fullmatch(y) and _MONTH.fullmatch(m) and _DAY.fullmatch(d):
+            return f"{y}.{m}.{d}"
+    return None
 
 
 def extract_fields(tokens: list[str]) -> dict[str, str | None]:
     """tokenized text → 6-field record (the full E3 stage).
 
-    Fast paths (byte-identical outcomes): an all-'O' window pivots to the
-    all-None record without materializing merge pairs; a window with no
-    address/issuer/issue_date label has nothing to run-merge (every other
-    label is single-token by construction), so merge_runs degenerates to
-    zip."""
+    Run-merge (D5/D6) and first-wins pivot (D4) in one pass over the label
+    runs (``itertools.groupby``, so an 'O' run is one C-level step): an
+    address/issuer run joins with " ", an issue_date run yields its first
+    valid Y.M.D triple, any other label's run yields its first token. A run
+    whose field is already filled is skipped, and the pass stops once all
+    six fields are filled."""
     labels = label_tokens(tokens)
-    lset = set(labels)
-    if lset == {"O"} or not lset:
-        return {f: None for f in V.OUTPUT_FIELDS}
-    if lset.isdisjoint(("address", "issuer", "issue_date")):
-        merged = list(zip(tokens, labels))
-    else:
-        merged = merge_runs(tokens, labels)
-    return pivot_first_wins(merged)
+    fields: dict[str, str | None] = dict.fromkeys(V.OUTPUT_FIELDS)
+    unfilled = len(fields)
+    end = 0
+    for lab, grp in groupby(labels):
+        start = end
+        end += len(list(grp))
+        if fields.get(lab, lab) is not None:  # 'O', or a field already filled
+            continue
+        if lab == "address" or lab == "issuer":
+            fields[lab] = " ".join(tokens[start:end])
+        elif lab == "issue_date":
+            date = _first_date(tokens[start:end])
+            if date is None:
+                continue
+            fields[lab] = date
+        else:  # single-token labels: no merging to do
+            fields[lab] = tokens[start]
+        unfilled -= 1
+        if not unfilled:
+            break
+    return fields

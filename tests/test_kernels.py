@@ -173,8 +173,13 @@ def test_segment_fast_path_differential_fuzz():
         "<a b=c>", "<a b=\"c>d\">", "<a b='it", "'s>", "<p", ">", "plain<",
         "<A HREF=Z>", "</A>", "&lt;p&gt;", "\n", "  ", "<em>i</em>",
         "<li>item</li>", "<td>c</td>", "<h1>t</h1>", "<p/>", "<div/>",
+        # link-heavy: nesting, stray close, <br> inside a link, empty link
+        "<a><a>in</a>out</a>", "</a>", "<a>x<br>y</a>", "<a></a>",
+        "<a href='z'> sp  aced </a>",
+        # whitespace that \s and str.split() both treat as space
+        "&nbsp;", "\t", "\x1c", "\x85", "\u3000", "a\u3000b", " \t\n ",
     ]
-    for trial in range(400):
+    for trial in range(600):
         s = "".join(rng.choice(atoms) for _ in range(rng.randrange(0, 25)))
         assert segment_html(s) == _segment_html_stdlib(s), f"trial {trial}: {s!r}"
 
@@ -192,6 +197,56 @@ def test_segment_fast_path_handles_entities_and_links():
     assert fast == _segment_html_stdlib(s)
     assert fast[0]["text"] == "Tom & Jerry A <tag>"
     assert fast[1]["n_link_chars"] == len("link one")
+
+
+def test_unescape_pdf_string_table():
+    """Every escape of ``_PDF_ESCAPES``, an unknown escape (the backslash
+    drops), a lone trailing backslash (kept) and bytes that are not UTF-8
+    (replaced)."""
+    from py_image_toolkit_spark.kernels.segment import _PDF_ESCAPES, _unescape_pdf_string
+
+    cases = [
+        (rb"(plain)", "plain"),
+        (rb"()", ""),
+        (rb"(a\nb)", "a\nb"),
+        (rb"(a\rb)", "a\rb"),
+        (rb"(a\tb)", "a\tb"),
+        (rb"(a\bb)", "a\bb"),
+        (rb"(a\fb)", "a\fb"),
+        (rb"(a\(b\))", "a(b)"),
+        (rb"(a\\b)", "a\\b"),
+        (rb"(\\\\)", "\\\\"),
+        (rb"(\9)", "9"),
+        (rb"(x\q)", "xq"),
+        (b"(a\\\nb)", "a\nb"),  # backslash + newline: the newline stays
+        (rb"(abc\)", "abc\\"),
+        (rb"(\)", "\\"),
+        (b"(\xff\xfeok)", "\ufffd\ufffdok"),
+        ("(한글)".encode("utf-8"), "한글"),
+        (b"(\\\xff)", "\ufffd"),
+    ]
+    for key, value in _PDF_ESCAPES.items():
+        cases.append((b"(\\" + key + b")", value.decode("latin-1")))
+    for raw, want in cases:
+        assert _unescape_pdf_string(raw) == want, raw
+
+
+def test_pdf_scanners_match_their_regex_forms():
+    """``_text_objects`` finds what the lazy ``BT(.*?)ET`` regex captures,
+    and the unrolled ``_PAREN_RE`` what the plain alternation matches, on
+    random soups of the bytes both grammars care about."""
+    import random
+    import re
+
+    from py_image_toolkit_spark.kernels.segment import _PAREN_RE, _text_objects
+
+    bt_et = re.compile(rb"BT(.*?)ET", re.DOTALL)
+    paren = re.compile(rb"\((?:\\.|[^\\()])*\)", re.DOTALL)
+    rng = random.Random(7)
+    for _ in range(3000):
+        s = bytes(rng.choice(b"BTE()\\x \n") for _ in range(rng.randrange(0, 40)))
+        assert _text_objects(s) == [m.group(1) for m in bt_et.finditer(s)], s
+        assert _PAREN_RE.findall(s) == [m.group(0) for m in paren.finditer(s)], s
 
 
 def test_doc_kernel_task_drops_zip_finders(tmp_path):

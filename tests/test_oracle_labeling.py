@@ -4,7 +4,6 @@ algorithm by execution (SURVEY.md §5.2.1)."""
 from py_image_toolkit_spark.oracle.labeling import (
     extract_fields,
     label_tokens,
-    merge_runs,
 )
 
 
@@ -57,9 +56,14 @@ def test_date_zero_padding_preserved():
 
 
 def test_date_run_of_four_merges_first_triple():
-    merged = merge_runs(["2021", "03", "05", "11"],
-                        ["issue_date"] * 4)
-    assert merged == [("2021.03.05", "issue_date"), ("11", "issue_date")]
+    toks = ["2021", "03", "05", "11"]
+    assert label_tokens(toks) == ["issue_date"] * 4
+    assert extract_fields(toks)["issue_date"] == "2021.03.05"
+    # an invalid leading triple (month 13) does not merge, and the next
+    # chunk of the run is a lone "11": no dotted date in this run
+    toks = ["2021", "13", "05", "11"]
+    assert label_tokens(toks) == ["issue_date"] * 4
+    assert extract_fields(toks)["issue_date"] is None
 
 
 def test_road_number_guard():
