@@ -11,9 +11,14 @@ directly: ``url``/``html`` leave Arrow once per batch as Python lists,
 ``warc_ts``/``lang`` are copied from the input batch with ``take``, and the
 output columns are built against the Arrow form of ``DOC_SCHEMA``.
 
-Lineage (J7): given an accumulator, every task reports its output row,
-input document and success counts plus its measured wall time, so a job
-gets per-partition lineage from the same pass that writes the records.
+Two sinks share that one record builder (``_doc_batch``). The record sink
+(``doc_extract_df``) returns the records as a DataFrame. The writing sink
+(``doc_write_df``) is the job's: each task writes its records as one
+parquet file into the call's commit dir and returns one lineage row (J7):
+its partition id, output rows, input documents, successful rows and
+measured wall time. The driver collects those rows and commits the files
+they name (≙ an Iceberg writer task returning its data files), so the
+records never cross back from Python into the JVM.
 
 This is the only extraction implementation. It applies the pure-Python
 oracle's per-document functions per partition, so byte parity holds by
@@ -33,19 +38,21 @@ no archive to re-read (``_drop_zip_finders``).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import zipimport
 from collections.abc import Iterator
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 
-from pyspark import Accumulator, AccumulatorParam, TaskContext
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
-    ArrayType, BooleanType, LongType, StringType, StructField, StructType,
-    TimestampType,
+    ArrayType, BooleanType, IntegerType, LongType, StringType, StructField,
+    StructType, TimestampType,
 )
 
 from py_image_toolkit_spark.config import ExtractConfig
@@ -91,23 +98,34 @@ _ARROW_SCHEMA = to_arrow_schema(DOC_SCHEMA)
 # from the extraction records
 _COPIED = ("warc_ts", "lang")
 
+# the writing sink's row per task (its types are the runs table's)
+LINEAGE_SCHEMA = StructType(
+    [
+        StructField("partition_id", IntegerType(), False),
+        StructField("rows_out", LongType(), False),
+        StructField("docs_in", LongType(), False),
+        StructField("rows_ok", LongType(), False),
+        StructField("wall_us", LongType(), False),
+    ]
+)
+_LINEAGE_ARROW_SCHEMA = to_arrow_schema(LINEAGE_SCHEMA)
 
-class _LineageParam(AccumulatorParam):
-    """Per-partition lineage ``{partition id: (rows, docs, ok, wall_us)}``
-    merged by ``dict.update``: entries are keyed by partition, so a retried
-    task overwrites its own entry and is never counted twice."""
-
-    def zero(self, value: dict) -> dict:
-        return {}
-
-    def addInPlace(self, a: dict, b: dict) -> dict:
-        a.update(b)
-        return a
-
-
-def lineage_accumulator(sc) -> Accumulator:
-    """An empty accumulator for ``doc_extract_df(..., lineage=...)``."""
-    return sc.accumulator({}, _LineageParam())
+# the writing sink's parquet: zstd at the level Spark's parquet writer used
+# (pyarrow's default level 1 stores ~3% more per doc); no Arrow schema in
+# the footer, since the table's manifest holds the schema; footer min/max
+# only for the columns a commit may be pruned on (min/max of the text
+# columns add ~7 KB to a 250-doc file); ``warc_ts`` is written as Arrow
+# holds it, int64 micros adjusted to UTC
+_PARQUET_OPTIONS = {
+    "compression": "zstd",
+    "compression_level": 3,
+    "store_schema": False,
+    "write_statistics": ["url", "warc_ts"],
+}
+# a task's records are buffered into row groups of about the size of
+# Spark's parquet blocks (parquet.block.size), so a file is one row group
+# unless its task's output is larger
+_ROW_GROUP_BYTES = 128 << 20
 
 
 def _drop_zip_finders() -> None:
@@ -129,96 +147,138 @@ def _drop_zip_finders() -> None:
             zipimport._zip_directory_cache.pop(finder.archive, None)
 
 
-def _make_doc_kernel(cfg: ExtractConfig, lineage: Accumulator | None = None):
+def _doc_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
+    """The extraction records of one input batch, in ``DOC_SCHEMA``'s
+    Arrow form: the one record builder of both sinks."""
+    out: dict[str, list] = {c: [] for c in _COLS if c not in _COPIED}
+    row_index: list[int] = []
+    for i, (url, html) in enumerate(
+        zip(batch.column("url").to_pylist(), batch.column("html").to_pylist())
+    ):
+        try:
+            recs = extract_document(url, html, cfg)
+        except Exception as e:  # noqa: BLE001 — J6 containment
+            recs = [
+                {
+                    **{c: None for c in _COLS},
+                    "url": url, "rule": r, "success": False,
+                    "message": f"parse error: {type(e).__name__}: {e}",
+                    "encoding": "none", "n_blocks": 0,
+                    "canvas_w": 0, "canvas_h": 0, "spans": [],
+                }
+                for r in cfg.rules
+            ]
+        for rec in recs:
+            row_index.append(i)
+            for c, vals in out.items():
+                vals.append(rec[c])
+    take = pa.array(row_index, pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column(f.name).take(take).cast(f.type)
+            if f.name in _COPIED
+            else pa.array(out[f.name], f.type)
+            for f in _ARROW_SCHEMA
+        ],
+        schema=_ARROW_SCHEMA,
+    )
+
+
+def _make_doc_kernel(cfg: ExtractConfig):
+    """The record sink: a task yields its extraction records."""
+
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        t_start = time.monotonic()
-        rows = docs = ok = 0
         for batch in batches:
-            out: dict[str, list] = {c: [] for c in _COLS if c not in _COPIED}
-            row_index: list[int] = []
-            for i, (url, html) in enumerate(
-                zip(batch.column("url").to_pylist(), batch.column("html").to_pylist())
-            ):
-                try:
-                    recs = extract_document(url, html, cfg)
-                except Exception as e:  # noqa: BLE001 — J6 containment
-                    recs = [
-                        {
-                            **{c: None for c in _COLS},
-                            "url": url, "rule": r, "success": False,
-                            "message": f"parse error: {type(e).__name__}: {e}",
-                            "encoding": "none", "n_blocks": 0,
-                            "canvas_w": 0, "canvas_h": 0, "spans": [],
-                        }
-                        for r in cfg.rules
-                    ]
-                for rec in recs:
-                    row_index.append(i)
-                    for c, vals in out.items():
-                        vals.append(rec[c])
-            take = pa.array(row_index, pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(f.name).take(take).cast(f.type)
-                    if f.name in _COPIED
-                    else pa.array(out[f.name], f.type)
-                    for f in _ARROW_SCHEMA
-                ],
-                schema=_ARROW_SCHEMA,
-            )
-            if lineage is not None:
-                rows += len(row_index)
-                docs += batch.num_rows
-                ok += sum(out["success"])
-        if rows:
-            wall_us = int((time.monotonic() - t_start) * 1_000_000)
-            lineage.add(
-                {TaskContext.get().partitionId(): (rows, docs, ok, wall_us)}
-            )
+            yield _doc_batch(batch, cfg)
         _drop_zip_finders()
 
     return run
 
 
-def doc_extract_df(
-    pages: DataFrame,
-    cfg: ExtractConfig | None = None,
-    lineage: Accumulator | None = None,
-    skip: DataFrame | None = None,
-) -> DataFrame:
-    """pages(url, warc_ts, html, lang, …) → complete extraction records
-    (success AND typed failure rows) in ``DOC_SCHEMA`` column order, one
-    Arrow stage, zero text shuffles. Missing ``warc_ts``/``lang`` columns
-    come out null.
+def part_file(partition_id: int) -> str:
+    """The name of the data file the writing task of ``partition_id``
+    lands in its commit dir."""
+    return f"part-{partition_id:05d}.parquet"
 
-    Partitioning before the CPU-bound parse is decided once, on the scan
-    (html compresses ~10×, so byte-sized input splits can under-parallelize
-    a compute-bound stage): when the scan already yields at least
-    ``defaultParallelism`` splits, they are coalesced to one wave
-    of ``defaultParallelism`` tasks without moving any bytes; otherwise the
-    input is repartitioned by url into ``defaultParallelism`` partitions,
-    also one wave: each task pays a fixed Python set-up, so one task per
-    core beats two waves.
 
-    ``skip`` (a one-column ``url`` DataFrame, e.g. the urls already
-    committed by a resumed job): its urls are dropped after that balancing,
-    so deciding the partitioning never executes a join. The input's urls
-    are anti-joined against ``skip`` (url-only: ``skip`` is broadcast once,
-    or shuffled by url above the broadcast threshold, never the html), and
-    the balanced input is semi-joined against the broadcast of what is left:
-    the urls of this call's new docs, bounded by the input. When none is
-    left, adaptive execution replaces the html scan and the join with an
-    empty relation, so the kernel runs on no task.
+def _write_part(
+    batches: Iterator[pa.RecordBatch],
+    cfg: ExtractConfig,
+    commit_dir: str,
+    partition_id: int,
+    attempt_id: int,
+) -> Iterator[pa.RecordBatch]:
+    """The writing sink's task body: write the extraction records of
+    ``batches`` to ``part_file(partition_id)`` in ``commit_dir``, then yield
+    the task's one lineage row (``LINEAGE_SCHEMA``).
 
-    ``lineage`` (from ``lineage_accumulator``): each task that produced rows
-    adds ``{partition id: (rows, docs, ok, wall_us)}`` to it, where ``docs``
-    counts the input documents (rows) the task read, independent of how the
-    input is partitioned, and ``wall_us`` is the task's measured kernel
-    time. The entries appear once
-    an action over the result has run."""
+    The file is written under a hidden name of its own attempt and renamed
+    into place once complete, so a retried or speculative attempt of the
+    same partition replaces it whole, with the same rows. A task that
+    produced no rows writes no file and yields no row."""
+    t_start = time.monotonic()
+    tmp = os.path.join(commit_dir, f".{part_file(partition_id)}.{attempt_id}")
+    writer = None
+    group: list[pa.RecordBatch] = []
+    group_bytes = rows = docs = ok = 0
+    try:
+        for batch in batches:
+            out = _doc_batch(batch, cfg)
+            docs += batch.num_rows
+            rows += out.num_rows
+            ok += out.column("success").true_count
+            group.append(out)
+            group_bytes += out.nbytes
+            if group_bytes >= _ROW_GROUP_BYTES:
+                writer = _write_row_group(writer, tmp, group)
+                group, group_bytes = [], 0
+        if rows:
+            writer = _write_row_group(writer, tmp, group)
+    finally:
+        if writer is not None:
+            writer.close()
+    if rows:
+        os.replace(tmp, os.path.join(commit_dir, part_file(partition_id)))
+        wall_us = int((time.monotonic() - t_start) * 1_000_000)
+        yield pa.RecordBatch.from_pylist(
+            [{"partition_id": partition_id, "rows_out": rows, "docs_in": docs,
+              "rows_ok": ok, "wall_us": wall_us}],
+            schema=_LINEAGE_ARROW_SCHEMA,
+        )
+    _drop_zip_finders()
+
+
+def _write_row_group(
+    writer: pq.ParquetWriter | None, path: str, group: list[pa.RecordBatch]
+) -> pq.ParquetWriter:
+    """Write ``group`` as one row group, opening the file on the first."""
+    if writer is None:
+        writer = pq.ParquetWriter(path, _ARROW_SCHEMA, **_PARQUET_OPTIONS)
+    table = pa.Table.from_batches(group, _ARROW_SCHEMA)
+    if table.num_rows:
+        writer.write_table(table, row_group_size=table.num_rows)
+    return writer
+
+
+def _make_doc_writer(cfg: ExtractConfig, commit_dir: str):
+    """The writing sink: a task writes its records into ``commit_dir`` and
+    yields its lineage row."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ctx = TaskContext.get()
+        yield from _write_part(
+            batches, cfg, commit_dir, ctx.partitionId(), ctx.taskAttemptId()
+        )
+
+    return run
+
+
+def _kernel_input(pages: DataFrame, skip: DataFrame | None) -> DataFrame:
+    """``pages`` as the kernel reads them: (url, warc_ts, lang, html),
+    partitioned for one wave of ``defaultParallelism`` tasks, with the urls
+    of ``skip`` dropped (see ``doc_extract_df``)."""
     from pyspark.sql import functions as F
 
-    cfg = cfg or ExtractConfig()
     cols = [F.col("url")]
     cols.append(
         F.col("warc_ts") if "warc_ts" in pages.columns
@@ -248,4 +308,57 @@ def doc_extract_df(
     if skip is not None:
         new = pages.select("url").join(skip, "url", "left_anti")
         src = src.join(F.broadcast(new), "url", "left_semi")
-    return src.mapInArrow(_make_doc_kernel(cfg, lineage), DOC_SCHEMA)
+    return src
+
+
+def doc_extract_df(
+    pages: DataFrame,
+    cfg: ExtractConfig | None = None,
+    skip: DataFrame | None = None,
+) -> DataFrame:
+    """pages(url, warc_ts, html, lang, …) → complete extraction records
+    (success AND typed failure rows) in ``DOC_SCHEMA`` column order, one
+    Arrow stage, zero text shuffles. Missing ``warc_ts``/``lang`` columns
+    come out null.
+
+    Partitioning before the CPU-bound parse is decided once, on the scan
+    (html compresses ~10×, so byte-sized input splits can under-parallelize
+    a compute-bound stage): when the scan already yields at least
+    ``defaultParallelism`` splits, they are coalesced to one wave
+    of ``defaultParallelism`` tasks without moving any bytes; otherwise the
+    input is repartitioned by url into ``defaultParallelism`` partitions,
+    also one wave: each task pays a fixed Python set-up, so one task per
+    core beats two waves.
+
+    ``skip`` (a one-column ``url`` DataFrame, e.g. the urls already
+    committed by a resumed job): its urls are dropped after that balancing,
+    so deciding the partitioning never executes a join. The input's urls
+    are anti-joined against ``skip`` (url-only: ``skip`` is broadcast once,
+    or shuffled by url above the broadcast threshold, never the html), and
+    the balanced input is semi-joined against the broadcast of what is left:
+    the urls of this call's new docs, bounded by the input. When none is
+    left, adaptive execution replaces the html scan and the join with an
+    empty relation, so the kernel runs on no task."""
+    cfg = cfg or ExtractConfig()
+    return _kernel_input(pages, skip).mapInArrow(_make_doc_kernel(cfg), DOC_SCHEMA)
+
+
+def doc_write_df(
+    pages: DataFrame,
+    commit_dir: str,
+    cfg: ExtractConfig | None = None,
+    skip: DataFrame | None = None,
+) -> DataFrame:
+    """``doc_extract_df``'s extraction with the writing sink: each task
+    writes its records as one parquet file into ``commit_dir`` (a path
+    every executor sees) and returns one ``LINEAGE_SCHEMA`` row instead of
+    the records. Collecting the result runs the extraction, one Spark job
+    over the same plan; its rows name the files written, one per task that
+    produced records (``part_file(partition_id)``), where ``docs_in``
+    counts the input documents the task read, independent of how the
+    input is partitioned, and ``wall_us`` is the task's measured time to
+    extract and write them."""
+    cfg = cfg or ExtractConfig()
+    return _kernel_input(pages, skip).mapInArrow(
+        _make_doc_writer(cfg, commit_dir), LINEAGE_SCHEMA
+    )

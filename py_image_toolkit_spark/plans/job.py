@@ -1,22 +1,25 @@
 """Job orchestration: the Spark recast of the reference's batch drivers
 (SURVEY.md §3.1 step mapping).
 
-    read committed snapshot (schema from its manifest) → extract()
-    ([balance partitions] → RESUME semi-join against the input's new urls →
-    one Arrow stage, lineage accumulator) → write commit dir → publish
-    snapshot → lineage rows (written by the driver)
+    read committed snapshot (schema from its manifest) → allocate a commit
+    dir → doc_write_df() ([balance partitions] → RESUME semi-join against
+    the input's new urls → one Arrow stage whose tasks write the commit's
+    parquet files) → collect the tasks' lineage rows → publish snapshot →
+    runs rows (written by the driver)
 
-One Spark job runs the kernel: the output write. Everything else the run
-reports comes from what that job's tasks put in the lineage accumulator. A
-resume call adds only the two url broadcasts of the skip (3 jobs, while the
-committed urls fit the broadcast threshold); reading the committed table
-and writing the runs table run none.
+One Spark job runs the kernel: the collect of the lineage rows its tasks
+return, one per task that wrote a file. Everything else the run reports
+comes from those rows, and the driver commits exactly the files they name
+(≙ an Iceberg writer's data-file descriptors). A resume call adds only the
+two url broadcasts of the skip (3 jobs, while the committed urls fit the
+broadcast threshold); reading the committed table and writing the runs
+table run none.
 
 - resume: left-anti join of the input against the committed output snapshot
   (≙ skip-if-exists, reference resize.py:158-162 — but gated *before* any
   work, fixing crop.py's detect-before-gate inefficiency, SURVEY.md §4.2.4)
 - the parse partitioning is decided on the scan, before the resume skip
-  (``extract``'s one rule): the kernel reads straight off a scan that
+  (the doc kernel's one rule): the kernel reads straight off a scan that
   already has at least ``defaultParallelism`` splits (coalesced to that
   many), fewer splits are repartitioned by url into ``defaultParallelism``
   partitions first, so the CPU-bound parse runs as one wave of one task
@@ -26,10 +29,10 @@ and writing the runs table run none.
   archives (``doc_kernel._drop_zip_finders``)
 - a resume with nothing left to do reads no html and runs no kernel task:
   its input's new urls come out empty, so adaptive execution prunes the
-  html scan, and the write lands an empty commit dir. Like any run whose
-  kernel output is empty, it discards that commit and publishes no
-  snapshot. A crashed run leaves no visible rows (the manifest publish is
-  atomic)
+  html scan, no task writes a file and the commit dir stays empty. Like
+  any run whose kernel output is empty, it discards that commit and
+  publishes no snapshot. A crashed run leaves no visible rows (the
+  manifest publish is atomic)
 - lineage: one row per task partition in the runs table (docs in/ok/failed,
   measured wall time), ≙ the reference's per-run counters (D7/J7)
 - salting: two-stage aggregation helper for skewed keys (hot hosts)
@@ -37,6 +40,7 @@ and writing the runs table run none.
 
 from __future__ import annotations
 
+import os
 import time
 
 import pyarrow as pa
@@ -46,8 +50,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from py_image_toolkit_spark.config import ExtractConfig
-from py_image_toolkit_spark.operators.doc_kernel import lineage_accumulator
-from py_image_toolkit_spark.plans.pipeline import extract
+from py_image_toolkit_spark.operators.doc_kernel import (
+    DOC_SCHEMA, doc_write_df, part_file,
+)
 from py_image_toolkit_spark.sources.tables import SnapshotTable
 
 # runs-table rows: one per task partition of a run
@@ -123,21 +128,23 @@ def run_extraction_job(
     # anti-join needs no distinct build side)
     skip = None if done is None else done.select("url")
 
-    # the output write is the only action over the kernel; the same tasks
-    # report their per-partition lineage (J7) through the accumulator, with
-    # wall_us the measured kernel time of that partition. A resume with
-    # nothing left to do reads no html and runs no kernel task: the skip
-    # prunes the scan, and the empty commit is discarded below
-    lineage = lineage_accumulator(spark.sparkContext)
-    result = extract(pages, cfg, lineage=lineage, skip=skip)
-    commit = out_table.write(result)
+    # the kernel's tasks write the commit's files and return their lineage
+    # (J7), one row per task that wrote rows, with wall_us the measured time
+    # of that task: collecting those rows is the only action over the
+    # kernel. A resume with nothing left to do reads no html and runs no
+    # kernel task: the skip prunes the scan, and the empty commit is
+    # discarded below
+    commit = out_table.new_commit()
+    commit_dir = os.path.join(out_table.data_dir, commit)
+    parts = sorted(doc_write_df(pages, commit_dir, cfg, skip=skip).collect())
+    # the commit holds exactly the files the lineage rows name: a failed
+    # task attempt may have left its hidden temp file behind
+    named = {part_file(p.partition_id) for p in parts}
+    for name in set(os.listdir(commit_dir)) - named:
+        os.remove(os.path.join(commit_dir, name))
 
     lineage_rows = [
-        {
-            "partition_id": pid, "rows_out": rows, "docs_in": docs,
-            "rows_ok": ok, "rows_failed": rows - ok, "wall_us": wall_us,
-        }
-        for pid, (rows, docs, ok, wall_us) in sorted(lineage.value.items())
+        {**p.asDict(), "rows_failed": p.rows_out - p.rows_ok} for p in parts
     ]
     summary = {
         "run_id": run_id,
@@ -150,7 +157,7 @@ def run_extraction_job(
 
     if summary["rows_out"] > 0:
         snapshot_id = out_table.publish(
-            commit, result.schema, run_id=run_id, meta=summary
+            commit, DOC_SCHEMA, run_id=run_id, meta=summary
         )
         # job-level wall clock (one value per run, distinct from the
         # measured per-partition wall_us)

@@ -13,7 +13,13 @@ partial-output cleanup, resize.py:134-140, but free by construction: A9).
 Appends are atomic: data lands first (``write``, from a Spark DataFrame or,
 for a handful of driver-side rows, a ``pyarrow.Table``), the manifest rename
 publishes it (``publish``); ``append`` does both, and a writer that decides
-after landing its data not to publish it calls ``discard``.
+after landing its data not to publish it calls ``discard``. A commit dir may
+also be filled by other writers: ``new_commit`` allocates an empty one, and
+the extraction job's kernel tasks write their parquet files straight into
+it and return their descriptors, which the driver publishes (≙ Iceberg's
+writer tasks returning data files to the committing driver). Such writers
+run on the executors, so the table root must be the same POSIX path on
+every executor and the driver.
 
 The manifest is the table's metadata: it records the schema and each
 commit's column set, so a read whose commits all share the schema's columns
@@ -202,12 +208,11 @@ class SnapshotTable:
         already holds) is written by the driver as one zstd parquet file,
         without a Spark job and without the Arrow schema in its footer: the
         schema lives in the manifest. ``encode`` does not apply to it."""
-        commit = f"commit-{uuid.uuid4().hex[:12]}"
+        commit = self.new_commit()
         path = os.path.join(self.data_dir, commit)
         if isinstance(df, pa.Table):
             import pyarrow.parquet as pq
 
-            os.mkdir(path)
             pq.write_table(
                 df, os.path.join(path, "part-00000.parquet"),
                 compression="zstd", store_schema=False,
@@ -215,7 +220,16 @@ class SnapshotTable:
         else:
             from py_image_toolkit_spark.operators.encode import encoded_writer
 
-            encoded_writer(df, "parquet", encode).mode("errorifexists").save(path)
+            encoded_writer(df, "parquet", encode).mode("append").save(path)
+        return commit
+
+    def new_commit(self) -> str:
+        """Create a fresh, empty commit directory, invisible to readers
+        until ``publish``, for a writer that lands its own files there (the
+        doc kernel's tasks do). Returns the commit (the directory's name
+        under ``data/``); pass it to ``publish`` or ``discard``."""
+        commit = f"commit-{uuid.uuid4().hex[:12]}"
+        os.mkdir(os.path.join(self.data_dir, commit))
         return commit
 
     def discard(self, commit: str) -> None:

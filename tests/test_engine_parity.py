@@ -123,3 +123,36 @@ def test_parity_driver_pages_with_pdf_route(spark):
     # both routes actually exercised
     pdf_urls = {r["url"] for r in rows if bytes(r["html"]).startswith(b"%PDF-")}
     assert pdf_urls and len(pdf_urls) < len(rows)
+
+
+def test_committed_table_matches_the_oracle(spark, tmp_path):
+    """What a job commits, read back through its snapshot, is the oracle's
+    extraction of the job's input in every column, ``warc_ts`` and
+    ``lang`` included."""
+    import pandas as pd
+
+    from py_image_toolkit_spark.fixtures import pages_df
+    from py_image_toolkit_spark.oracle.extractor import extract_pages
+    from py_image_toolkit_spark.plans.job import run_extraction_job
+    from py_image_toolkit_spark.sources.tables import SnapshotTable
+    from py_image_toolkit_spark.testing import norm_spans
+
+    cfg = ExtractConfig()
+    pages = pages_df(spark, 40)
+    out = SnapshotTable(str(tmp_path / "out"))
+    run_extraction_job(spark, pages, out, SnapshotTable(str(tmp_path / "runs")), cfg)
+    eng = out.read(spark).toPandas()
+    eng = eng.sort_values(["url", "rule"]).reset_index(drop=True)
+    eng["spans"] = eng["spans"].map(norm_spans)
+
+    ora = pd.DataFrame(
+        extract_pages(
+            ((r["url"], bytes(r["html"]), r["warc_ts"], r["lang"]) for r in pages.collect()),
+            cfg,
+        )
+    )
+    ora["spans"] = ora["spans"].map(norm_spans)
+    ora = ora.sort_values(["url", "rule"]).reset_index(drop=True)
+    problems = diff_frames(eng, ora)
+    assert not problems, "committed-table divergence:\n" + "\n".join(problems)
+    assert eng["warc_ts"].notna().all() and eng["lang"].notna().any()

@@ -139,10 +139,12 @@ def test_doc_pipeline_single_exchange_single_python_stage(spark, tmp_path):
 
 def test_extraction_job_one_kernel_pass(spark, spark_jobs, tmp_path):
     """A fresh-table run_extraction_job call on an input of one split per
-    core is one Spark job: the output write, the only action over the
-    kernel. The lineage comes from that same pass, and the driver writes
+    core is one Spark job: the collect of the lineage rows that the
+    kernel's tasks return once they have written the commit's files, the
+    only action over the kernel. The driver publishes the commit and writes
     the runs table itself. A persist/collect pass over the kernel output, a
-    second look at it, or a Spark write of the runs rows would add jobs."""
+    second look at it, or a Spark write of the records or the runs rows
+    would add jobs."""
     from py_image_toolkit_spark.fixtures import pages_df
     from py_image_toolkit_spark.plans.job import run_extraction_job
     from py_image_toolkit_spark.plans.pipeline import extract

@@ -108,17 +108,64 @@ def test_lineage_rows_cover_all_docs(spark, tmp_path):
     assert len(walls) == 1 or len(set(walls)) >= 2
 
 
-def test_lineage_accumulator_overwrites_a_readded_partition():
-    """Lineage entries are keyed by partition id: a retried task re-adds
-    its partition and must replace, not add to, the first attempt's entry."""
-    from py_image_toolkit_spark.operators.doc_kernel import _LineageParam
+def test_commit_dir_holds_only_the_lineage_files(spark, tmp_path):
+    """After a fresh call and after a resume call, a commit dir holds one
+    ``part-*.parquet`` per lineage row of its run and nothing else: no
+    ``_SUCCESS``, ``.crc`` or temp file. Each footer carries min/max for
+    ``url`` and ``warc_ts``, the columns a commit may be pruned on."""
+    import pyarrow.parquet as pq
 
-    param = _LineageParam()
-    acc = param.zero({})
-    acc = param.addInPlace(acc, {0: (4, 2, 4, 10)})
-    acc = param.addInPlace(acc, {1: (2, 1, 1, 7)})
-    acc = param.addInPlace(acc, {0: (4, 2, 3, 12)})  # task 0 retried
-    assert acc == {0: (4, 2, 3, 12), 1: (2, 1, 1, 7)}
+    from py_image_toolkit_spark.operators.doc_kernel import part_file
+
+    out, runs = _tables(tmp_path, "files")
+    pages = pages_df(spark, 40)
+    run_extraction_job(
+        spark, pages.filter(F.xxhash64("url") % 2 == 0), out, runs, CFG, run_id="r1"
+    )
+    run_extraction_job(spark, pages, out, runs, CFG, run_id="r2")
+
+    lineage = runs.read(spark).select("run_id", "partition_id").collect()
+    snap = out.latest_snapshot()
+    assert len(snap["data_dirs"]) == 2
+    for commit, run_id in zip(snap["data_dirs"], ("r1", "r2")):
+        path = os.path.join(out.data_dir, commit)
+        named = {part_file(r["partition_id"]) for r in lineage if r["run_id"] == run_id}
+        assert named and sorted(os.listdir(path)) == sorted(named)
+        for name in named:
+            md = pq.ParquetFile(os.path.join(path, name)).metadata
+            cols = {md.schema.column(i).path: i for i in range(md.num_columns)}
+            for rg in range(md.num_row_groups):
+                for c in ("url", "warc_ts"):
+                    assert md.row_group(rg).column(cols[c]).statistics.has_min_max
+
+
+def test_writing_task_rerun_leaves_one_identical_file(tmp_path):
+    """A retried attempt of a writing task (run here twice in-process for
+    one partition id, no Spark) replaces the first attempt's file with the
+    same bytes, and leaves no temp file behind."""
+    import pyarrow as pa
+
+    from py_image_toolkit_spark.operators.doc_kernel import _write_part, part_file
+
+    batch = pa.RecordBatch.from_pydict({
+        "url": ["https://a.io/1", "https://a.io/2"],
+        "warc_ts": pa.array([0, None], pa.timestamp("us", tz="UTC")),
+        "lang": ["en", None],
+        "html": [b"<html><body><p>hello there</p></body></html>", b""],
+    })
+    commit_dir = str(tmp_path)
+    lineage, files = [], []
+    for attempt in (11, 12):
+        lineage += [b.to_pylist() for b in _write_part(iter([batch]), CFG, commit_dir, 3, attempt)]
+        assert os.listdir(commit_dir) == [part_file(3)]
+        with open(os.path.join(commit_dir, part_file(3)), "rb") as fh:
+            files.append(fh.read())
+    assert files[0] == files[1]
+    rows = 2 * len(CFG.rules)
+    for (row,) in lineage:
+        assert row["partition_id"] == 3 and row["rows_out"] == rows
+        assert row["docs_in"] == 2 and 0 < row["rows_ok"] < rows
+        assert row["wall_us"] > 0
 
 
 def test_snapshot_diff_incremental_read(spark, tmp_path):
