@@ -10,7 +10,7 @@ summary + per-item error report. Deployment shape per the north rule:
 
 Subcommands:
     extract   one resumable extraction run over a pages table
-              (anti-join resume against the committed output snapshot,
+              (resume: skips the urls the committed output snapshot holds,
                atomic snapshot commit, per-partition lineage rows)
     resume    alias of extract — resume IS the default behavior; named
               separately so intent shows up in job schedulers

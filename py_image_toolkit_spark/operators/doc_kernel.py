@@ -20,6 +20,13 @@ measured wall time. The driver collects those rows and commits the files
 they name (≙ an Iceberg writer task returning its data files), so the
 records never cross back from Python into the JVM.
 
+The writing sink also applies the job's resume skip, inside its tasks: the
+driver hands it the input's urls that the table already holds (a
+``pa.Array`` bounded by the input), and each task drops those rows, and
+rows without a url, with ``pyarrow.compute`` before the record builder.
+So every plan the kernel runs in is the same, with no join: scan →
+[balance partitions] → mapInArrow.
+
 This is the only extraction implementation. It applies the pure-Python
 oracle's per-document functions per partition, so byte parity holds by
 construction AND is still asserted end-to-end by tests/test_engine_parity.py.
@@ -45,6 +52,7 @@ import zipimport
 from collections.abc import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from pyspark import TaskContext
@@ -201,16 +209,29 @@ def part_file(partition_id: int) -> str:
     return f"part-{partition_id:05d}.parquet"
 
 
+def _new_docs(batch: pa.RecordBatch, replayed: pa.Array | None) -> pa.RecordBatch:
+    """The rows of ``batch`` whose url is set and not in ``replayed``."""
+    url = batch.column("url")
+    if replayed is None and not url.null_count:
+        return batch
+    keep = url.is_valid()
+    if replayed is not None:
+        keep = pc.and_(keep, pc.invert(pc.is_in(url, value_set=replayed)))
+    return batch.filter(keep)
+
+
 def _write_part(
     batches: Iterator[pa.RecordBatch],
     cfg: ExtractConfig,
     commit_dir: str,
     partition_id: int,
     attempt_id: int,
+    replayed: pa.Array | None = None,
 ) -> Iterator[pa.RecordBatch]:
-    """The writing sink's task body: write the extraction records of
-    ``batches`` to ``part_file(partition_id)`` in ``commit_dir``, then yield
-    the task's one lineage row (``LINEAGE_SCHEMA``).
+    """The writing sink's task body: write the extraction records of the
+    new docs of ``batches`` (``_new_docs``: rows with a url, not in
+    ``replayed``) to ``part_file(partition_id)`` in ``commit_dir``, then
+    yield the task's one lineage row (``LINEAGE_SCHEMA``).
 
     The file is written under a hidden name of its own attempt and renamed
     into place once complete, so a retried or speculative attempt of the
@@ -223,6 +244,9 @@ def _write_part(
     group_bytes = rows = docs = ok = 0
     try:
         for batch in batches:
+            batch = _new_docs(batch, replayed)
+            if not batch.num_rows:
+                continue
             out = _doc_batch(batch, cfg)
             docs += batch.num_rows
             rows += out.num_rows
@@ -260,23 +284,26 @@ def _write_row_group(
     return writer
 
 
-def _make_doc_writer(cfg: ExtractConfig, commit_dir: str):
-    """The writing sink: a task writes its records into ``commit_dir`` and
-    yields its lineage row."""
+def _make_doc_writer(
+    cfg: ExtractConfig, commit_dir: str, replayed: pa.Array | None
+):
+    """The writing sink: a task writes the records of its new docs into
+    ``commit_dir`` and yields its lineage row."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
         yield from _write_part(
-            batches, cfg, commit_dir, ctx.partitionId(), ctx.taskAttemptId()
+            batches, cfg, commit_dir, ctx.partitionId(), ctx.taskAttemptId(),
+            replayed,
         )
 
     return run
 
 
-def _kernel_input(pages: DataFrame, skip: DataFrame | None) -> DataFrame:
+def _kernel_input(pages: DataFrame) -> DataFrame:
     """``pages`` as the kernel reads them: (url, warc_ts, lang, html),
-    partitioned for one wave of ``defaultParallelism`` tasks, with the urls
-    of ``skip`` dropped (see ``doc_extract_df``)."""
+    partitioned for one wave of ``defaultParallelism`` tasks (see
+    ``doc_extract_df``)."""
     from pyspark.sql import functions as F
 
     cols = [F.col("url")]
@@ -305,17 +332,10 @@ def _kernel_input(pages: DataFrame, skip: DataFrame | None) -> DataFrame:
         src = src.repartition(dp, F.col("url"))
     elif scan_parts > dp:
         src = src.coalesce(dp)
-    if skip is not None:
-        new = pages.select("url").join(skip, "url", "left_anti")
-        src = src.join(F.broadcast(new), "url", "left_semi")
     return src
 
 
-def doc_extract_df(
-    pages: DataFrame,
-    cfg: ExtractConfig | None = None,
-    skip: DataFrame | None = None,
-) -> DataFrame:
+def doc_extract_df(pages: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame:
     """pages(url, warc_ts, html, lang, …) → complete extraction records
     (success AND typed failure rows) in ``DOC_SCHEMA`` column order, one
     Arrow stage, zero text shuffles. Missing ``warc_ts``/``lang`` columns
@@ -328,26 +348,17 @@ def doc_extract_df(
     of ``defaultParallelism`` tasks without moving any bytes; otherwise the
     input is repartitioned by url into ``defaultParallelism`` partitions,
     also one wave: each task pays a fixed Python set-up, so one task per
-    core beats two waves.
-
-    ``skip`` (a one-column ``url`` DataFrame, e.g. the urls already
-    committed by a resumed job): its urls are dropped after that balancing,
-    so deciding the partitioning never executes a join. The input's urls
-    are anti-joined against ``skip`` (url-only: ``skip`` is broadcast once,
-    or shuffled by url above the broadcast threshold, never the html), and
-    the balanced input is semi-joined against the broadcast of what is left:
-    the urls of this call's new docs, bounded by the input. When none is
-    left, adaptive execution replaces the html scan and the join with an
-    empty relation, so the kernel runs on no task."""
+    core beats two waves. The plan is scan → [balance] → mapInArrow, with
+    no join."""
     cfg = cfg or ExtractConfig()
-    return _kernel_input(pages, skip).mapInArrow(_make_doc_kernel(cfg), DOC_SCHEMA)
+    return _kernel_input(pages).mapInArrow(_make_doc_kernel(cfg), DOC_SCHEMA)
 
 
 def doc_write_df(
     pages: DataFrame,
     commit_dir: str,
     cfg: ExtractConfig | None = None,
-    skip: DataFrame | None = None,
+    replayed: pa.Array | None = None,
 ) -> DataFrame:
     """``doc_extract_df``'s extraction with the writing sink: each task
     writes its records as one parquet file into ``commit_dir`` (a path
@@ -355,10 +366,15 @@ def doc_write_df(
     the records. Collecting the result runs the extraction, one Spark job
     over the same plan; its rows name the files written, one per task that
     produced records (``part_file(partition_id)``), where ``docs_in``
-    counts the input documents the task read, independent of how the
-    input is partitioned, and ``wall_us`` is the task's measured time to
-    extract and write them."""
+    counts the documents the task extracted, independent of how the input
+    is partitioned, and ``wall_us`` is the task's measured time to extract
+    and write them.
+
+    Each task first drops the rows whose url is null or in ``replayed``
+    (the urls a resumed job has already committed, a ``pa.Array`` bounded
+    by the input and shipped in the tasks' closure), so those documents
+    cross the Arrow boundary but are never parsed, written or counted."""
     cfg = cfg or ExtractConfig()
-    return _kernel_input(pages, skip).mapInArrow(
-        _make_doc_writer(cfg, commit_dir), LINEAGE_SCHEMA
+    return _kernel_input(pages).mapInArrow(
+        _make_doc_writer(cfg, commit_dir, replayed), LINEAGE_SCHEMA
     )

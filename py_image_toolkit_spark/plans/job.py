@@ -1,38 +1,41 @@
 """Job orchestration: the Spark recast of the reference's batch drivers
 (SURVEY.md §3.1 step mapping).
 
-    read committed snapshot (schema from its manifest) → allocate a commit
-    dir → doc_write_df() ([balance partitions] → RESUME semi-join against
-    the input's new urls → one Arrow stage whose tasks write the commit's
-    parquet files) → collect the tasks' lineage rows → publish snapshot →
-    runs rows (written by the driver)
+    [RESUME: collect the input's urls → ask the committed table which of
+    them it holds] → allocate a commit dir → doc_write_df() ([balance
+    partitions] → one Arrow stage whose tasks drop the committed urls and
+    write the commit's parquet files) → collect the tasks' lineage rows →
+    publish snapshot → runs rows (written by the driver)
 
 One Spark job runs the kernel: the collect of the lineage rows its tasks
 return, one per task that wrote a file. Everything else the run reports
 comes from those rows, and the driver commits exactly the files they name
-(≙ an Iceberg writer's data-file descriptors). A resume call adds only the
-two url broadcasts of the skip (3 jobs, while the committed urls fit the
-broadcast threshold); reading the committed table and writing the runs
-table run none.
+(≙ an Iceberg writer's data-file descriptors). A resume call adds one job,
+the Arrow collect of its input's urls (2 jobs); the lookup of those urls
+in the table (``SnapshotTable.committed``) runs on the driver with pyarrow,
+and writing the runs table runs no job either. The kernel's plan is the
+same on every call: scan → [balance] → mapInArrow, with no join.
 
-- resume: left-anti join of the input against the committed output snapshot
-  (≙ skip-if-exists, reference resize.py:158-162 — but gated *before* any
-  work, fixing crop.py's detect-before-gate inefficiency, SURVEY.md §4.2.4)
-- the parse partitioning is decided on the scan, before the resume skip
-  (the doc kernel's one rule): the kernel reads straight off a scan that
-  already has at least ``defaultParallelism`` splits (coalesced to that
-  many), fewer splits are repartitioned by url into ``defaultParallelism``
-  partitions first, so the CPU-bound parse runs as one wave of one task
-  per core
+- resume: the input's urls already in the committed output snapshot are
+  skipped (≙ skip-if-exists, reference resize.py:158-162 — but gated
+  *before* any parse, fixing crop.py's detect-before-gate inefficiency,
+  SURVEY.md §4.2.4). The lookup reads only the table's url column under an
+  ``isin`` filter of the offered urls, so the driver's memory and the
+  tasks' closure are bounded by the input, not by the table's history;
+  the kernel tasks drop those rows before the record builder
+- the parse partitioning is decided on the scan (the doc kernel's one
+  rule): the kernel reads straight off a scan that already has at least
+  ``defaultParallelism`` splits (coalesced to that many), fewer splits are
+  repartitioned by url into ``defaultParallelism`` partitions first, so
+  the CPU-bound parse runs as one wave of one task per core
 - each kernel task ends by dropping the Python worker's cached zip
   finders, so a reused worker's next task does not re-read pyspark's
   archives (``doc_kernel._drop_zip_finders``)
-- a resume with nothing left to do reads no html and runs no kernel task:
-  its input's new urls come out empty, so adaptive execution prunes the
-  html scan, no task writes a file and the commit dir stays empty. Like
-  any run whose kernel output is empty, it discards that commit and
-  publishes no snapshot. A crashed run leaves no visible rows (the
-  manifest publish is atomic)
+- a resume with nothing left to do (every offered url committed, or an
+  empty input) runs only the url collect: no kernel job, no html read, no
+  commit dir, no snapshot. Any other run whose kernel output is empty
+  discards its commit and publishes no snapshot. A crashed run leaves no
+  visible rows (the manifest publish is atomic)
 - lineage: one row per task partition in the runs table (docs in/ok/failed,
   measured wall time), ≙ the reference's per-run counters (D7/J7)
 - salting: two-stage aggregation helper for skewed keys (hot hosts)
@@ -44,6 +47,7 @@ import os
 import time
 
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,30 +122,45 @@ def run_extraction_job(
     cfg: ExtractConfig | None = None,
     run_id: str | None = None,
 ) -> dict:
-    """One resumable job run. Returns the run summary (counters ≙ D7)."""
+    """One resumable job run. Returns the run summary (counters ≙ D7).
+
+    On a table that already has a snapshot the call resumes: it collects
+    the input's urls (one Arrow collect), asks the table which of them are
+    committed (``SnapshotTable.committed``), and the kernel tasks drop
+    those pages. ``docs_in`` counts the pages extracted. When no offered
+    url is new, the call runs no kernel job and allocates no commit.
+
+    A page whose url is null is never extracted, by a fresh call or a
+    resume call alike, and is not counted in ``docs_in``: the url is the
+    table's key (``DOC_SCHEMA`` declares it non-null), and a keyless page
+    could never be skipped by a later call."""
     cfg = cfg or ExtractConfig()
     run_id = run_id or f"run-{int(time.time() * 1000)}"
 
     t0 = time.time()
-    done = out_table.read(spark)
-    # resume: anything already committed is skipped before ANY work (an
-    # anti-join needs no distinct build side)
-    skip = None if done is None else done.select("url")
+    # resume: the input's urls that are already committed are skipped
+    # before any parse; the lookup is bounded by the input, not the table
+    replayed, new_docs = None, True
+    if out_table.snapshot_ids():
+        offered = pages.select("url").toArrow().column("url")
+        replayed = out_table.committed(offered)
+        # both count distinct non-null urls, and replayed ⊆ offered
+        new_docs = len(replayed) < pc.count_distinct(offered).as_py()
 
     # the kernel's tasks write the commit's files and return their lineage
     # (J7), one row per task that wrote rows, with wall_us the measured time
     # of that task: collecting those rows is the only action over the
-    # kernel. A resume with nothing left to do reads no html and runs no
-    # kernel task: the skip prunes the scan, and the empty commit is
-    # discarded below
-    commit = out_table.new_commit()
-    commit_dir = os.path.join(out_table.data_dir, commit)
-    parts = sorted(doc_write_df(pages, commit_dir, cfg, skip=skip).collect())
-    # the commit holds exactly the files the lineage rows name: a failed
-    # task attempt may have left its hidden temp file behind
-    named = {part_file(p.partition_id) for p in parts}
-    for name in set(os.listdir(commit_dir)) - named:
-        os.remove(os.path.join(commit_dir, name))
+    # kernel. A resume with nothing left to do runs no kernel job
+    parts, commit = [], None
+    if new_docs:
+        commit = out_table.new_commit()
+        commit_dir = os.path.join(out_table.data_dir, commit)
+        parts = sorted(doc_write_df(pages, commit_dir, cfg, replayed).collect())
+        # the commit holds exactly the files the lineage rows name: a failed
+        # task attempt may have left its hidden temp file behind
+        named = {part_file(p.partition_id) for p in parts}
+        for name in set(os.listdir(commit_dir)) - named:
+            os.remove(os.path.join(commit_dir, name))
 
     lineage_rows = [
         {**p.asDict(), "rows_failed": p.rows_out - p.rows_ok} for p in parts
@@ -177,7 +196,8 @@ def run_extraction_job(
         )
         summary["snapshot_id"] = snapshot_id
     else:
-        out_table.discard(commit)
+        if commit is not None:
+            out_table.discard(commit)
         summary["snapshot_id"] = None
     summary["wall_s"] = time.time() - t0
     return summary

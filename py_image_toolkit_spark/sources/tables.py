@@ -25,6 +25,13 @@ The manifest is the table's metadata: it records the schema and each
 commit's column set, so a read whose commits all share the schema's columns
 plans its scan without opening a file footer (no Spark job).
 
+``committed`` answers "which of these keys does the table already hold" on
+the driver, without Spark: it reads one column of the latest snapshot's
+data files with ``pyarrow.dataset`` under an ``isin`` filter, so its memory
+is bounded by the keys asked about, never by the table. The resumable
+extraction job asks it for the urls of its input, so the driver reads the
+table root too.
+
 On a real cluster with iceberg-spark-runtime on the classpath, swap
 ``SnapshotTable`` for ``df.writeTo(table).append()`` — the pipeline code
 only touches this API.
@@ -41,6 +48,8 @@ import uuid
 from datetime import timezone
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -327,6 +336,33 @@ class SnapshotTable:
             return snapshot_id
 
     # -- read path -----------------------------------------------------------
+
+    def committed(self, values: pa.Array, column: str = "url") -> pa.Array:
+        """The distinct non-null ``values`` that ``column`` of the latest
+        snapshot holds (empty if there is no snapshot), without Spark.
+
+        Only ``column`` of the snapshot's data files is read, under an
+        ``isin(values)`` filter, so memory is bounded by ``values``, not by
+        the table. The data files are each commit's ``*.parquet`` files
+        that are not hidden (``.``/``_``): Spark-written commits also hold
+        ``_SUCCESS`` and ``.crc`` files. Nothing is taken from the
+        manifest's ``commit_schemas``, so a table written before it existed
+        answers the same way."""
+        values = pc.unique(values.drop_null())
+        snap = self.latest_snapshot()
+        if snap is None or not len(values):
+            return values[:0]
+        files = []
+        for commit in snap["data_dirs"]:
+            path = os.path.join(self.data_dir, commit)
+            files += [
+                os.path.join(path, f) for f in sorted(os.listdir(path))
+                if f.endswith(".parquet") and not f.startswith((".", "_"))
+            ]
+        found = ds.dataset(
+            files, schema=pa.schema([(column, values.type)]), format="parquet"
+        ).to_table(filter=ds.field(column).isin(values))
+        return pc.unique(found.column(column).combine_chunks())
 
     def read(
         self,

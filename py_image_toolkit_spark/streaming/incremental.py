@@ -24,7 +24,7 @@ def run_available_now(
     """Drain all currently-available files from ``input_dir`` through the
     extraction pipeline in micro-batches, committing one snapshot per batch.
     Restart-safe twice over: the stream checkpoint skips consumed files AND
-    the resume anti-join absorbs any replayed urls."""
+    the resume skip absorbs any replayed urls."""
     cfg = cfg or ExtractConfig()
     reader = (
         spark.readStream.schema(PAGES_SCHEMA)

@@ -191,13 +191,13 @@ def _half_committed(spark, tmp_path):
 
 
 def test_extraction_job_resume_probes_only_the_scan(spark, spark_jobs, tmp_path):
-    """A resume call with new docs is three Spark jobs: the broadcast of
-    the committed urls (for the url-only anti-join that finds the input's
-    new urls), the broadcast of those new urls (for the semi-join in front
-    of the kernel), and the output write. Reading the committed table takes
-    its schema from the manifest and the driver writes the runs table, so
-    neither runs a job; the parse partitioning is decided on the scan,
-    which plans its splits without one."""
+    """A resume call with new docs is two Spark jobs: the Arrow collect of
+    the input's urls, and the collect of the lineage rows of the kernel,
+    whose tasks drop the urls the table already holds. Asking the table
+    which urls it holds reads its url column with pyarrow on the driver,
+    and the driver writes the runs table, so neither runs a job; the parse
+    partitioning is decided on the scan, which plans its splits without
+    one."""
     from py_image_toolkit_spark.plans.job import run_extraction_job
 
     pages, out, runs, s1 = _half_committed(spark, tmp_path)
@@ -205,13 +205,13 @@ def test_extraction_job_resume_probes_only_the_scan(spark, spark_jobs, tmp_path)
     assert s1["docs_in"] + s2["docs_in"] == 40
     assert s2["snapshot_id"] == 2
     # measured under the test session (local[8])
-    assert jobs == 3
+    assert jobs == 2
 
 
 def test_extraction_job_noop_resume_reads_no_html(spark, spark_jobs, tmp_path):
-    """A call over an input that is all committed runs the two url
-    broadcasts and an empty write (3 Spark jobs), publishes no snapshot
-    and leaves no commit dir behind."""
+    """A call over an input that is all committed runs only the collect of
+    its urls (1 Spark job), publishes no snapshot, allocates no commit dir
+    and leaves the runs table as it was."""
     import os
 
     from py_image_toolkit_spark.plans.job import run_extraction_job
@@ -219,30 +219,49 @@ def test_extraction_job_noop_resume_reads_no_html(spark, spark_jobs, tmp_path):
     pages, out, runs, _ = _half_committed(spark, tmp_path)
     run_extraction_job(spark, pages, out, runs, run_id="r2")
     dirs = sorted(os.listdir(out.data_dir))
+    run_dirs = sorted(os.listdir(runs.data_dir))
     s3, jobs = spark_jobs(lambda: run_extraction_job(spark, pages, out, runs, run_id="r3"))
-    assert s3["rows_out"] == 0 and s3["snapshot_id"] is None
+    assert s3["rows_out"] == 0 and s3["docs_in"] == 0 and s3["snapshot_id"] is None
     assert out.snapshot_ids() == [1, 2] and runs.snapshot_ids() == [1, 2]
     assert sorted(os.listdir(out.data_dir)) == dirs
-    assert jobs == 3
+    assert sorted(os.listdir(runs.data_dir)) == run_dirs
+    assert jobs == 1
 
 
-def test_extract_with_everything_skipped_prunes_the_html_scan(spark, tmp_path):
-    """When every input url is in ``skip``, adaptive execution replaces the
-    html scan and the semi-join with an empty relation: the final plan
-    reads no file and the kernel gets no task."""
-    from py_image_toolkit_spark.fixtures import pages_df
-    from py_image_toolkit_spark.plans.pipeline import extract
+def test_extraction_job_noop_resume_runs_no_kernel_task(spark, tmp_path):
+    """No job of a call over an all-committed input executes the kernel's
+    plan (a ``MapInArrow``), and its jobs run exactly the tasks of the url
+    collect, one per split of the url scan: no kernel task and no scan of
+    the committed table."""
+    import uuid
 
-    src = str(tmp_path / "pages")
-    pages_df(spark, 16).write.parquet(src)
-    pages = spark.read.parquet(src)
-    out = extract(pages, skip=pages.select("url"))
-    assert out.collect() == []
-    plan = plan_of(out)
-    assert "isFinalPlan=true" in plan
-    final = plan.split("== Initial Plan ==")[0]
-    assert "MapInArrow" in final and "EmptyRelation" in final
-    assert "FileScan" not in final
+    from py_image_toolkit_spark.plans.job import run_extraction_job
+
+    pages, out, runs, _ = _half_committed(spark, tmp_path)
+    run_extraction_job(spark, pages, out, runs, run_id="r2")
+    sc = spark.sparkContext
+    group = f"noop-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        s3 = run_extraction_job(spark, pages, out, runs, run_id="r3")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert s3["rows_out"] == 0
+    tracker = sc.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(group))
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    tasks = sum(tracker.getStageInfo(s).numTasks for s in stages)
+    assert tasks == pages.select("url").rdd.getNumPartitions()
+    # the SQL executions the call's jobs belong to, with their final plans
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        keys = e.jobs().keys().toList()
+        if jobs & {keys.apply(k) for k in range(keys.size())}:
+            plans.append(e.physicalPlanDescription())
+    assert plans and not any("MapInArrow" in p for p in plans)
 
 
 def test_extraction_job_balances_a_single_split_input(spark, tmp_path):
@@ -250,7 +269,7 @@ def test_extraction_job_balances_a_single_split_input(spark, tmp_path):
     the CPU-bound parse into one wave of ``defaultParallelism`` tasks, so
     more than one task, and no more than one per core, runs the kernel:
     the runs table gets one lineage row per task that wrote rows. A resume
-    call balances the same way (the committed urls are skipped after it)."""
+    call balances the same way (its tasks drop the committed urls)."""
     from py_image_toolkit_spark.fixtures import pages_df
     from py_image_toolkit_spark.plans.job import run_extraction_job
     from py_image_toolkit_spark.sources.tables import SnapshotTable

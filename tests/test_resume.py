@@ -58,11 +58,20 @@ def test_kill_and_resume_converges(spark, tmp_path):
 
 def test_empty_run_discards_its_commit(spark, tmp_path):
     """A run whose kernel output is empty (here: an empty input into a
-    fresh table) discards its commit dir and publishes no snapshot."""
+    fresh table) discards its commit dir and publishes no snapshot. An
+    empty input to a table that has a snapshot is a no-op resume: it
+    allocates no commit dir at all."""
     out, runs = _tables(tmp_path, "empty")
-    s = run_extraction_job(spark, pages_df(spark, 4).limit(0), out, runs, CFG)
+    pages = pages_df(spark, 4)
+    s = run_extraction_job(spark, pages.limit(0), out, runs, CFG)
     assert s["rows_out"] == 0 and s["snapshot_id"] is None
     assert out.snapshot_ids() == [] and os.listdir(out.data_dir) == []
+
+    run_extraction_job(spark, pages, out, runs, CFG, run_id="r1")
+    dirs = os.listdir(out.data_dir)
+    s = run_extraction_job(spark, pages.limit(0), out, runs, CFG, run_id="r2")
+    assert s["docs_in"] == 0 and s["snapshot_id"] is None
+    assert out.snapshot_ids() == [1] and os.listdir(out.data_dir) == dirs
 
 
 def test_orphan_commit_dir_is_invisible(spark, tmp_path):
@@ -485,3 +494,111 @@ def test_schema_evolution_merge_and_compact(spark, tmp_path):
     assert set(plain.columns) == {"v", "extra"}
     after = {r["v"]: r["extra"] for r in plain.collect()}
     assert after == got
+
+
+def _driver_commit(table, urls):
+    """Publish one driver-written commit of a one-column ``url`` table."""
+    import pyarrow as pa
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    commit = table.write(pa.table({"url": pa.array(urls, pa.string())}))
+    table.publish(commit, StructType([StructField("url", StringType())]))
+    return commit
+
+
+def test_committed_returns_the_committed_subset(tmp_path):
+    """``committed`` answers with the distinct non-null values the latest
+    snapshot holds: duplicates, nulls and uncommitted values in the
+    question do not come back, an empty question or a table without a
+    snapshot gets an empty answer, and a manifest without
+    ``commit_schemas`` answers the same."""
+    import json
+
+    import pyarrow as pa
+
+    table = SnapshotTable(str(tmp_path / "lookup"))
+    ask = pa.array(["a", "b", "a", None, "x", "c", "c"], pa.string())
+    assert table.committed(ask).to_pylist() == []
+    _driver_commit(table, ["a", "b", "q"])
+    _driver_commit(table, ["c", "a"])
+    assert sorted(table.committed(ask).to_pylist()) == ["a", "b", "c"]
+    assert table.committed(ask[:0]).to_pylist() == []
+    assert table.committed(pa.array([None, "x"], pa.string())).to_pylist() == []
+
+    path = os.path.join(table.snap_dir, "manifest-2.json")
+    with open(path) as fh:
+        snap = json.load(fh)
+    del snap["commit_schemas"]
+    with open(path, "w") as fh:
+        json.dump(snap, fh)
+    assert sorted(table.committed(ask).to_pylist()) == ["a", "b", "c"]
+
+
+def test_committed_reads_spark_and_kernel_written_commits(spark, tmp_path):
+    """A table whose lineage mixes a commit Spark wrote (``append``, with
+    its ``_SUCCESS`` and ``.crc`` files) and commits the kernel's tasks
+    wrote answers from all of them, and a resume call over it extracts
+    exactly the pages no commit holds."""
+    import pyarrow as pa
+
+    from py_image_toolkit_spark.operators.doc_kernel import DOC_SCHEMA, doc_extract_df
+
+    out, runs = _tables(tmp_path, "mixed")
+    pages = pages_df(spark, 30)
+    third = F.pmod(F.xxhash64("url"), F.lit(3))
+    spark_commit = out.write(doc_extract_df(pages.filter(third == 0), CFG))
+    out.publish(spark_commit, DOC_SCHEMA, run_id="spark")
+    names = os.listdir(os.path.join(out.data_dir, spark_commit))
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+
+    a, b, c = (pages.filter(third == k).count() for k in range(3))
+    assert min(a, b, c) > 0
+    s1 = run_extraction_job(spark, pages.filter(third < 2), out, runs, CFG, run_id="r1")
+    s2 = run_extraction_job(spark, pages, out, runs, CFG, run_id="r2")
+    assert (s1["docs_in"], s2["docs_in"]) == (b, c)
+
+    urls = [r["url"] for r in pages.select("url").collect()]
+    ask = pa.array(urls + ["https://nowhere.invalid/"], pa.string())
+    assert sorted(out.committed(ask).to_pylist()) == sorted(urls)
+
+
+def test_committed_answers_from_live_commits_only(spark, tmp_path):
+    """After ``compact``, only the compacted commit is live: a url that
+    exists only in a pre-compaction commit dir (kept on disk for time
+    travel) or in an unpublished commit dir does not come back."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = SnapshotTable(str(tmp_path / "compacted"))
+    old = _driver_commit(table, ["a", "b"])
+    _driver_commit(table, ["c"])
+    table.compact(spark, target_partitions=1)
+    assert old not in table.latest_snapshot()["data_dirs"]
+    pq.write_table(
+        pa.table({"url": ["ghost"]}),
+        os.path.join(table.data_dir, old, "part-00001.parquet"),
+    )
+    table.write(pa.table({"url": ["orphan"]}))  # never published
+    ask = pa.array(["a", "b", "c", "ghost", "orphan"], pa.string())
+    assert sorted(table.committed(ask).to_pylist()) == ["a", "b", "c"]
+
+
+def test_null_url_pages_are_never_extracted(spark, tmp_path):
+    """A page whose url is null is dropped by a fresh call and by a resume
+    call alike: it is not extracted, not counted in ``docs_in``, and a
+    resume call whose only uncommitted page has a null url runs no kernel
+    job."""
+    out, runs = _tables(tmp_path, "nulls")
+    pages = pages_df(spark, 10)
+    nulls = pages.limit(1).withColumn("url", F.lit(None).cast("string"))
+    half = pages.filter(F.xxhash64("url") % 2 == 0)
+    n = half.count()
+
+    s1 = run_extraction_job(spark, half.unionByName(nulls), out, runs, CFG, run_id="r1")
+    assert s1["docs_in"] == n and s1["rows_out"] == n * len(CFG.rules)
+    s2 = run_extraction_job(spark, pages.unionByName(nulls), out, runs, CFG, run_id="r2")
+    assert s2["docs_in"] == 10 - n
+    s3 = run_extraction_job(spark, pages.unionByName(nulls), out, runs, CFG, run_id="r3")
+    assert s3["docs_in"] == 0 and s3["snapshot_id"] is None
+    assert out.read(spark).filter(F.col("url").isNull()).count() == 0
+    assert out.read(spark).select("url").distinct().count() == 10
