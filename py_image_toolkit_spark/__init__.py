@@ -13,8 +13,9 @@ table:
   char span.
 - E3 **extract**    (≙ ocr.py):      ordered token labeling + run-merge +
   first-wins pivot to one structured record per url.
-- E4 **encode**     (≙ optimize.py): per-format writer options; snapshot
-  commit; skip-if-exists resume via a committed-url lookup.
+- E4 **encode**     (≙ optimize.py): one zstd parquet format per snapshot
+  table, set by the table (sources/tables.py), not by its writers;
+  snapshot commit; skip-if-exists resume via a committed-url lookup.
 
 Because no extraction step crosses document boundaries, the whole
 per-document pipeline runs as ONE Arrow-batched ``mapInArrow`` stage

@@ -13,12 +13,14 @@ output columns are built against the Arrow form of ``DOC_SCHEMA``.
 
 Two sinks share that one record builder (``_doc_batch``). The record sink
 (``doc_extract_df``) returns the records as a DataFrame. The writing sink
-(``doc_write_df``) is the job's: each task writes its records as one
-parquet file into the call's commit dir and returns one lineage row (J7):
-its partition id, output rows, input documents, successful rows and
-measured wall time. The driver collects those rows and commits the files
-they name (≙ an Iceberg writer task returning its data files), so the
-records never cross back from Python into the JVM.
+(``doc_write_df``) is the job's: each task hands its records to the
+table's ``write_part`` (sources/tables.py, which owns the file format),
+which lands them as one parquet file in the call's commit dir, and the
+task returns one lineage row (J7): its partition id, output rows, input
+documents, successful rows and measured wall time. The driver collects
+those rows and commits the files they name (≙ an Iceberg writer task
+returning its data files), so the records never cross back from Python
+into the JVM.
 
 The writing sink also applies the job's resume skip, inside its tasks: the
 driver hands it the input's urls that the table already holds (a
@@ -45,7 +47,6 @@ no archive to re-read (``_drop_zip_finders``).
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 import zipimport
@@ -53,7 +54,6 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
@@ -66,6 +66,7 @@ from pyspark.sql.types import (
 from py_image_toolkit_spark.config import ExtractConfig
 from py_image_toolkit_spark.functions import vocab as V
 from py_image_toolkit_spark.oracle.extractor import extract_document
+from py_image_toolkit_spark.sources.tables import write_part
 
 SPAN_STRUCT = StructType(
     [
@@ -117,24 +118,6 @@ LINEAGE_SCHEMA = StructType(
     ]
 )
 _LINEAGE_ARROW_SCHEMA = to_arrow_schema(LINEAGE_SCHEMA)
-
-# the writing sink's parquet: zstd at the level Spark's parquet writer used
-# (pyarrow's default level 1 stores ~3% more per doc); no Arrow schema in
-# the footer, since the table's manifest holds the schema; footer min/max
-# only for the columns a commit may be pruned on (min/max of the text
-# columns add ~7 KB to a 250-doc file); ``warc_ts`` is written as Arrow
-# holds it, int64 micros adjusted to UTC
-_PARQUET_OPTIONS = {
-    "compression": "zstd",
-    "compression_level": 3,
-    "store_schema": False,
-    "write_statistics": ["url", "warc_ts"],
-}
-# a task's records are buffered into row groups of about the size of
-# Spark's parquet blocks (parquet.block.size), so a file is one row group
-# unless its task's output is larger
-_ROW_GROUP_BYTES = 128 << 20
-
 
 def _drop_zip_finders() -> None:
     """Evict every cached ``zipimporter`` and its archive's directory.
@@ -203,12 +186,6 @@ def _make_doc_kernel(cfg: ExtractConfig):
     return run
 
 
-def part_file(partition_id: int) -> str:
-    """The name of the data file the writing task of ``partition_id``
-    lands in its commit dir."""
-    return f"part-{partition_id:05d}.parquet"
-
-
 def _new_docs(batch: pa.RecordBatch, replayed: pa.Array | None) -> pa.RecordBatch:
     """The rows of ``batch`` whose url is set and not in ``replayed``."""
     url = batch.column("url")
@@ -230,39 +207,25 @@ def _write_part(
 ) -> Iterator[pa.RecordBatch]:
     """The writing sink's task body: write the extraction records of the
     new docs of ``batches`` (``_new_docs``: rows with a url, not in
-    ``replayed``) to ``part_file(partition_id)`` in ``commit_dir``, then
-    yield the task's one lineage row (``LINEAGE_SCHEMA``).
-
-    The file is written under a hidden name of its own attempt and renamed
-    into place once complete, so a retried or speculative attempt of the
-    same partition replaces it whole, with the same rows. A task that
-    produced no rows writes no file and yields no row."""
+    ``replayed``) with ``write_part`` to ``part_file(partition_id)`` in
+    ``commit_dir``, then yield the task's one lineage row
+    (``LINEAGE_SCHEMA``). A task that produced no rows writes no file and
+    yields no row."""
     t_start = time.monotonic()
-    tmp = os.path.join(commit_dir, f".{part_file(partition_id)}.{attempt_id}")
-    writer = None
-    group: list[pa.RecordBatch] = []
-    group_bytes = rows = docs = ok = 0
-    try:
+    docs = ok = 0
+
+    def records() -> Iterator[pa.RecordBatch]:
+        nonlocal docs, ok
         for batch in batches:
             batch = _new_docs(batch, replayed)
-            if not batch.num_rows:
-                continue
-            out = _doc_batch(batch, cfg)
-            docs += batch.num_rows
-            rows += out.num_rows
-            ok += out.column("success").true_count
-            group.append(out)
-            group_bytes += out.nbytes
-            if group_bytes >= _ROW_GROUP_BYTES:
-                writer = _write_row_group(writer, tmp, group)
-                group, group_bytes = [], 0
-        if rows:
-            writer = _write_row_group(writer, tmp, group)
-    finally:
-        if writer is not None:
-            writer.close()
+            if batch.num_rows:
+                out = _doc_batch(batch, cfg)
+                docs += batch.num_rows
+                ok += out.column("success").true_count
+                yield out
+
+    rows = write_part(commit_dir, partition_id, attempt_id, records(), _ARROW_SCHEMA)
     if rows:
-        os.replace(tmp, os.path.join(commit_dir, part_file(partition_id)))
         wall_us = int((time.monotonic() - t_start) * 1_000_000)
         yield pa.RecordBatch.from_pylist(
             [{"partition_id": partition_id, "rows_out": rows, "docs_in": docs,
@@ -270,18 +233,6 @@ def _write_part(
             schema=_LINEAGE_ARROW_SCHEMA,
         )
     _drop_zip_finders()
-
-
-def _write_row_group(
-    writer: pq.ParquetWriter | None, path: str, group: list[pa.RecordBatch]
-) -> pq.ParquetWriter:
-    """Write ``group`` as one row group, opening the file on the first."""
-    if writer is None:
-        writer = pq.ParquetWriter(path, _ARROW_SCHEMA, **_PARQUET_OPTIONS)
-    table = pa.Table.from_batches(group, _ARROW_SCHEMA)
-    if table.num_rows:
-        writer.write_table(table, row_group_size=table.num_rows)
-    return writer
 
 
 def _make_doc_writer(

@@ -58,13 +58,11 @@ def _anchored(pattern: str) -> str:
     return f"^(?:{pattern})$"
 
 
-def classify_token(t: Column, prev: Column, road_guard: Column | None = None) -> Column:
-    """H9-H14 classifier for one token given the previous token (C4 road
-    guard) — the window implementation passes prev = lag(token).
-
-    ``road_guard`` overrides the C4 guard predicate so the dictionary
-    encoding in :func:`label_pass1` can evaluate both guard outcomes on the
-    distinct-token table (where no ``prev`` exists)."""
+def classify_token(t: Column, road_guard: Column) -> Column:
+    """H9-H14 classifier for one token under one outcome of the C4 road
+    guard (the previous token names a road and this one is a short number):
+    the dictionary encoding in :func:`label_pass1` evaluates both outcomes
+    on the distinct-token table, where no previous token exists."""
     is_title = t.isin(*V.DOC_TITLE_KEYWORDS)
     rrn_clean = F.regexp_replace(F.regexp_replace(t, "-", ""), " ", "")
     is_rrn = t.rlike(_anchored(V.RRN_DASHED_RE)) | rrn_clean.rlike(_anchored(V.RRN_PLAIN_RE))
@@ -79,13 +77,6 @@ def classify_token(t: Column, prev: Column, road_guard: Column | None = None) ->
         | t.rlike(_anchored(V.MONTH_RE))
         | t.rlike(_anchored(V.DAY_RE))
     )
-    if road_guard is None:
-        road_guard = (
-            prev.isNotNull()
-            & _contains_any(prev, V.ROAD_KEYWORDS)
-            & t.rlike(DIGITS_RE)
-            & (F.length(t) <= 2)
-        )
     is_addressish = (
         _contains_any(t, V.ADDRESS_KEYWORDS)
         | t.rlike(V.ADDR_UNIT_RE)
@@ -104,44 +95,34 @@ def classify_token(t: Column, prev: Column, road_guard: Column | None = None) ->
         F.when(is_title, "document_title")
         .when(is_rrn, "rrn")
         .when(is_issuer, "issuer")
-        .when(is_date_comp & ~F.coalesce(road_guard, F.lit(False)), "issue_date")
+        .when(is_date_comp & ~road_guard, "issue_date")
         .when(is_addressish & ~(short_digit & ~clear_addr), "address")
         .otherwise("O")
     )
 
 
-def label_pass1(
-    tokens: DataFrame, keys: Sequence[str], dict_encode: bool = True
-) -> DataFrame:
+def label_pass1(tokens: DataFrame, keys: Sequence[str]) -> DataFrame:
     """H9-H14 per-token classifier + C4 road-number guard (window form).
 
-    ``dict_encode=True`` (default) runs the ~40 keyword/regex tests once per
-    DISTINCT token and broadcast-joins the labels back, instead of once per
-    token occurrence: natural-language vocabularies are Zipf-bounded, so at
-    corpus scale this cuts classifier CPU by the occurrence/vocabulary ratio
-    (map-side partial aggregation keeps the distinct cheap — only
-    vocabulary-sized data shuffles). The C4 guard depends on the PREVIOUS
-    token, so the dictionary carries both guard outcomes (`_lbl_base`,
-    `_lbl_guard`) plus the two per-token guard inputs; the window pass then
-    only evaluates a lag() and a boolean pick — byte-identical to the direct
-    form (asserted by the q15-q17 SQL oracles).
-    Broadcast-size bound (round-3 ADVICE): the dictionary keeps ONLY tokens
-    whose classification is non-trivial (any label ≠ 'O', or a road/guard
-    flag) — every other token misses the left join and lands on the existing
-    ``coalesce(..., 'O')`` fallback, which is exactly its true label (the
-    guard can only *remove* label branches, so base='O' ⟹ guard='O').
-    On ID/hash-heavy corpora (near-all-unique vocabulary) random tokens
-    match none of the ~40 patterns, so the broadcast stays bounded by the
-    *pattern-matching* vocabulary, not the distinct-token count — the
-    driver-OOM path the unconditional broadcast used to have. For a corpus
-    adversarially full of distinct pattern-matching tokens pass
-    ``dict_encode=False`` (direct per-occurrence classification, no
-    dictionary at all)."""
+    Runs the ~40 keyword/regex tests once per DISTINCT token and
+    broadcast-joins the labels back, instead of once per token occurrence:
+    natural-language vocabularies are Zipf-bounded, so at corpus scale this
+    cuts classifier CPU by the occurrence/vocabulary ratio (map-side partial
+    aggregation keeps the distinct cheap — only vocabulary-sized data
+    shuffles). The C4 guard depends on the PREVIOUS token, so the dictionary
+    carries both guard outcomes (`_lbl_base`, `_lbl_guard`) plus the two
+    per-token guard inputs; the window pass then only evaluates a lag() and
+    a boolean pick — byte-identical to the direct per-occurrence form
+    (asserted by the q15-q17 SQL oracles)."""
     w = Window.partitionBy(*keys).orderBy("seq")
-    if not dict_encode:
-        return tokens.withColumn(
-            "label", classify_token(F.col("token"), F.lag("token").over(w))
-        )
+    # Broadcast-size bound (round-3 ADVICE): the dictionary keeps ONLY
+    # tokens whose classification is non-trivial (any label ≠ 'O', or a
+    # road/guard flag) — every other token misses the left join and lands on
+    # the ``coalesce(..., 'O')`` fallback, which is exactly its true label
+    # (the guard can only *remove* label branches, so base='O' ⟹ guard='O').
+    # On ID/hash-heavy corpora (near-all-unique vocabulary) random tokens
+    # match none of the ~40 patterns, so the broadcast stays bounded by the
+    # *pattern-matching* vocabulary, not the distinct-token count.
     t = F.col("token")
     # Pushdown barrier: without it, Catalyst substitutes the aliases and
     # pushes the keep-predicate below the DISTINCT — the ~40-test classifier
@@ -156,8 +137,8 @@ def label_pass1(
         .distinct()
         .select(
             "token",
-            classify_token(t, F.lit(None).cast("string")).alias("_lbl_base"),
-            classify_token(t, None, road_guard=F.lit(True)).alias("_lbl_guard"),
+            classify_token(t, F.lit(False)).alias("_lbl_base"),
+            classify_token(t, F.lit(True)).alias("_lbl_guard"),
             _contains_any(t, V.ROAD_KEYWORDS).alias("_is_road"),
             (t.rlike(DIGITS_RE) & (F.length(t) <= 2)).alias("_guardable"),
             F.monotonically_increasing_id().alias("_pushdown_barrier"),

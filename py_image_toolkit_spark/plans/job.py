@@ -54,10 +54,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from py_image_toolkit_spark.config import ExtractConfig
-from py_image_toolkit_spark.operators.doc_kernel import (
-    DOC_SCHEMA, doc_write_df, part_file,
-)
-from py_image_toolkit_spark.sources.tables import SnapshotTable
+from py_image_toolkit_spark.operators.doc_kernel import DOC_SCHEMA, doc_write_df
+from py_image_toolkit_spark.sources.tables import SnapshotTable, part_file
 
 # runs-table rows: one per task partition of a run
 _RUNS_SCHEMA = pa.schema(
@@ -165,13 +163,13 @@ def run_extraction_job(
     lineage_rows = [
         {**p.asDict(), "rows_failed": p.rows_out - p.rows_ok} for p in parts
     ]
+    # the output manifest's meta: the run's id and counters
     summary = {
         "run_id": run_id,
         **{
             k: sum(r[k] for r in lineage_rows)
             for k in ("rows_out", "docs_in", "rows_ok", "rows_failed")
         },
-        "wall_s": None,  # filled after commit
     }
 
     if summary["rows_out"] > 0:
@@ -190,7 +188,7 @@ def run_extraction_job(
             schema=_RUNS_SCHEMA,
         )
         # a handful of rows per run, already on the driver: one file written
-        # without a Spark job
+        # in the table's format without a Spark job
         runs_table.publish(
             runs_table.write(runs), from_arrow_schema(runs.schema), run_id=run_id
         )

@@ -47,7 +47,8 @@ _DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": str(DEFAULT_ARROW_BATCH),
     # Parquet writes: zstd ≙ the reference's per-format quality knobs
-    # (reference optimize.py:39-53); see operators/encode.py for the map.
+    # (reference optimize.py:39-53). Snapshot tables state their own codec
+    # (sources/tables.py); this is the default for every other write.
     "spark.sql.parquet.compression.codec": "zstd",
     # Keep timestamps deterministic across engines (oracle parity).
     "spark.sql.session.timeZone": "UTC",

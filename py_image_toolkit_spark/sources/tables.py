@@ -21,6 +21,15 @@ writer tasks returning data files to the committing driver). Such writers
 run on the executors, so the table root must be the same POSIX path on
 every executor and the driver.
 
+The table owns its data-file format (≙ Iceberg's
+``write.parquet.compression-codec``/``-level`` table properties), so no
+writer chooses one. Every file written outside Spark (the kernel's tasks,
+the driver's ``write`` of a ``pyarrow.Table``) goes through ``write_part``;
+Spark's writes (``write`` of a DataFrame, ``compact``) state the same codec.
+A commit's data files are its non-hidden ``*.parquet`` files
+(``_data_files``): Spark also leaves ``_SUCCESS`` and ``.crc`` files, and a
+failed task attempt may leave its hidden temp file.
+
 The manifest is the table's metadata: it records the schema and each
 commit's column set, so a read whose commits all share the schema's columns
 plans its scan without opening a file footer (no Spark job).
@@ -45,15 +54,98 @@ import re
 import shutil
 import time
 import uuid
+from collections.abc import Iterable
 from datetime import timezone
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _MANIFEST_RE = re.compile(r"manifest-(\d+)\.json$")
+
+# The data-file format: zstd at level 3, the level Spark's parquet writer
+# uses (pyarrow's default level 1 stores ~3% more per doc); no Arrow schema
+# in the footer, since the manifest holds the schema; footer min/max only
+# for the key columns a commit may be pruned on or looked up by (min/max of
+# the text columns add ~7 KB to a 250-doc file). ``warc_ts`` is written as
+# Arrow holds it, int64 micros adjusted to UTC.
+_PARQUET_OPTIONS = {"compression": "zstd", "compression_level": 3, "store_schema": False}
+_KEY_COLUMNS = ("url", "warc_ts")
+# rows are buffered into row groups of about the size of Spark's parquet
+# blocks (parquet.block.size), so a file is one row group unless it is larger
+_ROW_GROUP_BYTES = 128 << 20
+
+
+def part_file(partition_id: int) -> str:
+    """The name of the data file ``write_part`` lands for ``partition_id``."""
+    return f"part-{partition_id:05d}.parquet"
+
+
+def _data_files(commit_dir: str) -> list[str]:
+    """The paths of a commit dir's data files: its ``*.parquet`` files that
+    are not hidden (``.``/``_``)."""
+    return [
+        os.path.join(commit_dir, f) for f in sorted(os.listdir(commit_dir))
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+
+
+def write_part(
+    commit_dir: str,
+    partition_id: int,
+    attempt_id: int,
+    batches: Iterable[pa.RecordBatch],
+    schema: pa.Schema,
+) -> int:
+    """Write ``batches`` (of ``schema``) in the table's format as the data
+    file ``part_file(partition_id)`` of ``commit_dir``. Returns the rows
+    written; with none, no file is written.
+
+    The file is written under a hidden name of its own attempt and renamed
+    into place once complete, so a retried or speculative attempt of the
+    same partition replaces it whole."""
+    tmp = os.path.join(commit_dir, f".{part_file(partition_id)}.{attempt_id}")
+    writer = None
+    group: list[pa.RecordBatch] = []
+    group_bytes = rows = 0
+    try:
+        for batch in batches:
+            group.append(batch)
+            group_bytes += batch.nbytes
+            rows += batch.num_rows
+            if group_bytes >= _ROW_GROUP_BYTES:
+                writer = _write_row_group(writer, tmp, schema, group)
+                group, group_bytes = [], 0
+        writer = _write_row_group(writer, tmp, schema, group)
+    finally:
+        if writer is not None:
+            writer.close()
+    if rows:
+        os.replace(tmp, os.path.join(commit_dir, part_file(partition_id)))
+    return rows
+
+
+def _write_row_group(
+    writer: pq.ParquetWriter | None,
+    path: str,
+    schema: pa.Schema,
+    group: list[pa.RecordBatch],
+) -> pq.ParquetWriter | None:
+    """Write the rows of ``group`` as one row group, opening the file on
+    the first."""
+    table = pa.Table.from_batches(group, schema)
+    if not table.num_rows:
+        return writer
+    if writer is None:
+        writer = pq.ParquetWriter(
+            path, schema, **_PARQUET_OPTIONS,
+            write_statistics=[c for c in _KEY_COLUMNS if c in schema.names],
+        )
+    writer.write_table(table, row_group_size=table.num_rows)
+    return writer
 
 
 def _load_json(path: str) -> dict:
@@ -118,15 +210,11 @@ def _footer_stats(commit_dir: str, stats_cols: tuple[str, ...]) -> dict[str, lis
     """Per-column [min, max] from parquet row-group footer statistics —
     metadata-only (never scans column data). A column missing min/max in any
     row group is recorded as [None, None] (pruning keeps it)."""
-    import pyarrow.parquet as pq
-
     mins: dict[str, object] = {}
     maxs: dict[str, object] = {}
     known = set(stats_cols)
-    for fname in sorted(os.listdir(commit_dir)):
-        if not fname.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(commit_dir, fname)).metadata
+    for path in _data_files(commit_dir):
+        md = pq.ParquetFile(path).metadata
         idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
         for c in stats_cols:
             if c not in known:
@@ -186,7 +274,6 @@ class SnapshotTable:
         df: DataFrame,
         run_id: str | None = None,
         meta: dict | None = None,
-        encode: "EncodeOptions | None" = None,
         stats_cols: tuple[str, ...] = (),
         replace: bool = False,
         require_base_snapshot: int | None = None,
@@ -195,7 +282,7 @@ class SnapshotTable:
         optimistic-concurrency manifest commit. Returns the new snapshot id.
         ``write`` + ``publish`` in one call; see them for the arguments."""
         return self.publish(
-            self.write(df, encode),
+            self.write(df),
             df.schema,
             run_id=run_id,
             meta=meta,
@@ -204,32 +291,22 @@ class SnapshotTable:
             require_base_snapshot=require_base_snapshot,
         )
 
-    def write(
-        self, df: DataFrame | pa.Table, encode: "EncodeOptions | None" = None
-    ) -> str:
+    def write(self, df: DataFrame | pa.Table) -> str:
         """Land df's data in a fresh commit directory, invisible to readers
         until ``publish``. Returns the commit (the directory's name under
         ``data/``); pass it to ``publish`` or ``discard``.
 
-        A Spark DataFrame is written by a Spark job; ``encode`` routes it
-        through the E4 per-format options dispatch (operators/encode.py ≙
-        reference optimize.py:39-53). A ``pyarrow.Table`` (rows the driver
-        already holds) is written by the driver as one zstd parquet file,
-        without a Spark job and without the Arrow schema in its footer: the
-        schema lives in the manifest. ``encode`` does not apply to it."""
+        A Spark DataFrame is written by a Spark job, zstd-compressed by the
+        table rather than by the session's default codec. A
+        ``pyarrow.Table`` (rows the driver already holds) is written by the
+        driver with ``write_part``, as one file and without a Spark job; an
+        empty one lands no file."""
         commit = self.new_commit()
         path = os.path.join(self.data_dir, commit)
         if isinstance(df, pa.Table):
-            import pyarrow.parquet as pq
-
-            pq.write_table(
-                df, os.path.join(path, "part-00000.parquet"),
-                compression="zstd", store_schema=False,
-            )
+            write_part(path, 0, 0, df.to_batches(), df.schema)
         else:
-            from py_image_toolkit_spark.operators.encode import encoded_writer
-
-            encoded_writer(df, "parquet", encode).mode("append").save(path)
+            df.write.option("compression", "zstd").mode("append").parquet(path)
         return commit
 
     def new_commit(self) -> str:
@@ -343,22 +420,17 @@ class SnapshotTable:
 
         Only ``column`` of the snapshot's data files is read, under an
         ``isin(values)`` filter, so memory is bounded by ``values``, not by
-        the table. The data files are each commit's ``*.parquet`` files
-        that are not hidden (``.``/``_``): Spark-written commits also hold
-        ``_SUCCESS`` and ``.crc`` files. Nothing is taken from the
-        manifest's ``commit_schemas``, so a table written before it existed
-        answers the same way."""
+        the table. Only the commits' data files (``_data_files``) are read.
+        Nothing is taken from the manifest's ``commit_schemas``, so a table
+        written before it existed answers the same way."""
         values = pc.unique(values.drop_null())
         snap = self.latest_snapshot()
         if snap is None or not len(values):
             return values[:0]
-        files = []
-        for commit in snap["data_dirs"]:
-            path = os.path.join(self.data_dir, commit)
-            files += [
-                os.path.join(path, f) for f in sorted(os.listdir(path))
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            ]
+        files = [
+            f for commit in snap["data_dirs"]
+            for f in _data_files(os.path.join(self.data_dir, commit))
+        ]
         found = ds.dataset(
             files, schema=pa.schema([(column, values.type)]), format="parquet"
         ).to_table(filter=ds.field(column).isin(values))
@@ -506,11 +578,8 @@ class SnapshotTable:
             os.unlink(path)
         deleted = []
         for d in sorted(doomed - live):
-            full = os.path.join(self.data_dir, d)
-            if os.path.isdir(full):
-                for f in os.listdir(full):
-                    os.unlink(os.path.join(full, f))
-                os.rmdir(full)
+            if os.path.isdir(os.path.join(self.data_dir, d)):
+                self.discard(d)
                 deleted.append(d)
         return deleted
 

@@ -2,7 +2,7 @@
 
 For each N, a fresh output table gets one commit of N synthetic urls,
 written the way the doc kernel's tasks write theirs (``DOC_SCHEMA`` in
-Arrow form, the kernel's parquet options). The synthetic urls share the
+Arrow form, through the table's ``write_part``). The synthetic urls share the
 fixture's host names (``https://host-<k>.example/s/<j>``), so no file's
 footer min/max can rule it out of a url lookup, and none is ever offered.
 Then ``run_extraction_job`` is called once per batch of a drain like
@@ -14,8 +14,9 @@ a warm-up; the median of the timed calls is printed per N.
     PYTHONPATH=. python scripts/resume_history_probe.py 0 100000 --calls 4
 
 One local[4] session serves every N, with a warm-up drain before the first.
-Peak memory is that of the session plus one batch of 250,000 synthetic
-rows; the tables go to a temporary directory that is removed at the end.
+Peak memory is that of the session plus one row group of synthetic rows
+(``write_part`` buffers up to 128 MB of Arrow data, here 750,000 rows);
+the tables go to a temporary directory that is removed at the end.
 """
 
 from __future__ import annotations
@@ -29,19 +30,19 @@ import tempfile
 import time
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.pandas.types import to_arrow_schema  # noqa: E402
 
 from py_image_toolkit_spark.fixtures import pages_df  # noqa: E402
-from py_image_toolkit_spark.operators.doc_kernel import (  # noqa: E402
-    _ARROW_SCHEMA, _PARQUET_OPTIONS, DOC_SCHEMA,
-)
+from py_image_toolkit_spark.operators.doc_kernel import DOC_SCHEMA  # noqa: E402
 from py_image_toolkit_spark.plans.job import run_extraction_job  # noqa: E402
 from py_image_toolkit_spark.session import build_session  # noqa: E402
-from py_image_toolkit_spark.sources.tables import SnapshotTable  # noqa: E402
+from py_image_toolkit_spark.sources.tables import SnapshotTable, write_part  # noqa: E402
+
+_ARROW_SCHEMA = to_arrow_schema(DOC_SCHEMA)
 
 BATCH = 500
 _ROWS_PER_WRITE = 250_000
@@ -70,11 +71,12 @@ def seed_history(table: SnapshotTable, n: int) -> None:
         return
     commit = table.new_commit()
     for f, start in enumerate(range(0, n, _ROWS_PER_FILE)):
-        path = os.path.join(table.data_dir, commit, f"part-{f:05d}.parquet")
-        with pq.ParquetWriter(path, _ARROW_SCHEMA, **_PARQUET_OPTIONS) as w:
-            stop = min(n, start + _ROWS_PER_FILE)
-            for lo in range(start, stop, _ROWS_PER_WRITE):
-                w.write_batch(_synthetic_batch(lo, min(stop, lo + _ROWS_PER_WRITE)))
+        stop = min(n, start + _ROWS_PER_FILE)
+        batches = (
+            _synthetic_batch(lo, min(stop, lo + _ROWS_PER_WRITE))
+            for lo in range(start, stop, _ROWS_PER_WRITE)
+        )
+        write_part(os.path.join(table.data_dir, commit), f, 0, batches, _ARROW_SCHEMA)
     table.publish(commit, DOC_SCHEMA, run_id="history")
 
 

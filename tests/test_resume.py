@@ -2,8 +2,11 @@
 run converge to exactly the uninterrupted run's table; crashed (uncommitted)
 data is invisible; each url lands exactly once per rule."""
 
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from py_image_toolkit_spark.config import ExtractConfig
@@ -124,7 +127,7 @@ def test_commit_dir_holds_only_the_lineage_files(spark, tmp_path):
     ``url`` and ``warc_ts``, the columns a commit may be pruned on."""
     import pyarrow.parquet as pq
 
-    from py_image_toolkit_spark.operators.doc_kernel import part_file
+    from py_image_toolkit_spark.sources.tables import part_file
 
     out, runs = _tables(tmp_path, "files")
     pages = pages_df(spark, 40)
@@ -154,7 +157,8 @@ def test_writing_task_rerun_leaves_one_identical_file(tmp_path):
     same bytes, and leaves no temp file behind."""
     import pyarrow as pa
 
-    from py_image_toolkit_spark.operators.doc_kernel import _write_part, part_file
+    from py_image_toolkit_spark.operators.doc_kernel import _write_part
+    from py_image_toolkit_spark.sources.tables import part_file
 
     batch = pa.RecordBatch.from_pydict({
         "url": ["https://a.io/1", "https://a.io/2"],
@@ -175,6 +179,120 @@ def test_writing_task_rerun_leaves_one_identical_file(tmp_path):
         assert row["partition_id"] == 3 and row["rows_out"] == rows
         assert row["docs_in"] == 2 and 0 < row["rows_ok"] < rows
         assert row["wall_us"] > 0
+
+
+def test_output_manifest_meta_has_no_null(spark, tmp_path):
+    """The output manifest's meta holds the run's id and counters, each
+    set: nothing is published before it is known."""
+    out, runs = _tables(tmp_path, "meta")
+    run_extraction_job(spark, pages_df(spark, 4), out, runs, CFG, run_id="r1")
+    meta = out.latest_snapshot()["meta"]
+    assert meta["run_id"] == "r1" and meta["rows_out"] == 8
+    assert None not in meta.values()
+
+
+def _data_file_metadata(table):
+    """The parquet metadata of each data file (non-hidden ``*.parquet``)
+    of ``table``'s last commit."""
+    d = os.path.join(table.data_dir, table.latest_snapshot()["data_dirs"][-1])
+    return [
+        pq.ParquetFile(os.path.join(d, f)).metadata
+        for f in sorted(os.listdir(d))
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+
+
+def _chunks(md):
+    """(column name, column chunk) for every chunk of every row group."""
+    return [
+        (md.schema.column(i).path, md.row_group(rg).column(i))
+        for rg in range(md.num_row_groups)
+        for i in range(md.num_columns)
+    ]
+
+
+def test_every_writer_writes_the_table_format(spark, tmp_path):
+    """The three writers of a snapshot table (a kernel task, the driver's
+    ``write`` of a ``pyarrow.Table``, Spark's ``append``) write zstd
+    parquet; the kernel's files carry footer min/max only for ``url`` and
+    ``warc_ts``, the driver's runs file none, and Spark's files keep its
+    dictionary encoding. ``committed`` and ``publish(stats_cols=...)`` read
+    the same data files: a hidden file left by a failed attempt is neither
+    looked up nor counted in the commit's stats."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    out, runs = _tables(tmp_path, "format")
+    pages = pages_df(spark, 8)
+    run_extraction_job(spark, pages, out, runs, CFG, run_id="r1")
+    appended = SnapshotTable(str(tmp_path / "appended"))
+    appended.append(
+        pages.select("url", F.lit("en").alias("lang")).coalesce(1), run_id="s1"
+    )
+
+    files = {t: _data_file_metadata(t) for t in (out, runs, appended)}
+    assert all(files.values())
+    for md in sum(files.values(), []):
+        assert {c.compression for _, c in _chunks(md)} == {"ZSTD"}
+    for md in files[out]:
+        for name, c in _chunks(md):
+            assert c.is_stats_set == (name in ("url", "warc_ts"))
+    for md in files[runs]:
+        assert not any(c.is_stats_set for _, c in _chunks(md))
+    for md in files[appended]:  # Spark's dictionary encoding is kept
+        assert all("DICTIONARY" in " ".join(c.encodings)
+                   for name, c in _chunks(md) if name == "lang")
+
+    from py_image_toolkit_spark.sources.tables import write_part
+
+    table = SnapshotTable(str(tmp_path / "hidden"))
+    commit = table.new_commit()
+    path = os.path.join(table.data_dir, commit)
+    schema = pa.schema([("url", pa.string())])
+    for pid, url in ((0, "https://b.example/1"), (1, "https://z.example/9")):
+        write_part(path, pid, 7, [pa.record_batch([pa.array([url])], schema=schema)], schema)
+    os.rename(os.path.join(path, "part-00001.parquet"),
+              os.path.join(path, ".part-00001.parquet.7"))
+    table.publish(commit, from_arrow_schema(schema), stats_cols=("url",))
+    stats = table.latest_snapshot()["commit_stats"][commit]["url"]
+    assert stats == ["https://b.example/1", "https://b.example/1"]
+    ask = pa.array(["https://b.example/1", "https://z.example/9"])
+    assert table.committed(ask).to_pylist() == ["https://b.example/1"]
+
+
+def test_snapshot_append_writes_zstd(spark, tmp_path):
+    tbl = SnapshotTable(str(tmp_path / "snap"))
+    tbl.append(spark.range(10).withColumnRenamed("id", "v"), run_id="r1")
+    for meta in _data_file_metadata(tbl):
+        assert meta.row_group(0).column(0).compression == "ZSTD"
+
+
+def test_manifest_commit_is_race_safe(spark, tmp_path):
+    """If a concurrent writer claims the same snapshot id, append retries with
+    the next id and no committed data directory is lost from the lineage."""
+    tbl = SnapshotTable(str(tmp_path / "race"))
+    tbl.append(spark.range(5).withColumnRenamed("id", "v"), run_id="r1")
+
+    # simulate the racer: pre-claim manifest-2 with its own commit dir
+    # (carrying snapshot 1's lineage forward, as a real writer would)
+    os.makedirs(os.path.join(tbl.data_dir, "commit-racer"), exist_ok=True)
+    racer = {
+        "snapshot_id": 2,
+        "data_dirs": tbl.latest_snapshot()["data_dirs"] + ["commit-racer"],
+        "run_id": "racer",
+        "committed_at": 0,
+        "schema": {},
+        "meta": {},
+    }
+    with open(os.path.join(tbl.snap_dir, "manifest-2.json"), "w") as fh:
+        json.dump(racer, fh)
+
+    sid = tbl.append(spark.range(5).withColumnRenamed("id", "v"), run_id="r2")
+    assert sid == 3
+    lineage = tbl.latest_snapshot()["data_dirs"]
+    assert "commit-racer" in lineage and len(lineage) == 3  # nothing lost:
+    # snapshot-1's dir, the racer's dir, and r2's dir all survive
+    # no orphan tmp files left behind
+    assert not [f for f in os.listdir(tbl.snap_dir) if f.endswith(".tmp")]
 
 
 def test_snapshot_diff_incremental_read(spark, tmp_path):
