@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
 
+from py_image_toolkit_spark.session import arrow_task
+
 PAGES_SCHEMA = StructType(
     [
         StructField("url", StringType(), True),
@@ -203,4 +205,6 @@ def pages_df(spark: SparkSession, n: int, seed: int = 42, partitions: int | None
                 schema=_ARROW_SCHEMA,
             )
 
-    return spark.range(0, n, numPartitions=parts).mapInArrow(gen, PAGES_SCHEMA)
+    return spark.range(0, n, numPartitions=parts).mapInArrow(
+        arrow_task(gen), PAGES_SCHEMA
+    )

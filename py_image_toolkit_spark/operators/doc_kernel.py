@@ -42,14 +42,13 @@ undecodable/empty/degenerate inputs; a poisoned row can never fail the task.
 Worker set-up is paid once per worker, not once per task (≙ the reference's
 init-once-per-process, crop.py:613-615): every task ends by dropping the
 worker's cached zip finders, so the next task's ``invalidate_caches`` has
-no archive to re-read (``_drop_zip_finders``).
+no archive to re-read (``session.arrow_task``, which every engine
+``mapInArrow`` stage uses).
 """
 
 from __future__ import annotations
 
-import sys
 import time
-import zipimport
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -66,6 +65,7 @@ from pyspark.sql.types import (
 from py_image_toolkit_spark.config import ExtractConfig
 from py_image_toolkit_spark.functions import vocab as V
 from py_image_toolkit_spark.oracle.extractor import extract_document
+from py_image_toolkit_spark.session import arrow_task
 from py_image_toolkit_spark.sources.tables import write_part
 
 SPAN_STRUCT = StructType(
@@ -119,24 +119,6 @@ LINEAGE_SCHEMA = StructType(
 )
 _LINEAGE_ARROW_SCHEMA = to_arrow_schema(LINEAGE_SCHEMA)
 
-def _drop_zip_finders() -> None:
-    """Evict every cached ``zipimporter`` and its archive's directory.
-
-    Before every task, pyspark's worker calls ``importlib.invalidate_caches()``;
-    on CPython 3.11 that makes each cached zipimporter re-read its whole
-    archive directory at once. A reused worker caches one per package of
-    ``pyspark.zip`` (1,328 entries), of py4j's zip and of the spark-core jar
-    (5,359 entries): 16 finders, 126-266 ms per task with four concurrent
-    tasks on a 4-core host, more than a small task's parse. Dropped here,
-    the next task's invalidation finds nothing to re-read (0.02-0.07 ms),
-    and an import that walks an archive later builds its finder from a
-    fresh read: the same invalidation, done lazily. Loaders of
-    already-imported modules keep their own directory and are untouched."""
-    for path, finder in list(sys.path_importer_cache.items()):
-        if isinstance(finder, zipimport.zipimporter):
-            del sys.path_importer_cache[path]
-            zipimport._zip_directory_cache.pop(finder.archive, None)
-
 
 def _doc_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
     """The extraction records of one input batch, in ``DOC_SCHEMA``'s
@@ -181,9 +163,8 @@ def _make_doc_kernel(cfg: ExtractConfig):
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             yield _doc_batch(batch, cfg)
-        _drop_zip_finders()
 
-    return run
+    return arrow_task(run)
 
 
 def _new_docs(batch: pa.RecordBatch, replayed: pa.Array | None) -> pa.RecordBatch:
@@ -232,7 +213,6 @@ def _write_part(
               "rows_ok": ok, "wall_us": wall_us}],
             schema=_LINEAGE_ARROW_SCHEMA,
         )
-    _drop_zip_finders()
 
 
 def _make_doc_writer(
@@ -248,7 +228,7 @@ def _make_doc_writer(
             replayed,
         )
 
-    return run
+    return arrow_task(run)
 
 
 def _kernel_input(pages: DataFrame) -> DataFrame:

@@ -346,6 +346,7 @@ def extract_fields_from_tokens_kernel(
     from pyspark.sql.types import StringType, StructField, StructType
 
     from py_image_toolkit_spark.oracle.labeling import extract_fields
+    from py_image_toolkit_spark.session import arrow_task
 
     key_fields = [tokens.schema[k] for k in keys]
     out_schema = StructType(
@@ -379,4 +380,4 @@ def extract_fields_from_tokens_kernel(
                 schema=arrow_schema,
             )
 
-    return grouped.mapInArrow(run, out_schema)
+    return grouped.mapInArrow(arrow_task(run), out_schema)

@@ -30,7 +30,7 @@ same on every call: scan → [balance] → mapInArrow, with no join.
   the CPU-bound parse runs as one wave of one task per core
 - each kernel task ends by dropping the Python worker's cached zip
   finders, so a reused worker's next task does not re-read pyspark's
-  archives (``doc_kernel._drop_zip_finders``)
+  archives (``session.arrow_task``)
 - a resume with nothing left to do (every offered url committed, or an
   empty input) runs only the url collect: no kernel job, no html read, no
   commit dir, no snapshot. Any other run whose kernel output is empty

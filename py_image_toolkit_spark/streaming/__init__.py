@@ -9,8 +9,12 @@ batch**: snapshot resume skip (plans/job.py) + snapshot ``diff`` reads
 For feed-like inputs this module adds the thin Structured Streaming wrapper:
 ``Trigger.AvailableNow`` over a parquet/file source, with each micro-batch
 routed through the same resumable job (``foreachBatch`` → snapshot commit).
-Exactly-once lands on the same url-level idempotence the batch path has —
-a replayed micro-batch is absorbed by the resume skip.
+A replayed micro-batch is absorbed by the job's url-level resume skip, on
+two conditions: the batch holds one capture per url, and one writer commits
+to the table at a time. Nothing enforces either. A batch that holds a url
+twice commits both captures, and two concurrent calls over the same urls
+both commit them. Keeping one row per (url, rule) under duplicate inputs
+and concurrent writers is ROADMAP.md item 1.
 """
 
 from py_image_toolkit_spark.streaming.incremental import run_available_now

@@ -7,6 +7,7 @@ import zipimport
 import zlib
 
 import pyarrow as pa
+import pytest
 
 from py_image_toolkit_spark.kernels.normalize import decode_html, strip_noncontent
 from py_image_toolkit_spark.kernels.segment import (
@@ -249,13 +250,12 @@ def test_pdf_scanners_match_their_regex_forms():
         assert _PAREN_RE.findall(s) == [m.group(0) for m in paren.finditer(s)], s
 
 
-def test_doc_kernel_task_drops_zip_finders(tmp_path):
-    """A doc-kernel task ends with no cached zip finder and no cached
-    archive directory, so the next task's ``importlib.invalidate_caches()``
-    re-reads no archive; a module in the evicted zip still imports."""
-    from py_image_toolkit_spark.config import ExtractConfig
-    from py_image_toolkit_spark.operators.doc_kernel import _make_doc_kernel
-
+def _run_dropping_zip_finders(tmp_path, task, batch):
+    """Run ``task`` (a ``mapInArrow`` function) over ``batch`` with one
+    cached zip finder, and check that the task ends with no cached zip
+    finder and no cached archive directory, so the next task's
+    ``importlib.invalidate_caches()`` re-reads no archive; a module in the
+    evicted zip still imports. Returns the task's output batches."""
     archive = str(tmp_path / "lib.zip")
     with zipfile.ZipFile(archive, "w") as z:
         z.writestr("zipped_one_liner.py", "VALUE = 7\n")
@@ -263,19 +263,109 @@ def test_doc_kernel_task_drops_zip_finders(tmp_path):
     try:
         sys.path_importer_cache[archive] = zipimport.zipimporter(archive)
         assert archive in zipimport._zip_directory_cache
-        batch = pa.RecordBatch.from_pydict({
-            "url": ["https://a.io/1"],
-            "warc_ts": pa.array([None], pa.timestamp("us", tz="UTC")),
-            "lang": ["en"],
-            "html": [b"<html><body><p>hello there</p></body></html>"],
-        })
-        out = list(_make_doc_kernel(ExtractConfig())(iter([batch])))
-        assert sum(b.num_rows for b in out) == len(ExtractConfig().rules)
+        out = list(task(iter([batch])))
         assert archive not in sys.path_importer_cache
         assert archive not in zipimport._zip_directory_cache
         assert importlib.import_module("zipped_one_liner").VALUE == 7
+        return out
     finally:
         sys.path.remove(archive)
         sys.path_importer_cache.pop(archive, None)
         zipimport._zip_directory_cache.pop(archive, None)
         sys.modules.pop("zipped_one_liner", None)
+
+
+def _doc_batch_in():
+    return pa.RecordBatch.from_pydict({
+        "url": ["https://a.io/1"],
+        "warc_ts": pa.array([None], pa.timestamp("us", tz="UTC")),
+        "lang": ["en"],
+        "html": [b"<html><body><p>hello there</p></body></html>"],
+    })
+
+
+def test_doc_kernel_task_drops_zip_finders(tmp_path):
+    """A doc-kernel task drops the worker's zip finders when it ends."""
+    from py_image_toolkit_spark.config import ExtractConfig
+    from py_image_toolkit_spark.operators.doc_kernel import _make_doc_kernel
+
+    out = _run_dropping_zip_finders(
+        tmp_path, _make_doc_kernel(ExtractConfig()), _doc_batch_in()
+    )
+    assert sum(b.num_rows for b in out) == len(ExtractConfig().rules)
+
+
+class _Task:
+    """``TaskContext.get()`` outside a Spark task."""
+
+    @staticmethod
+    def get():
+        return _Task()
+
+    def partitionId(self):
+        return 0
+
+    def taskAttemptId(self):
+        return 0
+
+
+def _pages_stage(spark, tmp_path, monkeypatch):
+    from py_image_toolkit_spark.fixtures import pages_df
+
+    batch = pa.RecordBatch.from_pydict({"id": pa.array([0], pa.int64())})
+    return lambda: pages_df(spark, 1, partitions=1), batch
+
+
+def _warc_stage(spark, tmp_path, monkeypatch):
+    from py_image_toolkit_spark.sources.warc import warc_records
+
+    blobs = spark.createDataFrame([], "blob_id long, data binary")
+    blob = b"WARC/1.0\r\nContent-Length: 99\r\n\r\nshort"  # a parse-error row
+    batch = pa.RecordBatch.from_pydict({"blob_id": [1], "data": [blob]})
+    return lambda: warc_records(blobs), batch
+
+
+def _q17_stage(spark, tmp_path, monkeypatch):
+    from py_image_toolkit_spark.operators.extract_fields import (
+        extract_fields_from_tokens_kernel,
+    )
+
+    tokens = spark.createDataFrame([], "doc_id long, seq int, token string")
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": pa.array([1], pa.int64()), "_toks": [["name", "kim"]]}
+    )
+    return lambda: extract_fields_from_tokens_kernel(tokens), batch
+
+
+def _doc_write_stage(spark, tmp_path, monkeypatch):
+    from py_image_toolkit_spark.operators import doc_kernel
+
+    monkeypatch.setattr(doc_kernel, "TaskContext", _Task)
+    pages = spark.createDataFrame(
+        [], "url string, warc_ts timestamp, lang string, html binary"
+    )
+    commit_dir = tmp_path / "commit"
+    commit_dir.mkdir()
+    return lambda: doc_kernel.doc_write_df(pages, str(commit_dir)), _doc_batch_in()
+
+
+@pytest.mark.parametrize(
+    "stage",
+    [_pages_stage, _warc_stage, _q17_stage, _doc_write_stage],
+    ids=["pages_df", "warc_records", "q17_token_kernel", "doc_write_df"],
+)
+def test_arrow_stage_task_drops_zip_finders(spark, tmp_path, monkeypatch, stage):
+    """Every engine ``mapInArrow`` stage, not only the doc kernel's record
+    sink, hands Spark a task function that drops the worker's zip finders
+    when it ends. The function is captured from ``mapInArrow`` and run here
+    on one batch of the stage's input."""
+    build, batch = stage(spark, tmp_path, monkeypatch)
+    captured = []
+    monkeypatch.setattr(
+        type(spark.range(0)), "mapInArrow",
+        lambda self, fn, schema, *a, **kw: captured.append(fn),
+    )
+    build()
+    (task,) = captured
+    out = _run_dropping_zip_finders(tmp_path, task, batch)
+    assert sum(b.num_rows for b in out) >= 1

@@ -1,10 +1,29 @@
 """Unit tests for the WARC source (sources/warc.py)."""
 
-from py_image_toolkit_spark.sources.warc import (
-    build_warc,
-    http_response,
-    warc_records,
-)
+from py_image_toolkit_spark.sources.warc import warc_records
+
+
+def build_warc(records: list[tuple[str, str, str, bytes]]) -> bytes:
+    """Serialize (warc_type, url, date, payload) tuples into WARC bytes:
+    the inverse of ``warc_records``."""
+    out = bytearray()
+    for warc_type, url, date, payload in records:
+        hdr = (
+            f"WARC/1.0\r\nWARC-Type: {warc_type}\r\n"
+            f"WARC-Target-URI: {url}\r\nWARC-Date: {date}\r\n"
+            f"Content-Type: application/http; msgtype=response\r\n"
+            f"Content-Length: {len(payload)}\r\n"
+        ).encode()
+        out += hdr + b"\r\n" + payload + b"\r\n\r\n"
+    return bytes(out)
+
+
+def http_response(body: bytes, status: int = 200) -> bytes:
+    """Wrap a body in a minimal HTTP response message."""
+    return (
+        f"HTTP/1.1 {status} OK\r\nContent-Type: text/html\r\n"
+        f"Content-Length: {len(body)}\r\n"
+    ).encode() + b"\r\n" + body
 
 
 def _blob_df(spark, rows):
